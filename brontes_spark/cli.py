@@ -274,18 +274,10 @@ def cmd_db_clear(args: argparse.Namespace) -> int:
 
 
 def _all_queries() -> dict:
-    """Registry gates plus round-staged pending gates, by name. A name
-    collision would silently run the staged builder under the registered
-    gate's identity — fail loudly instead."""
+    """Every registry gate's plan builder, by name."""
     from .plans import REGISTRY
-    from .plans.pending import PENDING
 
-    overlap = REGISTRY.keys() & PENDING.keys()
-    if overlap:
-        raise RuntimeError(f"staged gates shadow registry entries: {sorted(overlap)}")
-    out = {n: s.build for n, s in REGISTRY.items()}
-    out.update({n: s.build for n, s in PENDING.items()})
-    return out
+    return {n: s.build for n, s in REGISTRY.items()}
 
 
 def cmd_corpus_list(args: argparse.Namespace) -> int:
@@ -296,7 +288,7 @@ def cmd_corpus_list(args: argparse.Namespace) -> int:
 
 
 def cmd_corpus_run(args: argparse.Namespace) -> int:
-    """corpus run: execute any registry/staged query over an sf dir —
+    """corpus run: execute any registry query over an sf dir —
     the LLM-data-pipeline face of the CLI (dedup, sketches, sampling,
     quality scoring, ANN, gap fill ... all the `queries()` surface)."""
     qs = _all_queries()
@@ -398,7 +390,7 @@ def build_parser() -> argparse.ArgumentParser:
     cl.set_defaults(fn=cmd_db_clear)
 
     corpus = sub.add_parser(
-        "corpus", help="run any registry/staged query over an sf dir"
+        "corpus", help="run any registry query over an sf dir"
     )
     csub = corpus.add_subparsers(dest="corpuscmd", required=True)
     cls_ = csub.add_parser("list")

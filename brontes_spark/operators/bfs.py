@@ -174,7 +174,7 @@ def sssp_bellman_ford(
     ever added), so once it exceeds the threshold the loop permanently
     reverts to the r11 shuffled-join + cadence-cut form — broadcasting a
     corpus-sized dist would OOM every executor (§3.1 caveat). Interleaved
-    same-session A/B at the g13 gate (scripts/ab_r12.py sssp): cadence
+    same-session A/B at the g13 gate: cadence
     mins 4.32/4.11/4.14/4.46 s vs broadcast 3.18/3.21/3.17/3.40 s.
     """
     if rounds < 0:

@@ -194,7 +194,7 @@ def minhash_lsh_pairs(
     invocation paid the corpus pass twice. The cut computes the pipeline
     once; both join sides read the checkpointed blocks. A bucket-grouped
     formulation (groupBy + collect_list + nested explode) was A/B'd and
-    lost to this at both 8 and 32 cores (scripts/ab_r12.py fuzzy3).
+    lost to this at both 8 and 32 cores.
     localCheckpoint caveat: executor-local blocks, not fault-tolerant —
     same single-node/grading assumption as the graph operators (bfs.py)."""
     banded = _lsh_band_signatures(

@@ -175,7 +175,7 @@ def ppr_integer(
     # r11 persist()-both choice was the round's one driver-measured
     # regression (0.85x) and the interleaved same-session A/B is decisive
     # — persist mins 2.82/2.44/2.14/2.40 s vs plain 1.78/1.49/1.39/1.46 s
-    # (scripts/ab_r12.py ppr). At the 3-round gate geometry ReuseExchange
+    # (g14 gate, 3 rounds). At the 3-round gate geometry ReuseExchange
     # dedups the recurrence's repeated subtrees at runtime, so the
     # InMemoryRelation's columnar (de)serialization per read is pure
     # overhead — the same mechanism that made edges.persist() lose in

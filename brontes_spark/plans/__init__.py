@@ -5,6 +5,7 @@ from . import (  # noqa: F401  (registration side effects)
     corpus,
     llm_data,
     mev_fixture,
+    ml_eval,
     multimodal_fixture,
     relational,
     timeseries,

@@ -154,49 +154,35 @@ def raw_trace_rows() -> list[dict]:
     return rows
 
 
-_memo: dict[int, DataFrame] = {}
-
-
 def classified_fixture_actions(spark: SparkSession) -> DataFrame:
-    """Raw rows -> decode_traces (C2 landing mapInPandas) -> classify_traces,
-    memoized per session under a low-parallelism conf (KB-scale fixture:
-    32-task shuffle stages would be pure scheduler overhead)."""
+    """Raw rows -> decode_traces (C2 landing mapInPandas) -> classify_traces.
+    A plain lazy plan with no session memo and no cache. The runtime confs
+    are applied first, as every testdata loader does, so the physical plan
+    never depends on what ran earlier in the session."""
     from ..classify import classify_traces
+    from ..session import apply_runtime_confs
     from ..sources.abi_decode import decode_traces
 
-    key = id(spark)
-    if key not in _memo:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            traces = decode_traces(
-                spark.createDataFrame(raw_trace_rows(), _TRACE_DDL)
-            )
-            a2p = spark.createDataFrame(
-                [(V2, "UniswapV2"), (V3, "UniswapV3"), (CRV, "CurveBasePool2"),
-                 (AAVE, "AaveV3"), (FACT, "UniswapV2")],
-                "address string, protocol string",
-            )
-            coins = spark.createDataFrame(
-                [(V2, 0, DAI), (V2, 1, WETH), (V3, 0, DAI), (V3, 1, WETH),
-                 (CRV, 0, DAI), (CRV, 1, USDC)],
-                "pool string, idx int, token string",
-            )
-            tok = spark.createDataFrame(
-                [(DAI, 18), (USDC, 6), (WETH, 18), (TAX, 18)],
-                "address string, decimals int",
-            )
-            binfo = spark.createDataFrame(
-                [(900, BUILDER)], "block_number long, beneficiary string"
-            )
-            acts = classify_traces(
-                traces, a2p, tok, binfo, pool_coins=coins
-            ).cache()
-            acts.count()  # materialize under the low-parallelism conf
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _memo[key] = acts
-    return _memo[key]
+    apply_runtime_confs(spark)
+    traces = decode_traces(spark.createDataFrame(raw_trace_rows(), _TRACE_DDL))
+    a2p = spark.createDataFrame(
+        [(V2, "UniswapV2"), (V3, "UniswapV3"), (CRV, "CurveBasePool2"),
+         (AAVE, "AaveV3"), (FACT, "UniswapV2")],
+        "address string, protocol string",
+    )
+    coins = spark.createDataFrame(
+        [(V2, 0, DAI), (V2, 1, WETH), (V3, 0, DAI), (V3, 1, WETH),
+         (CRV, 0, DAI), (CRV, 1, USDC)],
+        "pool string, idx int, token string",
+    )
+    tok = spark.createDataFrame(
+        [(DAI, 18), (USDC, 6), (WETH, 18), (TAX, 18)],
+        "address string, decimals int",
+    )
+    binfo = spark.createDataFrame(
+        [(900, BUILDER)], "block_number long, beneficiary string"
+    )
+    return classify_traces(traces, a2p, tok, binfo, pool_coins=coins)
 
 
 def _golden_values() -> str:

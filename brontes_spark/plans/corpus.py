@@ -1,5 +1,4 @@
-"""LLM-corpus gates, batch 2 (promoted from plans/pending.py at round-8
-start per the r7 playbook): substring-level exact dedup (flag / stats /
+"""LLM-corpus gates, batch 2: substring-level exact dedup (flag / stats /
 trim), Bloom decontamination, count-min / KMV / heavy-hitter / quantile /
 histogram sketches, weighted sampling, bigram-LM coverage, URL
 normalization + per-domain caps, edit-distance fuzzy dedup, Unicode NFC,

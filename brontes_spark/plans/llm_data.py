@@ -1,5 +1,5 @@
 """LLM-training-data pipeline queries over `documents` / `embeddings` —
-the scale-path operators a 100 TB corpus needs (BASELINE.json north star),
+the scale-path operators a 100 TB corpus needs,
 built as first-class registry entries alongside the SURVEY.md §2 inventory:
 
   dedup_exact          — hash-groupBy exact dedup
@@ -1094,9 +1094,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the oracle on any >=5k-vector input and fail the gate spuriously
     # (round-6 review finding). The planes-vs-corpus dial itself stays a
     # first-class, MEASURED operator knob — cosine_dup_pairs(planes=...) +
-    # planes_for(), with the 10x slope evidence in SCALE.md and
-    # scripts/scale_slope.py's fixed-vs-scaled rows — it just is not wired
-    # to this fixed-configuration correctness gate.
+    # planes_for(), with the 10x slope evidence in SCALE.md — it just is
+    # not wired to this fixed-configuration correctness gate.
     return cosine_dup_pairs(
         emb, "vec_id", "embedding", threshold=0.3, planes=8
     )

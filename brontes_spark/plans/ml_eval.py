@@ -1,46 +1,18 @@
-"""Staging area for gate specs built mid-round when the 50-slot driver
-window has no headroom.
-
-The driver verifies the FIRST 50 ordered registry entries per round, and a
-brand-new gate (no driver history) sorts risk-first — so registering a new
-gate can eject a stale re-attestation from the window and break the
-rotation contract. When that would happen, stage the spec here with the
-SAME (builder, oracle, survey_ref) shape as registry entries: it is
-verified by the SAME sf0.01 DuckDB-parity harness
-(tests/test_pending_parity.py) and runnable through the CLI, and the next
-round promotes it (the r10→r11 move: git-mv this file to plans/waveN.py
-and swap ``@pending`` for ``@register``).
-
-Round-11 status: the 12-gate tier staged here during round 10 was
-promoted at r11 start (plans/wave11.py); the r11 driver window seats
-exactly those 12 (staleness -1) plus the 38 stalest data-backed
-re-attestations — scripts/simulate_r11.py derives the seating from the
-real on-disk CORRECTNESS history and
-tests/test_plans.py::test_r11_window_seating pins it hermetically. The
-specs below are the r12 tier: the round-11 operator additions.
+"""Ranking and classifier evaluation gates (precision-recall AUC, the
+classification-report averages, NDCG@k, McNemar's paired test), the
+class-balanced evaluation sample and weighted percentiles. Each gate pairs
+its plan builder with a DuckDB oracle like every other registry module.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import EV_CTE, QuerySpec
-
-PENDING: dict[str, QuerySpec] = {}
+from .registry import EV_CTE, register
 
 
-def pending(name: str, oracle: str | None, survey_ref: str):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        PENDING[name] = QuerySpec(name=name, build=fn, oracle=oracle, survey_ref=survey_ref)
-        return fn
-
-    return deco
-
-
-@pending(
+@register(
     "ml_pr_auc",
     # the ml_auc posture on the precision-recall side: walk the
     # distinct-score histogram in DESCENDING score order, quantize each
@@ -89,7 +61,7 @@ def pending(name: str, oracle: str | None, survey_ref: str):
     "integers over the descending score-domain walk, order-independent "
     "sum, one fixed-shape IEEE chain; same scale shape as ml_auc (one "
     "hash agg to the score histogram + one domain window + 1-row "
-    "reduce); staged for the r12 tier (VERDICT r10 directive 7c)",
+    "reduce)",
 )
 def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ml_eval import pr_auc
@@ -102,7 +74,7 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr_auc(ev, "pos", "cents")
 
 
-@pending(
+@register(
     "ml_report_avg",
     # the ml_confusion cell relation rolled up three ways; per-class
     # quantized ratios (zero-division -> 0) recomputed in SQL, then
@@ -168,8 +140,8 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     """,
     survey_ref="micro/macro/weighted classification-report averages "
-    "(operators/ml_eval.classification_report_averages, VERDICT r10 "
-    "directive 7a) — the three standard multi-class rollups as pure "
+    "(operators/ml_eval.classification_report_averages) — "
+    "the three standard multi-class rollups as pure "
     "column math over ml_confusion's cell relation: micro = pooled "
     "counts (== accuracy on single-label input), macro = unweighted "
     "mean of the 1e9-quantized per-class ratios with zero-division "
@@ -177,7 +149,7 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "class must drag the macro down), weighted = support-weighted same; "
     "the gate's props-hash classifier leaves 'error' never predicted, "
     "so macro < micro is structural; one extra 1-row aggregate over the "
-    "|classes|^2 relation; staged for the r12 tier",
+    "|classes|^2 relation",
 )
 def ml_report_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ml_eval import classification_report_averages
@@ -251,7 +223,7 @@ def _ndcg_oracle(k: int) -> str:
     """
 
 
-@pending(
+@register(
     "ml_ndcg",
     oracle=_ndcg_oracle(k=5),
     survey_ref="binary-relevance NDCG@5 (operators/ranking_eval.ndcg_at_k) "
@@ -265,8 +237,7 @@ def _ndcg_oracle(k: int) -> str:
     "n_scored), the stated convention vs MRR's contribute-0; per-user "
     "active days ranked by (count DESC, day ASC), relevant = day saw a "
     "purchase, so n_rel spans 0..many and the idcg clip is load-bearing; "
-    "one per-query conditional aggregate + 1-row reduce; staged for the "
-    "r12 tier",
+    "one per-query conditional aggregate + 1-row reduce",
 )
 def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -293,7 +264,7 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ndcg_at_k(ranked, "q", "rnk", "rel", k=5)
 
 
-@pending(
+@register(
     "sample_class_balanced",
     # items = (event_type, user) with weight = interaction count; the
     # A-ES per-stratum draw in SQL: unnest(range) explode, md5 keys with
@@ -319,8 +290,8 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cls, id, key, CAST(rk AS BIGINT) AS rk FROM rk WHERE rk <= 4
     """,
     survey_ref="per-class balanced weighted sampling "
-    "(operators/sampling.balanced_weighted_sample, VERDICT r10 directive "
-    "7b) — the A-ES draw generalized to one independent draw per "
+    "(operators/sampling.balanced_weighted_sample) — "
+    "the A-ES draw generalized to one independent draw per "
     "stratum: exactly min(4, class size) users per event_type, weighted "
     "by interaction count, without replacement; the ranking key is a "
     "pure function of (salt, class, id, draw index) so growing one "
@@ -328,7 +299,7 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "itself a valid smaller sample (nesting property, pinned in "
     "tests/test_sampling.py); draw rows fold map-side before the one "
     "data-sized shuffle, the per-class top-n compiles to "
-    "WindowGroupLimit; staged for the r12 tier",
+    "WindowGroupLimit",
 )
 def sample_class_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import balanced_weighted_sample
@@ -341,7 +312,7 @@ def sample_class_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     return balanced_weighted_sample(items, "cls", "id", "wt", n_per_class=4)
 
 
-@pending(
+@register(
     "ml_mcnemar",
     # two deterministic props-hash "classifiers" over the same rows: A is
     # the ml_confusion mapping, B a shifted mapping, so the discordant
@@ -386,7 +357,7 @@ def sample_class_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     "correction (stated; the corrected variant derives from the shipped "
     "integer cells), NULL when the classifiers never disagree; the "
     "paired complement to o27's unpaired two-proportion z; ONE "
-    "map-side-combinable aggregate; staged for the r12 tier",
+    "map-side-combinable aggregate",
 )
 def ml_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ml_eval import mcnemar_test
@@ -408,7 +379,7 @@ def ml_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mcnemar_test(ev, "y", "pa", "pb")
 
 
-@pending(
+@register(
     "o30_weighted_percentiles",
     # weighted percentile_disc per event_type: value = exact cents,
     # weight = 1 + (props.k % 10); the defining inequality is evaluated
@@ -458,8 +429,7 @@ def ml_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the inequality runs in decimal(38) integers — no division, no "
     "floats — so both engines pick identical values; one hash aggregate "
     "to the (group, value) weight histogram + one per-group domain "
-    "window + a |qs|-way conditional min riding the same exchange; "
-    "staged for the r12 tier",
+    "window + a |qs|-way conditional min riding the same exchange",
 )
 def o30_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import weighted_percentiles_by_group

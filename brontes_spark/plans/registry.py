@@ -32,445 +32,17 @@ def register(name: str, oracle: str | None, survey_ref: str):
     return deco
 
 
-#: The driver verifies only the FIRST 50 registry entries per round, so ordering
-#: is part of the correctness contract. Risk-first: gates that have never had a
-#: driver row (g4/g5/x5/x6), gates whose last driver word was FAIL, and gates
-#: whose implementation changed this round come first; gates with a green prior
-#: round row and an unchanged implementation rotate to the tail (they stay
-#: covered by the local sf0.01 oracle-parity suite, tests/test_oracle_parity.py).
-DRIVER_ORDER: list[str] = [
-    # r11 promotion (the 12 gates staged in plans/pending.py during round
-    # 10, registered at r11 start via plans/wave11.py): no driver history ->
-    # staleness -1 -> they lead the r11 window; the remaining 38 slots seat
-    # the stalest data-backed re-attestations under the now-active LOW_FREQ
-    # policy — derived from the real CORRECTNESS_r01..r10 history by
-    # scripts/simulate_r11.py and pinned hermetically in
-    # tests/test_plans.py::test_r11_window_seating.
-    "g15_mst",
-    "x30_kendall_tau",
-    "o28_chi2_independence",
-    "g16_linkpred",
-    "ev_item_cooccur",
-    "ml_mrr_eval",
-    "o29_concentration",
-    "g17_ktruss",
-    "ml_auc",
-    "ml_confusion",
-    "ml_kappa",
-    "ml_calibration",
-    # r10 promotion (the 43 gates staged in plans/pending.py through rounds
-    # 8-9, registered at r10 start via plans/wave10.py): no driver history ->
-    # staleness -1 -> they lead the r10 window; the remaining 7 slots seat
-    # the stalest r7-attested re-attestations (mm_mp2_features, the five
-    # mev_* composer gates, x2_most_liquid_quote) — derived from the real
-    # CORRECTNESS_r01..r09 history by scripts/simulate_r10.py and pinned
-    # hermetically in tests/test_plans.py::test_r10_window_seating.
-    "g10_label_prop",
-    "o12_rrf_fusion",
-    "x20_pearson_corr",
-    "x21_rolling_distinct",
-    "g11_hits",
-    "o13_table_diff",
-    "x22_winsorize",
-    "o14_dq_checks",
-    "x23_cusum",
-    "g12_bfs_hops",
-    "txt_chi2_features",
-    "o15_k_anonymity",
-    "o16_benford",
-    "txt_nb_train",
-    "x24_rfm_segments",
-    "x25_autocorr",
-    "o17_compaction_plan",
-    "o18_assoc_rules",
-    "o19_pareto",
-    "g13_sssp_weighted",
-    "o20_skew_profile",
-    "txt_readability",
-    "g14_ppr",
-    "o21_corr_matrix",
-    "o22_mann_whitney",
-    "o23_ks_test",
-    "o24_spearman",
-    "ev_json_extract",
-    "x26_seasonality",
-    "x27_quantile_normalize",
-    "ml_fold_assign",
-    "i5_sandwich_pnl",
-    "i12_liquidation_bundles",
-    "i10_jit_bundles",
-    "i8_cex_dex_markout",
-    "i9_cex_dex_quotes",
-    "i13_searcher_activity",
-    "o2_jit_sandwich_compose",
-    "o25_welch_ttest",
-    "o26_anova_oneway",
-    "x28_pit_join",
-    "x29_theil_sen",
-    "o27_two_proportion_z",
-    # r9 promotion (the 29 r9-tier gates staged in r8's plans/pending.py,
-    # registered at r9 start via plans/wave9.py): no driver history ->
-    # staleness -1 -> they lead the r9 window; the remaining 21 slots seat
-    # exactly the 21 r6-deferred re-attestations (the window is exactly
-    # full — simulated in tests/test_plans.py's seating check).
-    "dedup_fuzzy_lsh_verified",
-    "txt_url_psl_domain",
-    "txt_bm25_topk",
-    "sketch_hll_distinct",
-    "x16_interval_join",
-    "emb_gram_matrix",
-    "txt_script_profile",
-    "dedup_jaccard_join_exact",
-    "sketch_kmv_containment",
-    "g7_pagerank",
-    "o8_zorder_index",
-    "o9_table_profile",
-    "txt_gopher_rules",
-    "x17_salted_join",
-    "sketch_percentiles_cont",
-    "o10_scd2_history",
-    "corpus_tv_drift",
-    "g8_triangle_count",
-    "txt_pmi_cooccur",
-    "dedup_snm_pairs",
-    "ev_markov_transitions",
-    "x18_twap",
-    "sample_stratified_n",
-    "o11_skyline",
-    "corpus_temperature_mix",
-    "g9_kcore",
-    "txt_bpe_pair_stats",
-    "x19_ols_trend",
-    "ev_attribution_linear",
-    # r8 promotion (the 21 gates staged in r7's plans/pending.py, registered
-    # at r8 start): no driver history -> staleness -1 -> they lead the r8
-    # window; the remaining 29 slots seat the stalest r6 re-attestations by
-    # the positions below (21 r6 gates ride to r9; COVERAGE.md names them).
-    "dedup_span_exact",
-    "dedup_span_stats",
-    "dedup_span_trim",
-    "txt_decontaminate_bloom",
-    "sketch_countmin",
-    "sketch_kmv_jaccard",
-    "sketch_frequent_items",
-    "sketch_quantiles",
-    "sketch_histogram",
-    "sample_weighted",
-    "txt_bigram_coverage",
-    "txt_url_normalize",
-    "corpus_domain_cap",
-    "dedup_fuzzy_pairs",
-    "txt_normalize_nfc",
-    "txt_tfidf_topk",
-    "x11_gapfill",
-    "x12_mad_outliers",
-    "x15_window_suite",
-    "s11_ohlc_candles",
-    "o7_grouping_sets",
-    # r6 curation (18 gates registered this round lead; the automatic
-    # staleness ordering still seats them plus all 29 r4-stale gates plus 3
-    # most-stale re-checks in the 50-slot window — verified in-session).
-    # This list is only the TIE-BREAK inside each staleness
-    # group of _ordered() — the primary sort key is driver history + change
-    # fingerprints — so its job is to decide who gets the last window slots
-    # when a group straddles the 50-entry boundary. Priority re-checks (the
-    # r4-changed gates the r4 verdict names) lead; bulk re-attestations trail.
-    "c2_classified_actions",  # registered r6 (r5 verdict directive 3)
-    "mm_image_features",      # registered r6 (real-codec decode gate)
-    "mm_gif_frame_sample",    # registered r6 (real multi-frame sampling)
-    "mm_video_frame_sample",  # registered r6 (MJPEG/AVI sampled decode)
-    "mm_audio_features",      # registered r6 (PCM+G.711+ADPCM+FLAC analytic)
-    "mm_phash_neardup",       # registered r6 (image dHash + hamming LSH)
-    "dedup_simhash_pairs",    # registered r6 (simhash hamming LSH pairs)
-    "mm_resize_features",     # registered r6 (fused decode+nearest-resize)
-    "mm_container_metadata",  # registered r6 (MP3/MP4 header-walk metadata)
-    "dedup_semantic",         # registered r6 (SemDeDup cluster-blocked dedup)
-    "txt_quality_classifier", # registered r6 (integer-margin linear filter)
-    "txt_html_extract",       # registered r6 (HTML->text landing transform)
-    "ann_kmeans_refine",      # registered r6 (exact-integer Lloyd round)
-    "x9_funnel_stages",       # registered r6 (one-shuffle ordered funnel)
-    "x10_retention_cohorts",  # registered r6 (cohort retention matrix)
-    "txt_hash_embedding",     # registered r6 (hashing-trick text vectors)
-    "mm_audio_frames",        # registered r6 (windowed audio framing)
-    "txt_chunk_windows",      # registered r6 (RAG overlapping chunking)
-    "sketch_kmv_distinct",    # registered r6 (deterministic KMV sketch)
-    "g4_univ3_state",
-    "g4_univ3_tick_liquidity",
-    "g4_univ3_swap_quotes",
-    "g5_path_ticks",
-    "mev_composer_bundles",
-    "mev_block_headers",
-    "mev_block_analysis",
-    "mev_block_analysis_wide",
-    "mev_searcher_stats",
-    "mm_frame_sample",
-    # remaining r4-changed gates (re-verify, below the verdict-named ten)
-    "x2_most_liquid_quote",
-    "x3_fee_adjusted_quote",
-    "dedup_cc_clusters",
-    "dedup_incremental_lsh",  # semantics changed r5 (intra-batch pairs)
-    "dedup_keep_canonical",
-    "ann_lsh_buckets",
-    "ann_ivf_topk",
-    "ann_cosine_topk",
-    "dedup_embedding_cosine",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_exact",
-    "dedup_simhash",
-    "txt_quality_score",
-    "txt_lang_id",
-    "txt_token_count",
-    "txt_fingerprint",
-    "sample_stratified",
-    "corpus_select",
-    # the 22 gates last attested in r3 (r4 verdict directive 3)
-    "a1_delta_accounting",
-    "a7_overlap_dedup",
-    "i1_sandwich_pairs",
-    "i6_sequence_classify",
-    "o4_daily_rollup",
-    "o5_wide_rollup",
-    "x8_sessionize",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_top_urgent",
-    "q4_priority_ontime",
-    "q5_region_revenue",
-    "q7_nation_volume",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q12_priority_pivot",
-    "q14_promo_share",
-    "q16_supplier_variety",
-    "q17_small_quantity_revenue",
-    "q18_big_orders",
-    "q21_waiting_supplier",
-    "q22_global_sales_opportunity",
-    # r4-green, implementation-unchanged: rotate in as slots remain
-    "x5_intermediary_price",
-    "x6_optimistic_vwap",
-    "x1_asof_join",
-    "x4_expanding_vwap",
-    "s3_grid_downsample",
-    "s4_volume_rank",
-    "c9_window_dedup",
-    "c11_group_stats",
-    "i14_outlier_discovery",
-    "i15_rolling_window",
-    "txt_boilerplate_score",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q11_important_stock",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q19_disjunctive_revenue",
-    "q20_majority_supplier",
-    "t1_filter_project",
-    "t6_anti_join",
-    "t8_exists_semijoin",
-]
-
-
-#: Manual OVERRIDE for implementation changes the fingerprint closure cannot
-#: see (e.g. regenerated fixture parquet, driver-side environment changes):
-#: gate -> round the change landed in. Ordering treats the gate as
-#: never-verified until a CORRECTNESS file from a LATER round shows it green,
-#: then the entry expires on its own. Ordinary code changes no longer belong
-#: here — fingerprints.py detects them automatically from the plan builder's
-#: transitive module sources + oracle text (the r3 `txt_fingerprint` miss,
-#: where `norm_text` changed under the gate, is the failure mode the
-#: automatic path closes).
-FORCE_RECHECK: dict[str, int] = {
-    # (r5: emptied — every prior entry is superseded by GATE_FINGERPRINTS.json,
-    # whose stored change-rounds already force the same re-verifications; the
-    # map remains as the manual escape hatch for changes the source-text
-    # closure cannot see, e.g. regenerated testdata parquet.)
-}
-
-
-#: Rotation-latency policy (VERDICT r9 directive 6). At 193 gates and a
-#: 50-slot window every gate re-attests every ~3.9 rounds; the gates below
-#: are FIXTURE-PINNED — their inputs are deterministic planted fixtures
-#: built in-session (never $SPARK_GRAFT_SF_DIR data), so a silent testdata
-#: or environment drift cannot change their inputs, and each is also pinned
-#: by pytest goldens. They re-attest on a slower cadence: once green and
-#: unchanged, their effective staleness is boosted by LOW_FREQ_BONUS rounds,
-#: freeing ~window slots per round for the data-backed cohort (whose period
-#: drops toward ~3.3 rounds). The boost NEVER applies to a gate with no
-#: green word (staleness -1) or whose fingerprint changed after its last
-#: green word (the lg-0.75/lg-0.5 branches) — new or edited fixture gates
-#: still re-enter the window immediately. Activation is round-gated at
-#: LOW_FREQ_START so the judge-pre-verified r10 seating (43 promoted + 7
-#: stalest-r7, pinned in tests/test_plans.py) is computed under the OLD
-#: policy; the dial turns on at r11. The alternative dial considered —
-#: collapsing near-duplicate pairs (x4_decay_vwap/x6_decay_vwap) into
-#: parameterized single gates — was rejected: it deletes driver history and
-#: weakens per-variant attestation for a one-slot saving.
-LOW_FREQ: frozenset[str] = frozenset({
-    # MEV composer + inspector goldens (planted classify/cex fixtures)
-    "mev_composer_bundles", "mev_block_headers", "mev_block_analysis",
-    "mev_block_analysis_wide", "mev_searcher_stats",
-    "i5_sandwich_pnl", "i10_jit_bundles", "i12_liquidation_bundles",
-    "i8_cex_dex_markout", "i9_cex_dex_quotes", "i13_searcher_activity",
-    "o2_jit_sandwich_compose",
-    # Uniswap-V3 pool-math replay (planted univ3 fixture)
-    "g4_univ3_state", "g4_univ3_tick_liquidity", "g4_univ3_swap_quotes",
-    "g5_path_ticks",
-    # raw-hex classification DAG (planted classify fixture)
-    "c2_classified_actions",
-    # multimodal codec gates (generated media fixtures)
-    "mm_image_features", "mm_gif_frame_sample", "mm_video_frame_sample",
-    "mm_audio_features", "mm_phash_neardup", "mm_resize_features",
-    "mm_container_metadata", "mm_frame_sample", "mm_audio_frames",
-    "mm_mp2_features",
-    # decay-weight twins: one projection away from their base gates
-    # (test_decay_vwap_rides_the_unweighted_shuffles pins plan equality)
-    "x4_decay_vwap", "x6_decay_vwap",
-})
-LOW_FREQ_BONUS: float = 2.0
-LOW_FREQ_START: int = 11
-
-
-def _driver_history(root: str | None = None) -> dict[str, int]:
-    """Last round in which each gate got a GREEN driver row, read from the
-    CORRECTNESS_r*.json files the driver leaves at the repo root. A gate whose
-    row exists but failed (or that has no row at all) maps to -1. Empty dict
-    if no files are readable (fresh checkout) — ordering then falls back to
-    the static DRIVER_ORDER below. ``root`` overrides the repo root so tests
-    can replay ordering against a synthetic history directory.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last_green: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            ok = row.get("hash_match")
-            if ok is None:  # rows-only gate (no oracle): green = rows_match
-                ok = row.get("rows_match")
-            # rounds process in ascending order, so the LATEST driver word
-            # wins: a gate that regresses after an earlier green must sort
-            # risk-first (-1), not ride its stale green round
-            last_green[name] = rnd if ok else -1
-    return last_green
-
-
-def effective_staleness(
-    n: str,
-    history: dict[str, int],
-    changed: dict[str, int],
-    this_round: int,
-) -> float:
-    """Effective last-verified round; lower sorts earlier (riskier). THE
-    single authoritative policy function — ordering, seating simulators, and
-    every ordering-dependent test must call this instead of hand-modelling
-    staleness (the r8/r9/r10 defect class: three consecutive rounds a test
-    replicated this policy by hand, drifted from it, and broke the moment
-    the driver deposited a new CORRECTNESS file).
-
-    * no green driver row at all (brand-new or failed gate): -1 — must
-      be in this round's window.
-    * change round AFTER the last green row: unverified code, but the
-      attestation gap is only as old as the green row — re-enter at
-      lg - 0.75, ahead of everything attested at round lg but behind
-      unchanged gates a full round staler. The window pressure then
-      ejects recently-green re-checks (still covered by the local
-      oracle-parity suite) rather than the stalest attestations, whose
-      age is the bound the judge enforces.
-    * change round EQUAL to the last green row: ambiguous — the green
-      row was produced by the end-of-round driver and so very likely
-      postdates the change, but only a later round proves it: lg - 0.5.
-    * otherwise the green row postdates every known change: verified —
-      and, once the low-frequency tier is active (this_round >=
-      LOW_FREQ_START), fixture-pinned gates ride the slow cadence
-      (+LOW_FREQ_BONUS).
-    """
-    lg = history.get(n, -1)
-    forced = max(FORCE_RECHECK.get(n, -1), changed.get(n, -1))
-    if lg == -1:
-        return -1.0
-    if lg < forced:
-        return lg - 0.75
-    if lg == forced:
-        return lg - 0.5
-    if this_round >= LOW_FREQ_START and n in LOW_FREQ:
-        return float(lg) + LOW_FREQ_BONUS
-    return float(lg)
-
-
-def _this_round(history: dict[str, int]) -> int:
-    """The in-flight round, derived from the GIVEN history (never the repo
-    root directly) so frozen-history replays stay hermetic."""
-    return max((r for r in history.values() if r >= 0), default=0) + 1
-
-
-def _ordered(root: str | None = None) -> list[str]:
-    """Registry names in driver order. The driver verifies only the FIRST 50
-    entries per round, so ordering is part of the correctness contract:
-    least-recently-verified first. Primary key = effective_staleness (last
-    round with a green driver row; never-green / failed / brand-new gates
-    sort first), tie-break = the static DRIVER_ORDER position (then
-    registration order), so the window rotates across rounds without manual
-    re-curation and a newly-registered gate is never silently dropped.
-
-    ``root`` passes through to ``_driver_history`` so seating tests and
-    simulators can replay the ordering against a FROZEN history directory —
-    reading live repo-root files from a pin is the r9 defect (the driver's
-    own CORRECTNESS deposit legitimately rolls the live window forward, so a
-    live-read pin asserts stale expectations the moment it is graded).
-    """
-    from . import fingerprints
-
-    history = _driver_history(root)
-    base = {n: i for i, n in enumerate(DRIVER_ORDER)}
-    names = [n for n in DRIVER_ORDER if n in REGISTRY]
-    names += [n for n in REGISTRY if n not in base]
-    if not history:
-        return names
-    this_round = _this_round(history)
-    # change rounds are taken AS-OF the replayed round: a fingerprint
-    # stamped AFTER round N cannot retroactively alter round N's window (a
-    # frozen r01..r{N-1} replay must reproduce the window the round-N
-    # driver actually saw, not re-rank it with this round's edits — the
-    # round-11 recurrence of the live-state-leak class: frozen history,
-    # live fingerprints), and the superseded earlier stamp still counts
-    # (round 12: re-editing a gate must not erase the stamp a past window
-    # was seated on — hence the change-round HISTORY in the store). Live
-    # ordering is unaffected: every live change round is <= the live
-    # this_round by construction.
-    changed = fingerprints.change_rounds_asof(this_round)
-    return sorted(
-        names,
-        key=lambda n: (
-            effective_staleness(n, history, changed, this_round),
-            base.get(n, len(base)),
-        ),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].build for name in _ordered()}
+    """Every registered gate's plan builder, in registration order."""
+    return {name: spec.build for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
+    """DuckDB oracle SQL for every gate that has one, in registration order."""
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered()
-        if REGISTRY[name].oracle is not None
+        name: spec.oracle
+        for name, spec in REGISTRY.items()
+        if spec.oracle is not None
     }
 
 

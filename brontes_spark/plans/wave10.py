@@ -1,28 +1,17 @@
-"""Round-10 promotion wave: the 43 gate specs staged in plans/pending.py
-during rounds 8-9, promoted verbatim (builder + fully interpolated DuckDB
-oracle unchanged; this file IS the former pending.py, git-mv'd, with the
-staging decorator swapped for ``@register``) per the r10 promotion
-playbook the r9 VERDICT pre-verified against the real
-CORRECTNESS_r01..r09 history: all 43 enter the driver window at
-staleness -1 and the remaining 7 slots seat the stalest r7-attested
-re-attestations (mm_mp2_features, the five mev_* composer gates,
-x2_most_liquid_quote). scripts/simulate_r10.py re-derives that seating
-from the on-disk driver history, and
-tests/test_plans.py::test_r10_window_seating pins it hermetically.
-
-Families promoted here: the iterative-graph second wave (label
-propagation, HITS, BFS hops, weighted SSSP, personalized PageRank), the
-per-inspector golden-PnL driver words (sandwich / JIT / liquidation /
-CEX-DEX markout + quotes / searcher activity / composed jit_sandwich —
-oracles RECOMPUTE the reference PnLs in SQL from planted legs), the
-statistics suite (Pearson / Spearman / Mann-Whitney / KS / Welch t /
-one-way ANOVA / two-proportion z / correlation matrix / Benford /
-CUSUM / autocorrelation / seasonality), data-quality and table ops
-(dq checks, table diff, k-anonymity, skew profile, compaction planning,
-RRF fusion, Pareto, association rules, quantile normalize, winsorize,
-rolling distinct, RFM segments), text-ML features (chi-square selection,
-Naive Bayes training, readability), the SCD2 point-in-time as-of join,
-Theil-Sen robust slopes, JSON extraction, and group-aware CV folds.
+"""Registry gates for these operator families: the iterative-graph
+second wave (label propagation, HITS, BFS hops, weighted SSSP,
+personalized PageRank), the per-inspector golden-PnL gates (sandwich /
+JIT / liquidation / CEX-DEX markout + quotes / searcher activity /
+composed jit_sandwich — oracles RECOMPUTE the reference PnLs in SQL from
+planted legs), the statistics suite (Pearson / Spearman / Mann-Whitney /
+KS / Welch t / one-way ANOVA / two-proportion z / correlation matrix /
+Benford / CUSUM / autocorrelation / seasonality), data-quality and table
+ops (dq checks, table diff, k-anonymity, skew profile, compaction
+planning, RRF fusion, Pareto, association rules, quantile normalize,
+winsorize, rolling distinct, RFM segments), text-ML features (chi-square
+selection, Naive Bayes training, readability), the SCD2 point-in-time
+as-of join, Theil-Sen robust slopes, JSON extraction, and group-aware CV
+folds.
 """
 
 from __future__ import annotations

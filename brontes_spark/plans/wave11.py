@@ -1,20 +1,5 @@
-"""Round-11 promotion wave: the 12 gate specs staged in plans/pending.py
-during round 10, promoted verbatim (builder + fully interpolated DuckDB
-oracle unchanged; this file IS the former pending.py, git-mv'd, with the
-staging decorator swapped for ``@register``) per the r11 promotion
-playbook the r10 VERDICT pre-verified: all 12 enter the driver window at
-staleness -1, and — this being the first round the fixture-pinned
-low-frequency tier (registry.LOW_FREQ, active from LOW_FREQ_START=11) is
-live — the remaining 38 seats take the stalest DATA-BACKED cohort (the
-lg=7 block: x3_fee_adjusted_quote, the dedup/ANN r7 re-attestations,
-x4_decay_vwap whose ambiguous change-round word keeps it off the
-low-freq cadence). scripts/simulate_r11.py re-derives the seating from
-the real on-disk CORRECTNESS_r01..r10 history, and
-tests/test_plans.py::test_r11_window_seating pins it hermetically
-(frozen-history replay).
-
-Families promoted here: the r9 verdict's one named gap (Boruvka minimum
-spanning forest, with a Kruskal cycle-property oracle independent of the
+"""Registry gates for these operator families: the Boruvka minimum
+spanning forest (with a Kruskal cycle-property oracle independent of the
 operator's round structure), the ordinal/categorical association pair
 (Kendall tau-b, chi-square independence + Cramér's V), the graph third
 wave (neighborhood-overlap link prediction, k-truss edge peeling,
@@ -84,7 +69,7 @@ WHERE NOT EXISTS (
     "doc_id<64 with deterministic hash weights, strictly-heavier parallel "
     "copies (groupBy-min collapse) and center self-loops (dropped) — small "
     "by design so the gate times the MERGE LOGIC, not the per-round "
-    "scheduling floor the full sf graph pays (bench.py's g15 note); "
+    "scheduling floor the full sf graph pays; "
     "connected, so the forest is the 63-edge spanning tree. Oracle = "
     "Kruskal's cycle property as a recursive CTE (edge in MSF iff "
     "endpoints disconnected under strictly smaller edges), independent of "

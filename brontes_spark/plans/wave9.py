@@ -1,18 +1,10 @@
-"""Round-9 promotion wave: the 29 r9-tier gate specs staged in
-plans/pending.py during round 8, moved here verbatim (builder + fully
-interpolated DuckDB oracle + survey_ref unchanged) and registered, per the
-r9 promotion playbook simulated in pending.py's round-8 header: these 29
-enter the driver window at staleness -1 and the remaining 21 slots seat
-exactly the 21 r6-deferred re-attestations, leaving the window exactly
-full. The 31 r10-tier specs stay staged in plans/pending.py under local
-sf0.01 parity cover (tests/test_pending_parity.py).
-
-Families promoted here: exact AllPairs set-similarity join, LSH-verified
-fuzzy dedup, Public Suffix List registered-domain, BM25, HyperLogLog, KMV
-containment, continuous percentiles, interval-overlap join, salted join,
-z-order clustering, table profiling, SCD2 history, 2-D skyline, corpus
-TV-drift + temperature mixing, stratified exact-n sampling, Gram-matrix
-PCA gate, Unicode script histogram, Gopher rules, PMI co-occurrence,
+"""Registry gates for these operator families: exact AllPairs
+set-similarity join, LSH-verified fuzzy dedup, Public Suffix List
+registered-domain, BM25, HyperLogLog, KMV containment, continuous
+percentiles, interval-overlap join, salted join, z-order clustering,
+table profiling, SCD2 history, 2-D skyline, corpus TV-drift +
+temperature mixing, stratified exact-n sampling, Gram-matrix PCA gate,
+Unicode script histogram, Gopher rules, PMI co-occurrence,
 sorted-neighborhood dedup, Markov transitions, TWAP, OLS trends, linear
 attribution, BPE pair stats, and the iterative graph family's first wave
 (PageRank, triangles, k-core).
@@ -38,8 +30,7 @@ from .registry import EV_CTE, QuerySpec, REGISTRY, register
     "O(len*d) thresholded edit-distance kernel runs once per CANDIDATE, "
     "never corpus x corpus; at sf0.01 the LSH stream has 25 candidates of "
     "which max_dist=5 verifies 24 and rejects 1 (dist 8), exercising both "
-    "outcomes; scripts/fuzzy_slope.py measures kernel count == candidate "
-    "count at 10x data",
+    "outcomes; kernel count == candidate count at 10x data",
 )
 def dedup_fuzzy_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_pairs
@@ -879,7 +870,7 @@ def txt_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "why nondeterministic per-row salts are sound; complements AQE's "
     "skewedJoin for the cases it can't split (downstream same-key aggs, "
     "hash joins, single-key-exceeds-a-partition); hot-key wall measured "
-    "flat in scripts/salted_skew.py",
+    "flat",
 )
 def x17_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.salted import salted_join

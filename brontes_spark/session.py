@@ -33,6 +33,23 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: upper bound on the derived driver heap
+MAX_DRIVER_MEMORY_GB = 16
+
+
+def default_driver_memory() -> str:
+    """Driver heap for local mode: half of physical memory in whole
+    gigabytes (at least 1g), capped at MAX_DRIVER_MEMORY_GB. In local mode
+    the executors share this JVM, and the Python workers and off-heap
+    buffers need the other half. Falls back to the cap where the OS does
+    not report its memory; ``SPARK_DRIVER_MEMORY`` overrides it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return f"{MAX_DRIVER_MEMORY_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, phys // 2**31))}g"
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to any session (including the driver's)."""
     for k, v in RUNTIME_CONFS.items():
@@ -54,7 +71,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")

@@ -10,13 +10,12 @@ key cardinality and row counts grow 10x — i.e. group-by fan-in and join
 amplification scale the way a bigger TPC-H sf does. The fixed dims
 (region/nation) stay fixed, as in TPC-H. Text copies go through a per-copy
 Caesar cipher and embeddings through per-copy sign modulation (same
-transforms as scripts/scale_slope.py) so dedup/ANN structure reflects
+text transform as make_sf10.py) so dedup/ANN structure reflects
 corpus growth, not 10-way cloning.
 
 Output: /root/repo/.scale_sf1/*.parquet  (gitignored; ~170 MB)
-Run the headline against it:
-    SPARK_GRAFT_SF_DIR=/root/repo/.scale_sf1 python bench.py
-(bench.py parses the trailing 'sf1' as sf=1.0)
+Run any registry gate against it:
+    python -m brontes_spark.cli corpus run --query <name> --sf-dir .scale_sf1
 """
 
 from __future__ import annotations

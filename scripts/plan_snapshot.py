@@ -1,4 +1,4 @@
-"""Snapshot the physical-plan SHAPE of every registered + staged gate.
+"""Snapshot the physical-plan SHAPE of every registered gate.
 
 The named plan pins (tests/test_plans*.py) guard the gates whose shape IS
 the story; this snapshot guards everything else: a refactor that silently
@@ -54,7 +54,6 @@ def shape_of(df) -> dict[str, int]:
 
 
 def main() -> None:
-    from brontes_spark.plans.pending import PENDING
     from brontes_spark.plans.registry import REGISTRY
     from brontes_spark.session import get_spark
 
@@ -63,8 +62,7 @@ def main() -> None:
     spark = get_spark("plan-snapshot")
     spark.sparkContext.setLogLevel("ERROR")
     shapes: dict[str, dict[str, int]] = {}
-    specs = {**{n: s.build for n, s in REGISTRY.items()},
-             **{n: s.build for n, s in PENDING.items()}}
+    specs = {n: s.build for n, s in REGISTRY.items()}
     for name in sorted(specs):
         try:
             shapes[name] = shape_of(specs[name](spark, SF))

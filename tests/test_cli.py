@@ -117,7 +117,6 @@ def test_cli_corpus_list_and_run(spark, tmp_path, capsys):
     assert _run(["corpus", "list"]) == 0
     names = capsys.readouterr().out.split()
     assert "dedup_exact" in names and "dedup_span_exact" in names
-    # staged (pending) gates are runnable alongside registry gates
     out = str(tmp_path / "corpus_out")
     assert _run([
         "--cpus", "4", "corpus", "run", "--query", "sketch_quantiles",

@@ -22,7 +22,6 @@ import os
 import pytest
 
 import brontes_spark.plans  # noqa: F401  (populate REGISTRY)
-from brontes_spark.plans.pending import PENDING
 from brontes_spark.plans.registry import REGISTRY
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -31,8 +30,7 @@ SF = "/root/testdata/sf0.001"
 with open(os.path.join(ROOT, "PLAN_SHAPES.json")) as f:
     SNAPSHOT: dict[str, dict] = json.load(f)
 
-SPECS = {**{n: s.build for n, s in REGISTRY.items()},
-         **{n: s.build for n, s in PENDING.items()}}
+SPECS = {n: s.build for n, s in REGISTRY.items()}
 
 
 def _shape(spark, name):
@@ -48,20 +46,12 @@ def test_snapshot_covers_every_gate():
     assert not any("ERROR" in v for v in SNAPSHOT.values())
 
 
-#: measured bistability, not drift: c2's classify fixture memoizes a CACHED
-#: relation, and whether one downstream requirement is satisfied by the
-#: InMemoryRelation's retained partitioning flips with session cache state
-#: (r8: snapshot regenerations recorded 75 and 76 across sessions with no
-#: code change on the c2 path — bisected to the cache, not a refactor).
-#: Every other feature of c2 stays exact.
-TOLERANCE = {"c2_classified_actions": {"x_hash": {75, 76}}}
-
 #: the r9 per-inspector fixture gates run whole inspector DAGs whose
 #: formatted plans count cached-subtree boundaries — and which subtrees
 #: are already InMemoryRelations depends on what ran earlier in the
-#: session (the c2 bistability class, but across MANY features at the
-#: composite DAGs' size: i5's x_hash recorded 2289 vs 2298 between a
-#: fresh and a warmed session with zero code change). For these, exact
+#: session (across MANY features at the composite DAGs' size: i5's x_hash
+#: recorded 2289 vs 2298 between a fresh and a warmed session with zero
+#: code change). For these, exact
 #: counts are meaningless; the load-bearing invariants — no cartesian
 #: product, and the same feature KINDS present — are asserted instead.
 #: The gates' VALUES stay hash-pinned by their recomputing oracles.
@@ -74,15 +64,12 @@ SESSION_DEPENDENT = {
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_plan_shape_unchanged(spark, name):
     got = _shape(spark, name)
-    want = dict(SNAPSHOT[name])
+    want = SNAPSHOT[name]
     if name in SESSION_DEPENDENT:
         assert set(got) == set(want), (
             f"{name}: plan FEATURE SET drifted {sorted(want)} -> {sorted(got)}"
         )
     else:
-        for feat, allowed in TOLERANCE.get(name, {}).items():
-            if got.get(feat) in allowed and want.get(feat) in allowed:
-                want[feat] = got.get(feat)
         assert got == want, (
             f"{name}: plan shape drifted {want} -> {got}; if intentional, "
             "re-run scripts/plan_snapshot.py and commit the diff"

@@ -3,24 +3,20 @@ docstring claims must be the shapes Catalyst picks — the single shared
 exchange in concentration, the map-side WindowGroupLimit cap in the
 co-occurrence projection, the cache-pinned wedge join in link
 prediction, and hash joins (never nested loops) in the Kendall pair
-explode. (The no-cartesian sweep over every staged gate lives in
+explode. (The no-cartesian sweep over the ml_eval gates lives in
 test_plans_r8.py's parametrized check.)"""
 
 from __future__ import annotations
 
 import re
 
-from brontes_spark.plans.pending import PENDING
 from brontes_spark.plans.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name: str, mode: str = "formatted") -> str:
-    # the r10 gates these pins cover were staged when the module was
-    # written and promoted to the registry at r11 — resolve from either
-    spec = REGISTRY.get(name) or PENDING[name]
-    df = spec.build(spark, SF)
+    df = REGISTRY[name].build(spark, SF)
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), mode
     )

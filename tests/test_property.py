@@ -94,6 +94,8 @@ def test_expanding_vwap_skewed_pair_uses_aqe_skew_join(spark):
 
     from brontes_spark.operators.vwap import expanding_vwap
 
+    from .conftest import codegen_session
+
     tuned = {
         # shrink AQE's skew thresholds so the test-scale hot key (100k rows)
         # crosses them the way a TB-scale hot pair crosses the defaults
@@ -106,33 +108,36 @@ def test_expanding_vwap_skewed_pair_uses_aqe_skew_join(spark):
     for k, v in tuned.items():
         spark.conf.set(k, v)
     try:
-        hot = spark.range(100_000).select(
-            F.lit("HOT").alias("key"),
-            (F.col("id") % 1000).cast("long").alias("tick_ts"),
-            F.lit(Decimal("1.5")).cast("decimal(38,18)").alias("price"),
-            F.lit(Decimal("2")).cast("decimal(38,18)").alias("vol"),
-            F.col("id").alias("tick_id"),
-        )
-        cold = spark.range(1000).select(
-            F.concat(F.lit("C"), (F.col("id") % 20).cast("string")).alias("key"),
-            (F.col("id") % 1000).cast("long").alias("tick_ts"),
-            F.lit(Decimal("3")).cast("decimal(38,18)").alias("price"),
-            F.lit(Decimal("1")).cast("decimal(38,18)").alias("vol"),
-            (F.col("id") + 200_000).alias("tick_id"),
-        )
-        anchors = spark.createDataFrame(
-            [
-                ("hot_a", "HOT", 500, Decimal(100)),
-                ("cold_a", "C1", 500, Decimal(20)),
-            ],
-            "anchor_id string, key string, anchor_ts long,"
-            " required_vol decimal(38,18)",
-        )
-        out = expanding_vwap(
-            anchors, hot.unionByName(cold), pre_step=10, post_step=10, max_steps=50
-        )
-        rows = {r["anchor_id"]: r for r in out.collect()}
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        # the test session runs with AQE off (conftest); skew-join splitting
+        # is an AQE rewrite, so build and execute under the production engine
+        with codegen_session(spark):
+            hot = spark.range(100_000).select(
+                F.lit("HOT").alias("key"),
+                (F.col("id") % 1000).cast("long").alias("tick_ts"),
+                F.lit(Decimal("1.5")).cast("decimal(38,18)").alias("price"),
+                F.lit(Decimal("2")).cast("decimal(38,18)").alias("vol"),
+                F.col("id").alias("tick_id"),
+            )
+            cold = spark.range(1000).select(
+                F.concat(F.lit("C"), (F.col("id") % 20).cast("string")).alias("key"),
+                (F.col("id") % 1000).cast("long").alias("tick_ts"),
+                F.lit(Decimal("3")).cast("decimal(38,18)").alias("price"),
+                F.lit(Decimal("1")).cast("decimal(38,18)").alias("vol"),
+                (F.col("id") + 200_000).alias("tick_id"),
+            )
+            anchors = spark.createDataFrame(
+                [
+                    ("hot_a", "HOT", 500, Decimal(100)),
+                    ("cold_a", "C1", 500, Decimal(20)),
+                ],
+                "anchor_id string, key string, anchor_ts long,"
+                " required_vol decimal(38,18)",
+            )
+            out = expanding_vwap(
+                anchors, hot.unionByName(cold), pre_step=10, post_step=10, max_steps=50
+            )
+            rows = {r["anchor_id"]: r for r in out.collect()}
+            plan = out._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, "AQE did not split the skewed join"
         # hot key: every ts in [490,510] holds 100 ticks of vol 2 -> step 1
         # already covers required_vol; vwap is the flat hot price
