@@ -1,24 +1,29 @@
 """Sandwich inspector — reference I1-I5 (SURVEY.md §2.7):
 `mev_inspectors/sandwich/mod.rs`.
 
+I1-I4 run as ONE pass per block, like the reference's walk over a block's
+tx list (run per block by composer/mod.rs:71-120): `tx_info` and the swap
+actions cogroup on `block_number`, and `block_sandwiches` walks each
+block's txs in plain Python. Blocks hold ~10² txs, so every group is small.
+
 Candidate generation (I1, mod.rs:1014-1135): within a block, the ordered tx
 chain of each repeated actor forms possible sandwiches — TWO scans, one
 keyed by duplicate EOA and one by duplicate mev contract (the reference's
-get_possible_sandwich_duplicate_senders / _duplicate_contracts), unioned
-with identical chains deduplicated. Chains with multiple frontruns are the
-"Big Mac" shape. A chain's txs may carry DIFFERENT eoa/mev_contract values
-(e.g. one contract driven by several EOAs): attribution uses the first
-searcher tx's identity, like the reference's bundle header.
+get_possible_sandwich_duplicate_senders / _duplicate_contracts), with
+identical chains deduplicated to the contract-scan one. Chains with
+multiple frontruns are the "Big Mac" shape. A chain's txs may carry
+DIFFERENT eoa/mev_contract values (e.g. one contract driven by several
+EOAs): attribution uses the first searcher tx's identity, like the
+reference's bundle header.
 
 Gap partitioning (I2, mod.rs:902-953): a chain splits wherever two
-consecutive searcher txs have NO victim txs between them — each victim-backed
-segment is an independent candidate.
+consecutive searcher txs have NO tx of any kind between them — each
+victim-backed segment is an independent candidate.
 
 Bounded shrink (I4, mod.rs:447-555): when a segment fails validation, the
-reference recurses ≤6 times dropping head/tail txs. Set-based equivalent:
-enumerate head/tail trims with head+tail ≤ MAX_SHRINK in one explode,
-validate all trimmed variants at once, and keep the widest passing variant
-per segment (keep_largest) — no iteration, same search space.
+reference recurses ≤6 times dropping head/tail txs. We validate every
+head/tail trim with head+tail ≤ MAX_SHRINK and keep the widest passing one
+(ties: the smaller back tx hash) — the same search space.
 
 Pool-overlap validation (I3, mod.rs:556-740): the backrun must reverse a
 pool/direction some frontrun swapped; ≥50% of swapping victims must swap a
@@ -26,124 +31,149 @@ frontrun pool in the frontrun direction; and ≥1 victim must FULLY overlap —
 same pool + front direction AND opposite to the backrun
 (verify_sandwich_victims' low_priority/high_priority split).
 
-PnL (I5, mod.rs:168-446): searcher address-set USD deltas across the
-segment's searcher txs minus their gas. The set spans every chain tx's
-eoa + mev_contract (+ the scan actor). Documented divergence: the
+PnL (I5, mod.rs:168-446), in Spark columns: searcher address-set USD deltas
+across the segment's searcher txs minus their gas. The set spans every
+chain tx's eoa + mev_contract. Documented divergence: the
 reference additionally folds in sibling-searcher addresses from its
 searcher db and zeroes profit behind a MAX_PRICE_DIFF(0.995) price-
 reliability guard — our tx_info/dex_prices model carries neither signal,
 so both are out of scope (the A4 valid_pricing filter is the engine's
 price-sanity mechanism).
 
-Scale: everything is (block, actor)-local — windows and small array ops per
-group; the trim enumeration multiplies candidates by ≤28, a bounded constant;
-the dual scan doubles candidate volume, still block-bounded.
+Scale: one shuffle of `tx_info` and the swaps on `block_number`. The walk
+validates ≤28 trims per segment, each in time linear in the block's txs,
+so its cost per block is bounded by block size at any range length.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from bisect import bisect_left, bisect_right
+from collections import namedtuple
+
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.windows import keep_largest
 from .accounting import action_deltas, gas_usd, usd_deltas
 
 MAX_SHRINK = 6
 
+#: one row per candidate segment's best validated trim
+BEST_SCHEMA = (
+    "block_number long, actor string, segment long, eoa string, "
+    "mev_contract string, mev_type string, tx_hashes array<string>, "
+    "searcher_txs array<string>, searcher_set array<string>"
+)
+_BEST_COLS = [f.split()[0] for f in BEST_SCHEMA.split(", ")]
 
-def _scan_segments(
-    swaps: DataFrame, tx_info: DataFrame, actor_col: Column, scan: str
-) -> DataFrame:
-    """One I1+I2 scan keyed by `actor_col`: per (block, actor), maximal
-    searcher-tx chains split at empty victim gaps; one row per segment with
-    the ordered searcher tx array (each element carrying its own
-    eoa/mev_contract for attribution and the PnL searcher set).
+_Tx = namedtuple("_Tx", "index hash eoa mev_contract")
 
-    The gap test counts ALL txs between consecutive searcher txs (not only
-    swap txs) — mod.rs:902-953 partitions on empty tx intervals, so a
-    non-swap tx in the gap keeps the chain joined."""
-    swap_txs = swaps.select("block_number", "tx_hash").distinct()
-    actors = (
-        tx_info.withColumn("actor", actor_col)
-        .filter(F.col("actor").isNotNull())
-        .join(swap_txs.select("tx_hash"), "tx_hash", "left_semi")
-        .select("block_number", "actor", "eoa", "mev_contract", "tx_hash", "tx_index")
+
+def _segments(chain: list[_Tx], order: list[int]):
+    """I2: split an actor's block-ordered chain wherever two consecutive
+    txs have no block tx (swapping or not) between them."""
+    seg = [chain[0]]
+    for prev, tx in zip(chain, chain[1:]):
+        if bisect_left(order, tx.index) == bisect_right(order, prev.index):
+            yield seg
+            seg = []
+        seg.append(tx)
+    yield seg
+
+
+def _victims(sub, legs, block, order):
+    """I3 for one trim: its victims (index, hash) in block order if it
+    validates, else None. Victims are every block tx strictly inside the
+    trim, minus the trim's own txs; the overlap ratio counts the swapping
+    ones. `legs[h]` lists tx h's swaps as (pool, token_in, token_out)."""
+    fronts = [leg for tx in sub[:-1] for leg in legs[tx.hash]]
+    backs = legs[sub[-1].hash]
+    front_dirs = {leg for leg in fronts if None not in leg}
+    if not any((p, o, i) in front_dirs for p, i, o in backs):
+        return None
+    front_pools = {(p, i) for p, i, _ in fronts if p is not None and i is not None}
+    back_opp = {(p, o) for p, _, o in backs if p is not None and o is not None}
+    own = {tx.hash for tx in sub}
+    lo, hi = bisect_right(order, sub[0].index), bisect_left(order, sub[-1].index)
+    victims = [v for v in block[lo:hi] if v[1] not in own]
+    swapping = {h for _, h in victims if h in legs}
+    hit = {h for h in swapping if any((p, i) in front_pools for p, i, _ in legs[h])}
+    full = any(
+        (p, i) in front_pools and (p, i) in back_opp
+        for h in hit for p, i, _ in legs[h]
     )
-    w = W.partitionBy("block_number", "actor").orderBy("tx_index")
-    chains = (
-        actors.withColumn("next_index", F.lead("tx_index").over(w))
-        .withColumn(
-            "n_chain", F.count(F.lit(1)).over(W.partitionBy("block_number", "actor"))
-        )
-        .filter(F.col("n_chain") >= 2)
-    )
-    victims = tx_info.select(
-        F.col("block_number").alias("v_block"),
-        F.col("tx_hash").alias("v_hash"),
-        F.col("tx_index").alias("v_index"),
-    ).distinct()
-    gaps = (
-        chains.join(
-            victims,
-            (F.col("v_block") == F.col("block_number"))
-            & (F.col("v_index") > F.col("tx_index"))
-            & (F.col("v_index") < F.col("next_index")),
-            "left",
-        )
-        .groupBy(
-            "block_number", "actor", "eoa", "mev_contract",
-            "tx_hash", "tx_index", "next_index",
-        )
-        .agg(F.count("v_hash").alias("gap_victims"))
-    )
-    # segment id = running count of empty gaps strictly before this tx (I2)
-    w2 = W.partitionBy("block_number", "actor").orderBy("tx_index")
-    empty_gap_after = F.when(
-        F.col("next_index").isNotNull() & (F.col("gap_victims") == 0), 1
-    ).otherwise(0)
-    seg = gaps.withColumn("empty_prev", F.lag(empty_gap_after, 1, 0).over(w2)).withColumn(
-        "segment", F.sum("empty_prev").over(w2)
-    )
-    # NOTE: eoa/mev_contract stay per-ELEMENT, never in the group key — a
-    # contract-keyed chain whose txs come from different EOAs is ONE chain
-    # (grouping by eoa would fragment it and mislabel the searcher's own
-    # txs as victims); segment attribution = the first tx's identity
-    return (
-        seg.groupBy("block_number", "actor", "segment")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct("tx_index", "tx_hash", "eoa", "mev_contract")
-                )
-            ).alias("chain")
-        )
-        .filter(F.size("chain") >= 2)
-        .select(
-            "block_number", "actor", "segment", "chain",
-            F.element_at("chain", 1)["eoa"].alias("eoa"),
-            F.element_at("chain", 1)["mev_contract"].alias("mev_contract"),
-            F.lit(scan).alias("scan"),
-        )
+    if full and 2 * len(hit) >= len(swapping):
+        return victims
+    return None
+
+
+def _best_trim(seg, legs, block, order):
+    """I4: the widest head/tail trim (head + tail ≤ MAX_SHRINK) that
+    validates, ties to the smaller back tx hash, with its victims; None
+    when no trim validates."""
+    n = len(seg)
+    trims = [
+        seg[h:n - t]
+        for h in range(MAX_SHRINK + 1) for t in range(MAX_SHRINK + 1 - h)
+        if n - h - t >= 2
+    ]
+    checked = ((sub, _victims(sub, legs, block, order)) for sub in trims)
+    return min(
+        ((sub, v) for sub, v in checked if v is not None),
+        key=lambda sv: (-len(sv[0]), sv[0][-1].hash),
+        default=None,
     )
 
 
-def _candidate_segments(swaps: DataFrame, tx_info: DataFrame) -> DataFrame:
-    """I1 dual scan: duplicate-EOA chains ∪ duplicate-contract chains
-    (reference runs both and dedups; an EOA that fronts directly but backs
-    through a contract only shows up in the EOA scan). Identical chains
-    found by both scans dedup to the contract-scan row."""
-    by_eoa = _scan_segments(swaps, tx_info, F.col("eoa"), "eoa")
-    by_contract = _scan_segments(swaps, tx_info, F.col("mev_contract"), "contract")
-    both = by_contract.unionByName(by_eoa)
-    chain_key = F.md5(
-        F.concat_ws(",", F.transform("chain", lambda s: s["tx_hash"]))
+def block_sandwiches(txs: pd.DataFrame, swaps: pd.DataFrame) -> pd.DataFrame:
+    """I1-I4 over ONE block. `txs`: the block's tx_info rows (block_number,
+    tx_index, tx_hash, eoa, mev_contract); `swaps`: its swap actions
+    (tx_hash, pool, token_in, token_out). Returns one BEST_SCHEMA row per
+    candidate segment whose best trim validates. Row order of either input
+    does not matter."""
+    if txs.empty or swaps.empty:
+        return pd.DataFrame(columns=_BEST_COLS)
+    bn = int(txs["block_number"].iloc[0])
+    legs: dict[str, list[tuple]] = {}
+    for h, *leg in set(
+        swaps[["tx_hash", "pool", "token_in", "token_out"]].itertuples(index=False, name=None)
+    ):
+        legs.setdefault(h, []).append(tuple(leg))
+    rows = sorted(
+        {_Tx(int(i), h, e, c) for i, h, e, c in txs[
+            ["tx_index", "tx_hash", "eoa", "mev_contract"]
+        ].itertuples(index=False, name=None)},
+        key=lambda tx: (tx.index, tx.hash),
     )
-    w = W.partitionBy("block_number", chain_key).orderBy("scan")  # contract < eoa
-    return (
-        both.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "scan")
-    )
+    block = sorted({(tx.index, tx.hash) for tx in rows})
+    order = [i for i, _ in block]
+
+    out, seen = [], set()
+    for actor_col in ("mev_contract", "eoa"):  # contract scan wins identical chains
+        chains: dict[str, list[_Tx]] = {}
+        for tx in rows:
+            actor = getattr(tx, actor_col)
+            if actor is not None and tx.hash in legs:
+                chains.setdefault(actor, []).append(tx)
+        for actor, chain in chains.items():
+            for segment, seg in enumerate(_segments(chain, order)):
+                hashes = tuple(tx.hash for tx in seg)
+                if len(seg) < 2 or hashes in seen:
+                    continue
+                seen.add(hashes)
+                best = _best_trim(seg, legs, block, order)
+                if best is None:
+                    continue
+                sub, victims = best
+                out.append((
+                    bn, actor, segment, sub[0].eoa, sub[0].mev_contract,
+                    "sandwich:big_mac" if len(sub) > 2 else "sandwich",
+                    # block order: a Big Mac's victims sit between its frontruns
+                    [h for _, h in sorted([(tx.index, tx.hash) for tx in sub] + victims)],
+                    [tx.hash for tx in sub],
+                    sorted({a for tx in sub for a in (tx.eoa, tx.mev_contract) if a is not None}),
+                ))
+    return pd.DataFrame(out, columns=_BEST_COLS)
 
 
 def sandwich_bundles(
@@ -155,173 +185,14 @@ def sandwich_bundles(
     gas: DataFrame | None = None,
 ) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
-        "block_number", "tx_hash", "tx_index", F.col("swap.*")
-    ).cache()  # probed by candidates, fronts, backs, and victims below
-    segments = _candidate_segments(swaps, tx_info)
-
-    # I4: enumerate head/tail trims (head + tail <= MAX_SHRINK) in one explode
-    trims = segments.select(
-        "*",
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(MAX_SHRINK)),
-                        lambda h: F.transform(
-                            F.sequence(F.lit(0), F.lit(MAX_SHRINK)),
-                            lambda t: F.struct(h.alias("h"), t.alias("t")),
-                        ),
-                    )
-                ),
-                lambda s: (s["h"] + s["t"] <= MAX_SHRINK)
-                & (F.size("chain") - s["h"] - s["t"] >= 2),
-            )
-        ).alias("trim"),
-    ).withColumn(
-        "sub_chain",
-        F.slice(
-            "chain", F.col("trim.h") + 1, F.size("chain") - F.col("trim.h") - F.col("trim.t")
-        ),
+        "block_number", "tx_hash", "swap.pool", "swap.token_in", "swap.token_out"
     )
-    cand = trims.select(
-        "block_number", "actor", "segment",
-        "sub_chain",
-        # trim attribution follows the trimmed chain's FIRST tx
-        F.element_at("sub_chain", 1)["eoa"].alias("eoa"),
-        F.element_at("sub_chain", 1)["mev_contract"].alias("mev_contract"),
-        F.size("sub_chain").alias("span"),
-        F.transform(
-            F.slice("sub_chain", 1, F.size("sub_chain") - 1), lambda s: s["tx_hash"]
-        ).alias("front_hashes"),
-        F.element_at("sub_chain", 1)["tx_index"].alias("first_index"),
-        F.element_at("sub_chain", -1)["tx_index"].alias("back_index"),
-        F.element_at("sub_chain", -1)["tx_hash"].alias("back_hash"),
-    ).cache()  # consumed by the validation joins and the PnL stage
-    # candidate identity must pin the exact trim: two equal-span trims of the
-    # same segment (h=1,t=0 vs h=0,t=1) are DIFFERENT candidates with
-    # different victim intervals, and (first_index, back_index) disambiguates
-    # them — keying on span alone would merge their victim/overlap sets and
-    # validate each trim against the union (reference validates per recursion
-    # branch, mod.rs:447-555)
-    ckeys = ["block_number", "actor", "segment", "span", "first_index", "back_index"]
-
-    # I3a: backrun must reverse some frontrun's pool + direction
-    fronts = cand.select(
-        *ckeys, "back_hash", F.explode("front_hashes").alias("f_hash")
-    ).join(
-        swaps.select(
-            F.col("tx_hash").alias("f_hash"),
-            F.col("pool").alias("f_pool"),
-            F.col("token_in").alias("f_in"),
-            F.col("token_out").alias("f_out"),
-        ),
-        "f_hash",
+    best = (
+        tx_info.select("block_number", "tx_index", "tx_hash", "eoa", "mev_contract")
+        .groupBy("block_number")
+        .cogroup(swaps.groupBy("block_number"))
+        .applyInPandas(block_sandwiches, BEST_SCHEMA)
     )
-    backs = swaps.select(
-        F.col("tx_hash").alias("bk_hash"),
-        F.col("pool").alias("b_pool"),
-        F.col("token_in").alias("b_in"),
-        F.col("token_out").alias("b_out"),
-    )
-    reversed_ok = (
-        fronts.join(
-            backs,
-            (F.col("back_hash") == F.col("bk_hash"))
-            & (F.col("f_pool") == F.col("b_pool"))
-            & (F.col("f_in") == F.col("b_out"))
-            & (F.col("f_out") == F.col("b_in")),
-        )
-        .select(*ckeys)
-        .distinct()
-    )
-    front_pools = fronts.select(*ckeys, "f_pool", "f_in").distinct()
-    # back swaps per candidate, keyed for the full-overlap check: a victim
-    # fully overlaps when it swaps OPPOSITE to the back (v_in == back's out)
-    back_opp = (
-        cand.select(*ckeys, "back_hash")
-        .join(
-            backs.select(
-                F.col("bk_hash").alias("back_hash"),
-                F.col("b_pool"),
-                F.col("b_out"),
-            ),
-            "back_hash",
-        )
-        .select(*ckeys, F.col("b_pool").alias("v_pool"), F.col("b_out").alias("v_in"))
-        .distinct()
-    )
-
-    # victims inside the candidate interval = ALL txs between first and back
-    # searcher tx (mod.rs PossibleSandwich victim sets list every in-between
-    # tx), excluding the searcher's own txs; the ≥50% overlap ratio is still
-    # computed over the victims that swap (verify_sandwich_victims)
-    victims = tx_info.select(
-        F.col("block_number").alias("v_block"),
-        F.col("tx_hash").alias("v_hash"),
-        F.col("tx_index").alias("v_index"),
-    ).distinct()
-    searcher_txs = cand.select(
-        *ckeys, F.explode(F.transform("sub_chain", lambda s: s["tx_hash"])).alias("s_hash")
-    )
-    in_interval = (
-        cand.join(
-            victims,
-            (F.col("v_block") == F.col("block_number"))
-            & (F.col("v_index") > F.col("first_index"))
-            & (F.col("v_index") < F.col("back_index")),
-        )
-        .join(
-            searcher_txs.select(*ckeys, F.col("s_hash").alias("v_hash")),
-            [*ckeys, "v_hash"],
-            "left_anti",
-        )
-        .select(*ckeys, "v_hash", "v_index")
-    )
-    all_victims = in_interval.groupBy(*ckeys).agg(
-        F.sort_array(F.collect_set(F.struct("v_index", "v_hash"))).alias(
-            "victim_structs"
-        )
-    )
-    victim_swaps = in_interval.join(
-        swaps.select(
-            F.col("tx_hash").alias("v_hash"),
-            F.col("pool").alias("v_pool"),
-            F.col("token_in").alias("v_in"),
-        ).distinct(),
-        "v_hash",
-    )
-    swap_victim_counts = victim_swaps.groupBy(*ckeys).agg(
-        F.countDistinct("v_hash").alias("n_victims")
-    )
-    front_matched = victim_swaps.join(
-        front_pools.withColumnRenamed("f_pool", "v_pool").withColumnRenamed(
-            "f_in", "v_in"
-        ),
-        [*ckeys, "v_pool", "v_in"],
-        "left_semi",
-    )
-    overlap = front_matched.groupBy(*ckeys).agg(
-        F.countDistinct("v_hash").alias("n_overlap")
-    )
-    # I3c: ≥1 FULL overlap — a victim matching the front direction whose
-    # pool/direction the backrun reverses (v_in == b_out on the same pool)
-    full_overlap = (
-        front_matched.join(back_opp, [*ckeys, "v_pool", "v_in"], "left_semi")
-        .select(*ckeys)
-        .distinct()
-    )
-    validated = (
-        cand.join(reversed_ok, ckeys, "left_semi")
-        .join(full_overlap, ckeys, "left_semi")
-        .join(overlap, ckeys)
-        .join(swap_victim_counts, ckeys)
-        .join(all_victims, ckeys)
-        .filter((F.col("n_victims") > 0) & (F.col("n_overlap") * 2 >= F.col("n_victims")))
-    )
-    # I4: the widest passing trim per segment wins
-    best = keep_largest(
-        validated, ["block_number", "actor", "segment"], F.col("span"), "back_hash"
-    ).cache()
 
     # I5: PnL over the searcher set across the segment's searcher txs; the
     # set spans EVERY chain tx's identity (a multi-EOA contract chain books
@@ -330,64 +201,32 @@ def sandwich_bundles(
         deltas = usd_deltas(action_deltas(actions), dex_prices)
     if gas is None:
         gas = gas_usd(tx_info, block_info)
-    searcher_set = F.array_distinct(
-        F.array_compact(
-            F.concat(
-                F.transform("sub_chain", lambda s: s["eoa"]),
-                F.transform("sub_chain", lambda s: s["mev_contract"]),
-                F.array(F.col("actor")),
-            )
-        )
-    )
-    seg_txs = best.select(
-        "block_number", "actor", "eoa", "mev_contract", "segment",
-        "sub_chain", "front_hashes", "back_hash", "victim_structs",
-        searcher_set.alias("searcher_set"),
-        F.explode(F.transform("sub_chain", lambda s: s["tx_hash"])).alias("tx_hash"),
-    )
+    key = ["block_number", "actor", "segment"]
+    seg_txs = best.select(*key, "searcher_set", F.explode("searcher_txs").alias("tx_hash"))
     rev = (
         seg_txs.join(deltas.select("tx_hash", "address", "usd"), "tx_hash")
         .filter(F.array_contains(F.col("searcher_set"), F.col("address")))
-        .groupBy("block_number", "actor", "segment")
+        .groupBy(*key)
         .agg(F.sum("usd").alias("revenue_usd"))
     )
     gcost = (
         seg_txs.join(gas.select("tx_hash", "gas_usd"), "tx_hash")
-        .groupBy("block_number", "actor", "segment")
+        .groupBy(*key)
         .agg(F.sum("gas_usd").alias("gas_usd"))
     )
-    # tx_hashes in BLOCK order (searcher txs + victims interleaved by
-    # tx_index) — a Big Mac's victims sit between their own frontruns, and
-    # consumers read the array as the block-ordered bundle
-    ordered_hashes = F.transform(
-        F.sort_array(
-            F.concat(
-                F.transform(
-                    "sub_chain",
-                    lambda s: F.struct(
-                        s["tx_index"].alias("v_index"), s["tx_hash"].alias("v_hash")
-                    ),
-                ),
-                F.col("victim_structs"),
-            )
-        ),
-        lambda s: s["v_hash"],
-    )
     return (
-        best.join(rev, ["block_number", "actor", "segment"])
-        .join(gcost, ["block_number", "actor", "segment"])
+        best.join(rev, key)
+        .join(gcost, key)
         .withColumn(
             "profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)")
         )
         .filter(F.col("profit_usd") > 0)
         .select(
             "block_number",
-            ordered_hashes.alias("tx_hashes"),
+            "tx_hashes",
             "eoa",
             "mev_contract",
-            F.when(F.size("front_hashes") > 1, "sandwich:big_mac")
-            .otherwise("sandwich")
-            .alias("mev_type"),
+            "mev_type",
             "profit_usd",
             F.col("revenue_usd").cast("decimal(38,18)").alias("revenue_usd"),
             F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),

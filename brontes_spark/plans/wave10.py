@@ -1848,37 +1848,12 @@ def ml_fold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-composition $17), liquidations.rs:170-208 ($19), jit tests ($4).
 
 
-_INSPECTOR_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _fixture_inspector(spark: SparkSession, fn) -> DataFrame:
-    """Run one inspector over the planted tables at composer parallelism
-    (fixture data is KB-sized; 32-task stages would be pure scheduler
-    overhead — the mev_fixture._composed posture). Memoized per session
-    like _composed: the sandwich DAG alone is ~200 fixed-cost stages, and
-    without the memo every bench run re-pays that scheduling floor (the
-    r9 bench measured 8.1 s of pure overhead per run for i5)."""
+    """Run one inspector over the planted tables."""
     from ..sources.fixtures import load_fixtures
 
-    key = (spark.sparkContext.applicationId, fn.__name__)
-    if key in _INSPECTOR_MEMO:
-        return _INSPECTOR_MEMO[key]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        t = load_fixtures(spark)
-        out = fn(t["actions"], t["tx_info"], t["dex_prices"], t["block_info"])
-        # eager localCheckpoint, NOT cache(): the bench clears the SQL
-        # cache between runs, which would re-run the whole ~200-stage
-        # inspector DAG every run (measured 7-8 s of pure scheduling for
-        # the sandwich DAG); an RDD-layer checkpoint cuts the lineage and
-        # survives catalog.clearCache() — the same reason run_composer's
-        # internal checkpoints keep the composer gate sub-second
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _INSPECTOR_MEMO[key] = out
-    return out
+    t = load_fixtures(spark)
+    return fn(t["actions"], t["tx_info"], t["dex_prices"], t["block_info"])
 
 
 def _bundle_shape(df: DataFrame) -> DataFrame:
@@ -2115,7 +2090,6 @@ def i8_cex_dex_markout(spark: SparkSession, sf_dir: str) -> DataFrame:
             actions, tx_info, dex_prices, block_info, t["cex_trades"]
         )
 
-    run.__name__ = "cex_dex_bundles_markout"
     return _bundle_shape(_fixture_inspector(spark, run))
 
 
@@ -2164,7 +2138,6 @@ def i9_cex_dex_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
             actions, tx_info, dex_prices, block_info, t["cex_quotes"]
         )
 
-    run.__name__ = "cex_dex_bundles_quotes"
     return _bundle_shape(_fixture_inspector(spark, run))
 
 

@@ -101,7 +101,6 @@ def test_cex_dex_markout(tables):
     assert row["profit_usd"] == Decimal("4")
 
 
-@pytest.mark.slow
 def test_sandwich_big_mac(tables):
     b = sandwich_bundles(
         tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
@@ -712,7 +711,6 @@ def test_sandwich_dual_scan_catches_eoa_front_contract_back(spark):
     assert rows[0]["profit_usd"] == Decimal("3")
 
 
-@pytest.mark.slow
 def test_sandwich_multi_eoa_contract_chain_not_fragmented(spark):
     """A contract-keyed chain whose front and back come from DIFFERENT EOAs
     is ONE chain (the old grouping by (actor, eoa) fragmented it below the

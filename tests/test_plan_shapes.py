@@ -46,15 +46,16 @@ def test_snapshot_covers_every_gate():
     assert not any("ERROR" in v for v in SNAPSHOT.values())
 
 
-#: the r9 per-inspector fixture gates run whole inspector DAGs whose
-#: formatted plans count cached-subtree boundaries — and which subtrees
-#: are already InMemoryRelations depends on what ran earlier in the
-#: session (across MANY features at the composite DAGs' size: i5's x_hash
-#: recorded 2289 vs 2298 between a fresh and a warmed session with zero
-#: code change). For these, exact
-#: counts are meaningless; the load-bearing invariants — no cartesian
-#: product, and the same feature KINDS present — are asserted instead.
-#: The gates' VALUES stay hash-pinned by their recomputing oracles.
+#: the per-inspector fixture gates build whole inspector plans over the
+#: planted tables, and their feature counts depend on the test session's
+#: state: whether AQE is on (the testdata loaders turn it back on, so this
+#: depends on test order), and which of their subplans the composer gates
+#: have already cached (`run_composer` caches the actions, deltas and
+#: gas) — i5's x_hash reads 9 with AQE off, 12 with it on, 16 after the
+#: composer gates ran. For these, exact counts are meaningless; the
+#: load-bearing invariants — no cartesian product, and the same feature
+#: KINDS present — are asserted instead. The gates' VALUES stay
+#: hash-pinned by their recomputing oracles.
 SESSION_DEPENDENT = {
     "i5_sandwich_pnl", "i8_cex_dex_markout", "i9_cex_dex_quotes",
     "i10_jit_bundles", "i12_liquidation_bundles",
