@@ -1033,7 +1033,7 @@ def account_for_tax_tokens(actions: DataFrame) -> DataFrame:
     # token: a split-route tx with two A→B swaps would otherwise subtract
     # the combined fee from EVERY leg (N× over-subtraction). Mirrors the
     # reference's per-subtree pairing (tree_pruning.rs:13-120) and the
-    # coverage-dedup in-leg join (inspectors/accounting._covered_transfers).
+    # coverage-dedup in-leg match (inspectors/accounting._covered).
     fees = (
         actions.filter((F.col("action_type") == "transfer") & (F.col("transfer.fee") > 0))
         .groupBy(

@@ -1,4 +1,4 @@
-from .accounting import action_deltas, usd_deltas, gas_usd, searcher_addresses
+from .accounting import action_deltas, usd_deltas, gas_usd
 from .atomic_arb import atomic_arb_bundles
 from .sandwich import sandwich_bundles
 from .jit import jit_bundles
@@ -10,7 +10,6 @@ __all__ = [
     "action_deltas",
     "usd_deltas",
     "gas_usd",
-    "searcher_addresses",
     "atomic_arb_bundles",
     "sandwich_bundles",
     "jit_bundles",

@@ -5,159 +5,110 @@
          swaps.rs:106-117; transfer deltas transfer.rs:31-40)
   A3     USD valuation via per-tx-index DEX price join
          (mev_inspectors/shared_utils.rs:59-119 usd_delta_by_address)
+  A5     bundle PnL over a searcher address set
+         (shared_utils.rs get_bundle_accounting / build_bundle_header)
   A6     gas accounting (tree/root.rs:362-380 gas_paid + coinbase)
 
-Spark shape: each variant contributes a filtered projection exploded to
-delta rows; coverage dedup is an anti-join (T6); valuation is an equi-join
-against `dex_prices` (every tx index is priced in our model, so no as-of
-needed — operators/asof.py provides it where price grids are sparse).
+Spark shape: A1/A2 are one scan of `actions`. A window on `tx_hash`
+collects the tx's swap legs; a transfer is covered when a field-wise
+`exists` finds the swap leg it duplicates; every other action becomes one
+delta array chosen by `action_type`, and one `explode` yields the rows.
+A3 is one equi-join against `dex_prices` (every tx index is priced in our
+model, so no as-of needed — operators/asof.py provides it where price grids
+are sparse). `tx_ledger` folds the USD deltas and the gas rows into one row
+per tx; the composer caches it once and every inspector reads it through
+`bundle_pnl` (one join, one aggregate).
+
+Decimal typing: every delta amount is decimal(38,18), the amount type, so
+no step rounds it (functions/decimals.py). Two products of this typing
+rule stay visible: Spark types `amount + fee` at scale 17 (two
+decimal(38,18) operands leave 21 integer digits), so a transfer's paying
+leg keeps 17 fractional digits, and A3's `amount * price_usd` at scale 6.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 WEI = 10**18
+AMOUNT = "decimal(38,18)"
 
 
-def _covered_transfers(actions: DataFrame) -> DataFrame:
-    """Transfers whose value a swap in the same tx already accounts for
+def _delta(address: Column, token: Column, amount: Column) -> Column:
+    return F.struct(
+        address.alias("address"), token.alias("token"), amount.cast(AMOUNT).alias("amount")
+    )
+
+
+def _covered(transfer: Column, legs: Column) -> Column:
+    """True when a swap of the same tx already accounts for this transfer
     (ActionCmp::is_same_coverage, normalized_actions/comparison.rs:312+):
-    the in-leg (from→pool of token_in/amount_in) and the out-leg
-    (pool→recipient of token_out/amount_out)."""
-    t = actions.filter(F.col("action_type") == "transfer").select(
-        "block_number", "tx_hash", "trace_idx", F.col("transfer.*")
-    )
-    s = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
-        "block_number", "tx_hash", F.col("swap.*")
-    )
-    in_leg = t.join(
-        s,
-        (t["tx_hash"] == s["tx_hash"])
-        & (t["from"] == s["from"])
-        & (t["to"] == s["pool"])
-        & (t["token"] == s["token_in"])
-        & (t["amount"] == s["amount_in"]),
-        "left_semi",
-    )
-    out_leg = t.join(
-        s,
-        (t["tx_hash"] == s["tx_hash"])
-        & (t["from"] == s["pool"])
-        & (t["to"] == s["recipient"])
-        & (t["token"] == s["token_out"])
-        & (t["amount"] == s["amount_out"]),
-        "left_semi",
-    )
-    return in_leg.unionByName(out_leg).select("tx_hash", "trace_idx").distinct()
+    the in-leg (from→pool of token_in/amount_in) or the out-leg
+    (pool→recipient of token_out/amount_out). Compared field by field, so a
+    null field matches nothing: a whole-struct `=` or `array_contains`
+    would treat two nulls as equal."""
+
+    def same(leg: Column) -> Column:
+        t = transfer
+        in_leg = (
+            (t["from"] == leg["from"]) & (t["to"] == leg["pool"])
+            & (t["token"] == leg["token_in"]) & (t["amount"] == leg["amount_in"])
+        )
+        out_leg = (
+            (t["from"] == leg["pool"]) & (t["to"] == leg["recipient"])
+            & (t["token"] == leg["token_out"]) & (t["amount"] == leg["amount_out"])
+        )
+        return in_leg | out_leg
+
+    return F.coalesce(F.exists(legs, same), F.lit(False))
 
 
 def action_deltas(actions: DataFrame) -> DataFrame:
     """(block_number, tx_hash, tx_index, address, token, amount) signed rows."""
-    covered = _covered_transfers(actions)
-    acts = actions.join(covered, ["tx_hash", "trace_idx"], "left_anti")
-
-    def explode_deltas(df: DataFrame, entries) -> DataFrame:
-        return df.select(
-            "block_number",
-            "tx_hash",
-            "tx_index",
-            F.explode(F.array(*[
-                F.struct(a.alias("address"), t.alias("token"), amt.alias("amount"))
-                for (a, t, amt) in entries
-            ])).alias("d"),
-        ).select(
-            "block_number", "tx_hash", "tx_index",
-            "d.address", "d.token", "d.amount",
-        )
-
-    sw = explode_deltas(
-        # swap_with_fee keeps the (fee-adjusted) swap struct — same deltas
-        acts.filter(F.col("action_type").isin("swap", "swap_with_fee")),
-        [
-            (F.col("swap.from"), F.col("swap.token_in"), -F.col("swap.amount_in")),
-            (F.col("swap.recipient"), F.col("swap.token_out"), F.col("swap.amount_out")),
-        ],
+    kind = F.col("action_type")
+    is_swap = kind.isin("swap", "swap_with_fee")
+    legs = F.collect_list(F.when(is_swap, F.col("swap"))).over(W.partitionBy("tx_hash"))
+    # swap_with_fee keeps the (fee-adjusted) swap struct — same deltas
+    s, t, lq = F.col("swap"), F.col("transfer"), F.col("liquidation")
+    swap = F.array(
+        _delta(s["from"], s["token_in"], -s["amount_in"]),
+        _delta(s["recipient"], s["token_out"], s["amount_out"]),
     )
-    tr = explode_deltas(
-        acts.filter(F.col("action_type") == "transfer"),
-        [
-            (
-                F.col("transfer.from"),
-                F.col("transfer.token"),
-                -(F.col("transfer.amount") + F.col("transfer.fee")),
-            ),
-            (F.col("transfer.to"), F.col("transfer.token"), F.col("transfer.amount")),
-        ],
+    transfer = F.array(
+        _delta(t["from"], t["token"], -(t["amount"] + t["fee"])),
+        _delta(t["to"], t["token"], t["amount"]),
     )
     # mint: `from` pays tokens in, the POOL receives them; burn/collect: the
     # POOL pays out, `recipient` receives (falling back to `from` when the
     # decoder saw no distinct recipient) — both sides booked, exactly the
     # reference's per-variant impls (liquidity.rs:34-88 apply_delta pairs)
-    holder = F.when(
-        F.col("action_type") == "mint", F.col("mint_burn_collect.from")
-    ).otherwise(
-        F.coalesce(F.col("mint_burn_collect.recipient"), F.col("mint_burn_collect.from"))
+    m = F.col("mint_burn_collect")
+    mint = kind == "mint"
+    holder = F.when(mint, m["from"]).otherwise(F.coalesce(m["recipient"], m["from"]))
+    mbc = F.flatten(F.transform(
+        F.arrays_zip(m["tokens"].alias("token"), m["amounts"].alias("amt")),
+        lambda z: F.array(
+            _delta(holder, z["token"], F.when(mint, -z["amt"]).otherwise(z["amt"])),
+            _delta(m["pool"], z["token"], F.when(mint, z["amt"]).otherwise(-z["amt"])),
+        ),
+    ))
+    liquidation = F.array(
+        _delta(lq["liquidator"], lq["collateral_asset"], lq["liquidated_collateral"]),
+        _delta(lq["liquidator"], lq["debt_asset"], -lq["covered_debt"]),
     )
-    sign = F.when(F.col("action_type") == "mint", F.lit(-1)).otherwise(F.lit(1))
-    mbc = (
-        acts.filter(F.col("action_type").isin("mint", "burn", "collect"))
-        .select(
-            "block_number",
-            "tx_hash",
-            "tx_index",
-            holder.alias("holder"),
-            F.col("mint_burn_collect.pool").alias("pool"),
-            sign.alias("sign"),
-            F.explode(
-                F.arrays_zip(
-                    F.col("mint_burn_collect.tokens").alias("token"),
-                    F.col("mint_burn_collect.amounts").alias("amt"),
-                )
-            ).alias("z"),
-        )
-        .select(
-            "block_number",
-            "tx_hash",
-            "tx_index",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("holder").alias("address"),
-                        F.col("z.token").alias("token"),
-                        (F.col("sign") * F.col("z.amt")).alias("amount"),
-                    ),
-                    F.struct(
-                        F.col("pool").alias("address"),
-                        F.col("z.token").alias("token"),
-                        (-F.col("sign") * F.col("z.amt")).alias("amount"),
-                    ),
-                )
-            ).alias("d"),
-        )
-        .select(
-            "block_number", "tx_hash", "tx_index",
-            "d.address", "d.token", "d.amount",
-        )
+    entries = (
+        F.when(is_swap, swap)
+        .when((kind == "transfer") & ~_covered(t, F.col("__legs")), transfer)
+        .when(kind.isin("mint", "burn", "collect"), mbc)
+        .when(kind == "liquidation", liquidation)
+    )
+    return (
+        actions.withColumn("__legs", legs)
+        .select("block_number", "tx_hash", "tx_index", F.explode(entries).alias("d"))
+        .select("block_number", "tx_hash", "tx_index", "d.address", "d.token", "d.amount")
         .filter(F.col("address").isNotNull())
     )
-    lq = explode_deltas(
-        acts.filter(F.col("action_type") == "liquidation"),
-        [
-            (
-                F.col("liquidation.liquidator"),
-                F.col("liquidation.collateral_asset"),
-                F.col("liquidation.liquidated_collateral"),
-            ),
-            (
-                F.col("liquidation.liquidator"),
-                F.col("liquidation.debt_asset"),
-                -F.col("liquidation.covered_debt"),
-            ),
-        ],
-    )
-    return sw.unionByName(tr).unionByName(mbc).unionByName(lq)
 
 
 def usd_deltas(deltas: DataFrame, dex_prices: DataFrame) -> DataFrame:
@@ -169,7 +120,7 @@ def usd_deltas(deltas: DataFrame, dex_prices: DataFrame) -> DataFrame:
             ),
             ["block_number", "tx_index", "token"],
         )
-        .withColumn("usd", (F.col("amount") * F.col("price_usd")).cast("decimal(38,18)"))
+        .withColumn("usd", (F.col("amount") * F.col("price_usd")).cast(AMOUNT))
     )
 
 
@@ -178,9 +129,7 @@ def gas_usd(tx_info: DataFrame, block_info: DataFrame) -> DataFrame:
     eth_paid = (
         (F.col("gas_used") * F.col("effective_gas_price")).cast("decimal(38,0)")
         / F.lit(WEI).cast("decimal(19,0)")
-    ).cast("decimal(38,18)") + F.coalesce(
-        F.col("coinbase_transfer"), F.lit(0).cast("decimal(38,18)")
-    )
+    ).cast(AMOUNT) + F.coalesce(F.col("coinbase_transfer"), F.lit(0).cast(AMOUNT))
     return tx_info.join(
         F.broadcast(block_info.select("block_number", "eth_price")), "block_number"
     ).select(
@@ -189,16 +138,66 @@ def gas_usd(tx_info: DataFrame, block_info: DataFrame) -> DataFrame:
         "tx_index",
         "eoa",
         "mev_contract",
-        (eth_paid * F.col("eth_price")).cast("decimal(38,18)").alias("gas_usd"),
+        (eth_paid * F.col("eth_price")).cast(AMOUNT).alias("gas_usd"),
         "priority_fee",
         "is_private",
     )
 
 
-def searcher_addresses(tx_info: DataFrame) -> DataFrame:
-    """Address set attributable to each tx's searcher: eoa + mev contract
-    (+ sibling searchers via the searcher dim, tree/tx_info.rs:84-105)."""
-    return tx_info.select(
-        "tx_hash",
-        F.array_compact(F.array("eoa", "mev_contract")).alias("addresses"),
+def tx_ledger(deltas: DataFrame, gas: DataFrame) -> DataFrame:
+    """One row per tx: its `gas` row plus `deltas`, the tx's (address, usd)
+    entries from `usd_deltas` (empty when it booked none)."""
+    entries = deltas.groupBy("tx_hash").agg(
+        F.collect_list(F.struct("address", "usd")).alias("deltas")
+    )
+    none = F.array().cast(f"array<struct<address:string,usd:{AMOUNT}>>")
+    return gas.join(entries, "tx_hash", "left").withColumn(
+        "deltas", F.coalesce("deltas", none)
+    )
+
+
+def build_ledger(
+    actions: DataFrame, tx_info: DataFrame, dex_prices: DataFrame, block_info: DataFrame
+) -> DataFrame:
+    """`tx_ledger` of A1–A3 and A6 over the inspector tables."""
+    return tx_ledger(usd_deltas(action_deltas(actions), dex_prices), gas_usd(tx_info, block_info))
+
+
+def bundle_pnl(
+    bundles: DataFrame, ledger: DataFrame, key: list[str], txs: Column, searchers: Column
+) -> DataFrame:
+    """A5: each bundle of `bundles` (one row per `key`) with the gas of its
+    `txs` and, as revenue, the USD deltas those txs book to any address of
+    `searchers`. Both columns are evaluated on the bundle row.
+
+    Adds `revenue_usd`, `gas_usd` and `profit_usd` = revenue − gas. A bundle
+    none of whose txs is in the ledger is dropped; one whose txs book no
+    delta to the searcher set keeps a null revenue and profit, which the
+    caller drops or zeroes."""
+    rest = [c for c in bundles.columns if c not in key]
+    # the tx's gas rides as one more entry, so a single explode carries both
+    entries = F.concat(
+        F.array(F.struct(F.col("__gas").alias("gas"), F.lit(None).cast(AMOUNT).alias("usd"))),
+        F.transform(
+            F.filter("__deltas", lambda d: F.array_contains(F.col("__set"), d["address"])),
+            lambda d: F.struct(F.lit(None).cast(AMOUNT).alias("gas"), d["usd"].alias("usd")),
+        ),
+    )
+    per_tx = bundles.select("*", searchers.alias("__set"), F.explode(txs).alias("__tx")).join(
+        ledger.select(
+            F.col("tx_hash").alias("__tx"),
+            F.col("gas_usd").alias("__gas"),
+            F.col("deltas").alias("__deltas"),
+        ),
+        "__tx",
+    )
+    return (
+        per_tx.select(*key, *rest, F.explode(entries).alias("e"))
+        .groupBy(*key)
+        .agg(
+            *[F.first(c).alias(c) for c in rest],
+            F.sum("e.usd").alias("revenue_usd"),
+            F.sum("e.gas").alias("gas_usd"),
+        )
+        .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast(AMOUNT))
     )

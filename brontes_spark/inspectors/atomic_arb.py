@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import searcher_addresses, action_deltas, gas_usd, usd_deltas
+from .accounting import build_ledger, bundle_pnl
 
 MAX_PROFIT_USD = 15_000_000   # mev_inspectors/mod.rs:12
 MIN_PROFIT_USD = -15_000_000  # mev_inspectors/mod.rs:13
@@ -153,8 +153,7 @@ def atomic_arb_bundles(
     dex_prices: DataFrame,
     block_info: DataFrame,
     searcher_info: DataFrame,
-    deltas: DataFrame | None = None,
-    gas: DataFrame | None = None,
+    ledger: DataFrame | None = None,
 ) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
         "block_number", "tx_hash", "tx_index", "trace_idx", F.col("swap.*")
@@ -176,21 +175,6 @@ def atomic_arb_bundles(
         cls["arb_kind"].alias("arb_kind"),
         cls["stable_jump"].alias("stable_jump"),
         F.size("seq").alias("n_swaps"),
-    )
-
-    # searcher revenue = net USD delta of the tx's own eoa/contract addresses
-    if deltas is None:
-        deltas = usd_deltas(action_deltas(actions), dex_prices)
-    if gas is None:
-        gas = gas_usd(tx_info, block_info)
-    addr_sets = searcher_addresses(tx_info).withColumnRenamed(
-        "addresses", "searcher_set"
-    )
-    rev = (
-        deltas.join(addr_sets, "tx_hash")
-        .filter(F.array_contains(F.col("searcher_set"), F.col("address")))
-        .groupBy("tx_hash")
-        .agg(F.sum("usd").alias("revenue_usd"))
     )
 
     # searcher-history dim, joined for both eoa and mev_contract
@@ -220,13 +204,18 @@ def atomic_arb_bundles(
         )
     )
 
+    if ledger is None:
+        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
     priced_tx = _tx_has_dex_price(swaps, dex_prices)
-    flags = tx_info.select("tx_hash", "is_private", "coinbase_transfer")
+    flags = tx_info.select("tx_hash", "eoa", "mev_contract", "is_private", "coinbase_transfer")
 
+    # searcher revenue = net USD delta of the tx's own eoa/contract
+    # addresses; a tx that books none to them has revenue 0
     out = (
-        classified.join(rev, "tx_hash", "left")
-        .join(gas.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
-        .join(flags, "tx_hash")
+        bundle_pnl(
+            classified.join(flags, "tx_hash"), ledger, ["tx_hash"],
+            F.array("tx_hash"), F.array_compact(F.array("eoa", "mev_contract")),
+        )
         .join(priced_tx, "tx_hash", "left")
         .join(h_eoa, "eoa", "left")
         .join(h_ctr, "mev_contract", "left")

@@ -36,7 +36,7 @@ def cex_dex_quotes_bundles(
     block_info: DataFrame,
     cex_quotes: DataFrame,
     quote_token: str = "0xusd",
-    gas: DataFrame | None = None,
+    ledger: DataFrame | None = None,
     exchange: str = "binance",
 ) -> DataFrame:
     """I9 (mev_inspectors/cex_dex/quotes/cex_dex.rs): the quotes variant —
@@ -44,7 +44,6 @@ def cex_dex_quotes_bundles(
     VWAP. Deliberately subordinate to the markout variant in the composer's
     precedence table, mirroring the reference's preference."""
     from ..operators.cex_quotes import quote_at
-    from .accounting import gas_usd as _gas_usd
 
     swaps = actions.filter(
         (F.col("action_type").isin("swap", "swap_with_fee")) & (F.col("swap.token_out") == quote_token)
@@ -70,8 +69,8 @@ def cex_dex_quotes_bundles(
         F.split(F.col("target_id"), "\\|")[1].cast("long").alias("trace_idx"),
         F.col("mid_price").cast("decimal(38,18)").alias("cex_price"),
     ).filter(F.col("cex_price").isNotNull())
-    if gas is None:
-        gas = _gas_usd(tx_info, block_info)
+    if ledger is None:  # only its gas columns are read
+        ledger = gas_usd(tx_info, block_info)
     # whole-swap PnL accrues in quote-token units, then converts to USD at
     # the per-tx-index quote price (the reference values the markout via the
     # quote asset's USD price — a non-USD-pegged quote would otherwise skew
@@ -102,7 +101,7 @@ def cex_dex_quotes_bundles(
         F.sum("revenue_usd").cast("decimal(38,18)").alias("revenue_usd")
     )
     return (
-        priced.join(gas.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
+        priced.join(ledger.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
         .withColumn(
             "profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)")
         )
@@ -135,7 +134,7 @@ def cex_dex_bundles(
     block_info: DataFrame,
     cex_trades: DataFrame,
     quote_token: str = "0xusd",
-    gas: DataFrame | None = None,
+    ledger: DataFrame | None = None,
 ) -> DataFrame:
     """I8: per swap, the GLOBAL (all-exchange) expanding-window VWAP and one
     leg per exchange (process_global_vwam / process_per_exchange,
@@ -203,8 +202,8 @@ def cex_dex_bundles(
         F.concat(F.lit("ex:"), F.split(F.col("anchor_id"), "\\|")[2]).alias("leg"),
     )
     vwap = global_vwap.unionByName(ex_vwap)
-    if gas is None:
-        gas = gas_usd(tx_info, block_info)
+    if ledger is None:  # only its gas columns are read
+        ledger = gas_usd(tx_info, block_info)
     qprices = dex_prices.filter(F.col("token") == quote_token).select(
         F.col("block_number").alias("d_block"),
         F.col("tx_idx").alias("d_idx"),
@@ -252,7 +251,7 @@ def cex_dex_bundles(
         F.sum("revenue_usd").cast("decimal(38,18)").alias("revenue_usd")
     )
     return (
-        priced.join(gas.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
+        priced.join(ledger.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
         .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
         .filter(F.col("revenue_usd") > 0)
         .select(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .accounting import action_deltas, gas_usd, usd_deltas
+from .accounting import build_ledger, bundle_pnl
 
 
 def jit_bundles(
@@ -19,8 +19,7 @@ def jit_bundles(
     tx_info: DataFrame,
     dex_prices: DataFrame,
     block_info: DataFrame,
-    deltas: DataFrame | None = None,
-    gas: DataFrame | None = None,
+    ledger: DataFrame | None = None,
 ) -> DataFrame:
     mbc = actions.filter(F.col("action_type").isin("mint", "burn")).select(
         "block_number", "tx_hash", "tx_index", "action_type",
@@ -93,31 +92,15 @@ def jit_bundles(
         )
     )
 
-    if deltas is None:
-        deltas = usd_deltas(action_deltas(actions), dex_prices)
-    if gas is None:
-        gas = gas_usd(tx_info, block_info)
-    pair_txs = with_victims.select(
-        "block_number", "actor", "eoa", "mev_contract",
-        "front_hash", "back_hash", "victim_hashes",
-        F.explode(F.array("front_hash", "back_hash")).alias("tx_hash"),
-    )
-    searcher_set = F.array_compact(F.array("eoa", "mev_contract", F.col("actor")))
-    rev = (
-        pair_txs.join(deltas.select("tx_hash", "address", "usd"), "tx_hash")
-        .filter(F.array_contains(searcher_set, F.col("address")))
-        .groupBy("block_number", "actor", "front_hash", "back_hash")
-        .agg(F.sum("usd").alias("revenue_usd"))
-    )
-    gcost = (
-        pair_txs.join(gas.select("tx_hash", "gas_usd"), "tx_hash")
-        .groupBy("block_number", "actor", "front_hash", "back_hash")
-        .agg(F.sum("gas_usd").alias("gas_usd"))
-    )
+    if ledger is None:
+        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
     return (
-        with_victims.join(rev, ["block_number", "actor", "front_hash", "back_hash"])
-        .join(gcost, ["block_number", "actor", "front_hash", "back_hash"])
-        .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
+        bundle_pnl(
+            with_victims, ledger, ["block_number", "actor", "front_hash", "back_hash"],
+            F.array("front_hash", "back_hash"),
+            F.array_compact(F.array("eoa", "mev_contract", "actor")),
+        )
+        .filter(F.col("revenue_usd").isNotNull())
         .select(
             "block_number",
             F.concat(
@@ -127,7 +110,7 @@ def jit_bundles(
             "mev_contract",
             F.lit("jit").alias("mev_type"),
             "profit_usd",
-            F.col("revenue_usd").cast("decimal(38,18)").alias("revenue_usd"),
-            F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),
+            "revenue_usd",
+            "gas_usd",
         )
     )

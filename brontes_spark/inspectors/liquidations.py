@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import action_deltas, gas_usd, searcher_addresses, usd_deltas
+from .accounting import build_ledger, bundle_pnl
 
 
 def liquidation_bundles(
@@ -16,36 +16,26 @@ def liquidation_bundles(
     tx_info: DataFrame,
     dex_prices: DataFrame,
     block_info: DataFrame,
-    deltas: DataFrame | None = None,
-    gas: DataFrame | None = None,
+    ledger: DataFrame | None = None,
 ) -> DataFrame:
     # ONE bundle per tx (the reference emits one per TxInfo,
     # liquidations.rs:56-76): a tx with liquidation actions by several
     # liquidator addresses must not fan out into per-liquidator bundles
     # each charged the tx's full gas. Revenue accrues to the tx's searcher
     # address set (eoa + mev_contract — collect_address_set_for_accounting).
-    liq_txs = (
-        actions.filter(F.col("action_type") == "liquidation")
-        .select("block_number", "tx_hash")
-        .distinct()
+    if ledger is None:
+        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
+    liq_txs = ledger.select("block_number", "tx_hash", "eoa", "mev_contract").join(
+        actions.filter(F.col("action_type") == "liquidation").select("tx_hash"),
+        "tx_hash",
+        "left_semi",
     )
-    if deltas is None:
-        deltas = usd_deltas(action_deltas(actions), dex_prices)
-    searchers = searcher_addresses(tx_info).withColumnRenamed(
-        "addresses", "searcher_set"
-    )
-    rev = (
-        liq_txs.join(deltas, ["block_number", "tx_hash"])
-        .join(searchers, "tx_hash")
-        .filter(F.array_contains(F.col("searcher_set"), F.col("address")))
-        .groupBy("block_number", "tx_hash")
-        .agg(F.sum("usd").alias("revenue_usd"))
-    )
-    if gas is None:
-        gas = gas_usd(tx_info, block_info)
     return (
-        rev.join(gas.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
-        .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
+        bundle_pnl(
+            liq_txs, ledger, ["tx_hash"],
+            F.array("tx_hash"), F.array_compact(F.array("eoa", "mev_contract")),
+        )
+        .filter(F.col("revenue_usd").isNotNull())
         .select(
             "block_number",
             F.array("tx_hash").alias("tx_hashes"),
@@ -53,7 +43,7 @@ def liquidation_bundles(
             "mev_contract",
             F.lit("liquidation").alias("mev_type"),
             "profit_usd",
-            F.col("revenue_usd").cast("decimal(38,18)").alias("revenue_usd"),
-            F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),
+            "revenue_usd",
+            "gas_usd",
         )
     )

@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import action_deltas, gas_usd, usd_deltas
+from .accounting import build_ledger, bundle_pnl
 
 MAX_SHRINK = 6
 
@@ -181,8 +181,7 @@ def sandwich_bundles(
     tx_info: DataFrame,
     dex_prices: DataFrame,
     block_info: DataFrame,
-    deltas: DataFrame | None = None,
-    gas: DataFrame | None = None,
+    ledger: DataFrame | None = None,
 ) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
         "block_number", "tx_hash", "swap.pool", "swap.token_in", "swap.token_out"
@@ -197,38 +196,16 @@ def sandwich_bundles(
     # I5: PnL over the searcher set across the segment's searcher txs; the
     # set spans EVERY chain tx's identity (a multi-EOA contract chain books
     # all its EOAs' deltas, like collect_address_set_for_accounting per tx)
-    if deltas is None:
-        deltas = usd_deltas(action_deltas(actions), dex_prices)
-    if gas is None:
-        gas = gas_usd(tx_info, block_info)
-    key = ["block_number", "actor", "segment"]
-    seg_txs = best.select(*key, "searcher_set", F.explode("searcher_txs").alias("tx_hash"))
-    rev = (
-        seg_txs.join(deltas.select("tx_hash", "address", "usd"), "tx_hash")
-        .filter(F.array_contains(F.col("searcher_set"), F.col("address")))
-        .groupBy(*key)
-        .agg(F.sum("usd").alias("revenue_usd"))
-    )
-    gcost = (
-        seg_txs.join(gas.select("tx_hash", "gas_usd"), "tx_hash")
-        .groupBy(*key)
-        .agg(F.sum("gas_usd").alias("gas_usd"))
-    )
+    if ledger is None:
+        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
     return (
-        best.join(rev, key)
-        .join(gcost, key)
-        .withColumn(
-            "profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)")
+        bundle_pnl(
+            best, ledger, ["block_number", "actor", "segment"],
+            F.col("searcher_txs"), F.col("searcher_set"),
         )
         .filter(F.col("profit_usd") > 0)
         .select(
-            "block_number",
-            "tx_hashes",
-            "eoa",
-            "mev_contract",
-            "mev_type",
-            "profit_usd",
-            F.col("revenue_usd").cast("decimal(38,18)").alias("revenue_usd"),
-            F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),
+            "block_number", "tx_hashes", "eoa", "mev_contract", "mev_type",
+            "profit_usd", "revenue_usd", "gas_usd",
         )
     )

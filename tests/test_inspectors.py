@@ -440,6 +440,7 @@ def test_propeller_solver_contract_tag(spark):
     a profitable tx whose mev_contract carries the tag counts as searcher
     activity even with no searcher_info row for its EOA."""
     from brontes_spark.classify import protocol_searcher_tags
+    from brontes_spark.inspectors.accounting import tx_ledger
     from brontes_spark.inspectors.composer import searcher_activity_bundles
 
     SOLVER = "0xsolver"
@@ -465,7 +466,7 @@ def test_propeller_solver_contract_tag(spark):
         "tx_hash string, gas_usd decimal(38,18)",
     )
     out = searcher_activity_bundles(
-        claimed, tx_info, searcher_info, deltas, gas, searcher_contracts=tags
+        claimed, tx_info, searcher_info, tx_ledger(deltas, gas), searcher_contracts=tags
     ).collect()
     # only the solver-contract tx qualifies; the untagged profitable tx does not
     assert len(out) == 1

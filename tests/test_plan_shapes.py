@@ -50,9 +50,9 @@ def test_snapshot_covers_every_gate():
 #: planted tables, and their feature counts depend on the test session's
 #: state: whether AQE is on (the testdata loaders turn it back on, so this
 #: depends on test order), and which of their subplans the composer gates
-#: have already cached (`run_composer` caches the actions, deltas and
-#: gas) — i5's x_hash reads 9 with AQE off, 12 with it on, 16 after the
-#: composer gates ran. For these, exact counts are meaningless; the
+#: have already cached (`run_composer` caches the actions and the
+#: per-tx ledger) — i5's x_hash once read 9 with AQE off, 12 with it on,
+#: 16 after the composer gates ran. For these, exact counts are meaningless; the
 #: load-bearing invariants — no cartesian product, and the same feature
 #: KINDS present — are asserted instead. The gates' VALUES stay
 #: hash-pinned by their recomputing oracles.
