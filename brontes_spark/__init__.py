@@ -16,7 +16,8 @@ Layout:
                 delta accounting, expanding-window VWAP, similarity search
   plans       — named query plans with DuckDB-oracle SQL twins (driver gate)
   inspectors  — MEV inspector queries over the FIXTURES.md action model
-  streaming   — chain-tip mode (Structured Streaming) equivalents
+  cli         — the `run` / `db` / `corpus` command line (batch range
+                analysis; tip mode is not implemented)
 """
 
 __version__ = "0.1.0"

@@ -751,8 +751,8 @@ def lift_delegated_logs(traces: DataFrame) -> DataFrame:
     (merged after R's own logs, as in logs.rs:215-221 merged_logs).
 
     Spark shape: an equi-join on tx_hash with a trace-address prefix
-    post-filter (same pattern as operators/intervals.py) — per-tx frames are
-    small, so the shuffle is keyed and skew-free at any scale."""
+    post-filter — per-tx frames are small, so the shuffle is keyed and
+    skew-free at any scale."""
     roots = traces.select(
         "tx_hash",
         F.col("trace_idx").alias("__r_idx"),

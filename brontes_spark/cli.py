@@ -4,7 +4,9 @@ The reference ships one binary with two families of entry points:
 
   * ``brontes run``  — historical block-range analysis, or tip-following
     streaming when no end block is given (``bin/src/cli/run.rs:108-220``,
-    ``bin/src/executors/tip.rs:23-155``).
+    ``bin/src/executors/tip.rs:23-155``). Here ``run`` is range analysis
+    only: without ``--end-block`` it analyzes up to the last landed block;
+    tip mode is not implemented.
   * ``brontes db``   — ``init`` / ``query`` / ``export`` / ``table-stats`` /
     ``clear`` ad-hoc table tooling (``bin/src/cli/db/mod.rs``,
     ``db/db_query.rs:12-60``).
@@ -112,9 +114,9 @@ def cmd_db_init(args: argparse.Namespace) -> int:
 def cmd_run(args: argparse.Namespace) -> int:
     """Historical range analysis (run.rs): filter inputs to [start, end),
     run the full inspector/composer pipeline, write results + searcher stats.
-    With no --end-block the reference switches to tip mode; here that maps to
-    streaming/tip.tip_stream over the same batch functions (left to jobs —
-    the CLI stays batch, matching `db`-style one-shot semantics)."""
+    With no --end-block the reference switches to tip mode; here the run
+    analyzes every landed block from --start-block on and exits. Tip mode
+    is not implemented."""
     spark = _spark(args)
     from .inspectors.composer import run_composer
     from .sources.sinks import searcher_stats, write_partitioned

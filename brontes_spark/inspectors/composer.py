@@ -207,8 +207,10 @@ def dedup_by_precedence(bundles: DataFrame) -> DataFrame:
     return b.join(dominated, "bundle_id", "left_anti").drop("bundle_id", "priority")
 
 
-def mev_block_header(bundles: DataFrame, tx_info: DataFrame, block_info: DataFrame) -> DataFrame:
-    """O4: per-block rollup (composer/utils.rs build_mev_header)."""
+def mev_block_header(bundles: DataFrame, ledger: DataFrame, block_info: DataFrame) -> DataFrame:
+    """O4: per-block rollup (composer/utils.rs build_mev_header). The
+    builder's gas take and tx count come from the per-tx `ledger` (one row
+    per `gas_usd` row)."""
     per_block = bundles.groupBy("block_number").agg(
         F.count(F.lit(1)).alias("n_bundles"),
         F.sum("profit_usd").cast("decimal(38,18)").alias("total_profit_usd"),
@@ -216,8 +218,7 @@ def mev_block_header(bundles: DataFrame, tx_info: DataFrame, block_info: DataFra
         F.sum("gas_usd").cast("decimal(38,18)").alias("total_bribe_usd"),
         F.sort_array(F.collect_list("mev_type")).alias("mev_types"),
     )
-    gas = gas_usd(tx_info, block_info)
-    builder_take = gas.groupBy("block_number").agg(
+    builder_take = ledger.groupBy("block_number").agg(
         F.sum("gas_usd").cast("decimal(38,18)").alias("builder_gas_usd"),
         F.count(F.lit(1)).alias("n_txs"),
     )
@@ -519,5 +520,5 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         searcher_contracts=tags,
     )
     final = deduped.unionByName(activity).orderBy("block_number", "mev_type")
-    header = mev_block_header(final, tables["tx_info"], tables["block_info"])
+    header = mev_block_header(final, ledger, tables["block_info"])
     return {"bundles": final, "mev_blocks": header}

@@ -55,10 +55,8 @@ def first_digit(cents: Column) -> Column:
 
 def digit_counts(df: DataFrame, cents_col: str) -> DataFrame:
     """(digit, n_obs) over positive values — the data-sized half of the
-    screen, and a NATIVE streaming aggregate (counting is commutative/
-    associative: apply to a readStream frame in update mode and the
-    latest emission per digit is the batch count of the stream's prefix —
-    the streaming/drift.py posture; streaming/benford.py wraps this)."""
+    screen (counting is commutative/associative, so partial counts merge
+    by sum)."""
     return (
         df.filter(F.col(cents_col) > 0)
         .select(first_digit(F.col(cents_col)).alias("digit"))
@@ -69,8 +67,7 @@ def digit_counts(df: DataFrame, cents_col: str) -> DataFrame:
 
 def benford_report(obs: DataFrame) -> DataFrame:
     """(digit, n_obs, p9, chi2_9) from a (digit, n_obs) counts relation —
-    the bounded 9-row tail of the screen, shared by the batch operator
-    and the streaming foreachBatch scorer."""
+    the bounded 9-row tail of the screen."""
     p9_dim = F.broadcast(
         obs.sparkSession.createDataFrame(
             sorted(BENFORD_P9.items()), "digit long, p9 long"

@@ -35,8 +35,8 @@ sequentializes the scan (no prefix closed form exists). This operator is
 the non-resetting form — alarm ROWS are all rows above h, and the
 summary reports first-crossing time + time-above-threshold, which is
 what a monitoring surface wants. A resetting variant would be an
-applyInPandasWithState fold (the streaming/sessionize.py pattern);
-deliberately not built until something needs it.
+applyInPandasWithState fold; deliberately not built until something
+needs it.
 """
 
 from __future__ import annotations

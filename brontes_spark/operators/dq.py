@@ -11,9 +11,7 @@ Check shapes, all aggregate-only or anti-join:
   * unique(cols)        — groupBy(cols) HAVING count > 1, SUM(extra copies)
   * not_null(col)       — count of NULL rows
   * accepted(col, vals) — count outside the literal IN-list
-  * foreign_key(child)  — left ANTI join against the parent key (batch
-                          side of the same check streaming/dedup enforces
-                          online)
+  * foreign_key(child)  — left ANTI join against the parent key
   * in_range(col, lo,hi)— count outside [lo, hi]
 
 Scale shape: each check is one scan + one aggregate (anti-join for FK,

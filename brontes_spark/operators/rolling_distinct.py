@@ -17,7 +17,7 @@ clip to the observed [min_day, max_day] span (no phantom trailing days).
 
 At 100 TB the W-explode of active-key-days is the honest cost; when W
 grows past ~90 the HLL-merge formulation (sketch per (key-set, day),
-merge W sketches per report day — streaming/hll.py machinery) is the
+merge W sketches per report day, operators/sketches.py) is the
 approximate swap-in with W-independent shuffle. Both shapes documented;
 this operator is the exact one.
 """

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.decimals import to_dbl
-from ..inspectors.composer import mev_block_header, run_composer
+from ..inspectors.composer import run_composer
 from ..sources.fixtures import load_fixtures
 from .registry import register
 
@@ -125,9 +125,7 @@ def mev_composer_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="O4 MevBlock header build (composer/utils.rs:15-242)",
 )
 def mev_block_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables, out = _composed(spark)
-    header = mev_block_header(out["bundles"], tables["tx_info"], tables["block_info"])
-    return header.select(
+    return _composed(spark)[1]["mev_blocks"].select(
         "block_number", "n_bundles",
         to_dbl("total_profit_usd").alias("total_profit_usd"),
         to_dbl("builder_gas_usd").alias("builder_gas_usd"),

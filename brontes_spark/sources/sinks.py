@@ -6,10 +6,10 @@
     block-range bucket so downstream range queries prune partitions.
   * searcher_stats — S10 (processors/mev.rs:111-148): the reference upserts
     per-searcher bundle stats into libmdbx. Two Spark-native formulations:
-    the batch path recomputes from the full bundles table, and the tip-mode
-    path (searcher_block_stats / upsert_searcher_block_stats /
-    searcher_stats_rollup) keeps block-grain stats and replaces only the
-    micro-batch's blocks — replay-idempotent MERGE semantics without
+    the batch path recomputes from the full bundles table, and the
+    incremental path (searcher_block_stats / upsert_searcher_block_stats /
+    searcher_stats_rollup) keeps block-grain stats and replaces only a new
+    batch's blocks — replay-idempotent MERGE semantics without
     re-aggregating history.
 """
 
@@ -56,9 +56,9 @@ def write_partitioned(df: DataFrame, path: str, block_col: str = "block_number")
 def searcher_block_stats(bundles: DataFrame) -> DataFrame:
     """S10 merge grain: per-(eoa, block_number, mev_family) bundle stats.
 
-    This is the unit the incremental path upserts by BLOCK: in tip mode a
-    block's bundles land atomically in one micro-batch (processors/mev.rs
-    processes per block), so replacing a block's rows wholesale is both
+    This is the unit the incremental path upserts by BLOCK: a block's
+    bundles land together in one batch (processors/mev.rs processes per
+    block), so replacing a block's rows wholesale is both
     incremental and replay-idempotent — no engine MERGE support needed."""
     return (
         bundles.withColumn("mev_family", F.split("mev_type", ":")[0])
@@ -73,7 +73,7 @@ def searcher_block_stats(bundles: DataFrame) -> DataFrame:
 
 def upsert_searcher_block_stats(prev: DataFrame, batch_bundles: DataFrame) -> DataFrame:
     """S10 incremental upsert (processors/mev.rs:111-148): replace the stats
-    rows of every block present in the micro-batch, keep all other blocks.
+    rows of every block present in the batch, keep all other blocks.
 
     Idempotent: re-running the same batch recomputes identical rows for the
     same blocks. Cost is O(batch) recompute + an anti-join against prev on

@@ -1,6 +1,6 @@
 """Unit tests for the operator kernel on hand-built frames with
-hand-computed expectations (SURVEY.md §5 layer-3 analog:
-tree-operation structural tests, tree/mod.rs:373-443)."""
+hand-computed expectations: as-of join, expanding VWAP, dedup windows,
+OHLC downsampling and weighted percentiles."""
 
 from __future__ import annotations
 
@@ -10,57 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from brontes_spark.operators.asof import asof_join
-from brontes_spark.operators.intervals import absorb_children, collect_spans, subtree_bounds
 from brontes_spark.operators.vwap import expanding_vwap
 from brontes_spark.operators.windows import keep_largest, window_dedup
-
-
-@pytest.fixture(scope="module")
-def tree_df(spark):
-    # one tx mirroring an EVM call tree:
-    #   0 []        flash_loan
-    #   1 [0]       swap
-    #   2 [0,0]     transfer        (inside the swap)
-    #   3 [1]       swap
-    #   4 []-sibling second root-level action
-    rows = [
-        ("0xt1", 0, [], "flash_loan"),
-        ("0xt1", 1, [0], "swap"),
-        ("0xt1", 2, [0, 0], "transfer"),
-        ("0xt1", 3, [1], "swap"),
-        ("0xt2", 0, [], "transfer"),
-    ]
-    return spark.createDataFrame(
-        rows, "tx_hash string, trace_idx long, trace_address array<int>, action_type string"
-    )
-
-
-def test_subtree_bounds(tree_df):
-    b = {
-        (r["tx_hash"], r["trace_idx"]): r["subtree_end"]
-        for r in subtree_bounds(tree_df).collect()
-    }
-    assert b[("0xt1", 0)] == 3  # root spans everything
-    assert b[("0xt1", 1)] == 2  # swap at [0] owns the nested transfer
-    assert b[("0xt1", 2)] == 2
-    assert b[("0xt1", 3)] == 3
-    assert b[("0xt2", 0)] == 0
-
-
-def test_collect_spans(tree_df):
-    spans = collect_spans(tree_df, ["swap", "transfer"], mode="all").collect()
-    # roots whose subtree holds both a swap and a transfer: idx 0 and idx 1
-    got = {(r["tx_hash"], r["trace_idx"]) for r in spans}
-    assert got == {("0xt1", 0), ("0xt1", 1)}
-
-
-def test_absorb_children(tree_df):
-    out = absorb_children(tree_df, ["flash_loan"], ["swap", "transfer"])
-    rows = {(r["tx_hash"], r["trace_idx"]): r for r in out.collect()}
-    # children absorbed into the flash loan and pruned from the top level
-    assert ("0xt1", 1) not in rows and ("0xt1", 3) not in rows
-    assert rows[("0xt1", 0)]["child_idxs"] == [1, 2, 3]
-    assert rows[("0xt2", 0)]["child_idxs"] == []  # untouched sibling tx
 
 
 def test_asof_join_semantics(spark):

@@ -391,77 +391,6 @@ def test_feature_hash_embed_equals_python_mirror(spark):
     assert got == want
 
 
-def test_subtree_bounds_window_equals_join_on_random_trees(spark):
-    """Property behind the round-6 quadratic fix: on preorder traces the
-    O(n*depth) window formulation of subtree_bounds returns exactly the
-    prefix-self-join answer, over random multi-tx call trees."""
-    import random
-
-    from brontes_spark.operators.intervals import subtree_bounds
-
-    rng = random.Random(41)
-    rows = []
-    for tx in range(12):
-        # random tree emitted in preorder: unique paths, single root
-        paths: list[list[int]] = []
-
-        def emit(path: list[int], budget: list[int], depth: int) -> None:
-            paths.append(path)
-            if depth >= 6:
-                return
-            for child in range(rng.randrange(0, 4)):
-                if budget[0] <= 0:
-                    return
-                budget[0] -= 1
-                emit(path + [child], budget, depth + 1)
-
-        emit([], [rng.randrange(1, 40)], 0)
-        for idx, path in enumerate(paths):
-            rows.append((f"tx{tx}", idx, path))
-    df = spark.createDataFrame(
-        rows, "tx_hash string, trace_idx long, trace_address array<int>"
-    )
-    want = {
-        (r["tx_hash"], r["trace_idx"]): r["subtree_end"]
-        for r in subtree_bounds(df, method="join").collect()
-    }
-    got = {
-        (r["tx_hash"], r["trace_idx"]): r["subtree_end"]
-        for r in subtree_bounds(df, method="window").collect()
-    }
-    assert got == want
-    assert len(got) == len(rows)
-
-
-def test_subtree_bounds_window_depth_guard(spark):
-    import pytest
-
-    from brontes_spark.operators.intervals import subtree_bounds
-
-    # a VALID DFS preorder (every parent precedes its child) that simply
-    # exceeds max_depth — since round 7 the preorder validation runs
-    # first, so an invalid fixture would trip THAT guard instead
-    rows = [
-        ("t", 0, []),
-        ("t", 1, [0]),
-        ("t", 2, [0, 0]),
-        ("t", 3, [0, 0, 0]),
-    ]
-    df = spark.createDataFrame(
-        rows, "tx_hash string, trace_idx long, trace_address array<int>"
-    )
-    with pytest.raises(Exception, match="deeper than max_depth"):
-        subtree_bounds(df, method="window", max_depth=2).collect()
-    # and the new guard itself: a non-preorder idx ordering raises unless
-    # validate=False or method='join'
-    bad = spark.createDataFrame(
-        [("t", 0, []), ("t", 1, [0, 0, 0])],
-        "tx_hash string, trace_idx long, trace_address array<int>",
-    )
-    with pytest.raises(Exception, match="not a DFS preorder"):
-        subtree_bounds(bad, method="window", max_depth=8).collect()
-
-
 def test_kmv_sketch_accuracy_merge_and_exact_fallback(spark):
     """KMV invariants: (a) groups under k report EXACT counts; (b) the
     estimate lands within the ~1/sqrt(k) error band on a 5k-distinct

@@ -1,47 +1,16 @@
-"""Tip-mode streaming + sink tests: the historical batch pipeline must run
-unchanged inside foreachBatch (SURVEY.md §3.2), and the sinks must
-round-trip with partition pruning."""
+"""Sink tests: the partitioned writes round-trip with partition pruning, and
+searcher stats agree between the full recompute and the incremental
+block-grain upsert."""
 
 from __future__ import annotations
 
 import tempfile
 from decimal import Decimal
 
-import pytest
 from pyspark.sql import functions as F
 
 from brontes_spark.sources.fixtures import load_fixtures
 from brontes_spark.sources.sinks import searcher_stats, write_partitioned
-from brontes_spark.streaming.tip import tip_stream
-
-
-def test_tip_stream_runs_batch_pipeline(spark):
-    tables = load_fixtures(spark)
-    with tempfile.TemporaryDirectory() as tmp:
-        actions_dir, ckpt = f"{tmp}/actions", f"{tmp}/ckpt"
-        # land each block as its own file — the tip produces one block at a time
-        tables["actions"].repartition("block_number").write.parquet(actions_dir)
-
-        seen: list[tuple[int, int]] = []
-
-        def process(batch_df, batch_id):
-            # the identical batch operators run per micro-batch
-            per_block = (
-                batch_df.groupBy("block_number")
-                .agg(F.count(F.lit(1)).alias("n_actions"))
-                .collect()
-            )
-            seen.extend((r["block_number"], r["n_actions"]) for r in per_block)
-
-        q = tip_stream(spark, actions_dir, ckpt, process)
-        q.awaitTermination(120)
-        totals = {}
-        for bn, n in seen:
-            totals[bn] = totals.get(bn, 0) + n
-        assert totals == {
-            100: 6, 101: 4, 102: 3, 103: 1, 104: 1,
-            107: 5, 108: 6, 109: 5, 110: 1,
-        }
 
 
 def test_write_partitioned_and_prune(spark):
