@@ -33,11 +33,25 @@ I7 — validation heuristics (atomic_arb.rs:169-232, 341-397):
 (`is_searcher_of_type_with_count_threshold`, checked for both eoa and
 mev_contract); "labelled" is an explicit atomic_arb label on the searcher
 dim (`is_labelled_searcher_of_type`).
+
+I6 runs as ONE pass per block, like the reference's walk over a block's tx
+list (run per block by composer/mod.rs:71-120): `tx_info`, and the swap
+actions together with the DEX price keys, cogroup on `block_number`, and
+`block_arbs` walks each block in plain Python. It sorts each tx's swaps by
+trace_idx, classifies the sequence (`classify_seq`) and decides
+`has_dex_price`. A null token matches nothing, as in the accounting's
+coverage rule: a null endpoint does not close the sequence, and a null
+link breaks the chain. I7 stays in Spark columns, after the PnL.
+
+Scale: one shuffle of `tx_info` and of the swaps plus price keys on
+`block_number`. The walk sorts each tx's swaps once, so its cost per
+block is bounded by block size at any range length.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .accounting import build_ledger, bundle_pnl
@@ -54,97 +68,97 @@ USD_STABLES = [
 ]
 EURO_STABLES = ["EURS", "EURT", "AGEUR", "EURE", "CEUR", "EUROC"]
 GOLD_STABLES = ["PAXG", "XAUT"]
+_STABLE_CLASS = {
+    sym: cls
+    for cls, syms in (("usd", USD_STABLES), ("euro", EURO_STABLES), ("gold", GOLD_STABLES))
+    for sym in syms
+}
+
+#: one row per tx with ≥2 swaps
+ARB_SCHEMA = (
+    "block_number long, tx_hash string, eoa string, mev_contract string, "
+    "arb_kind string, stable_jump boolean, has_dex_price boolean"
+)
+_ARB_COLS = [f.split()[0] for f in ARB_SCHEMA.split(", ")]
 
 
-def _stable_class(tok: Column) -> Column:
-    up = F.upper(tok)
-    return (
-        F.when(up.isin(USD_STABLES), "usd")
-        .when(up.isin(EURO_STABLES), "euro")
-        .when(up.isin(GOLD_STABLES), "gold")
+def _stable_class(tok: str | None) -> str | None:
+    return _STABLE_CLASS.get(tok.upper()) if tok is not None else None
+
+
+def _is_stable_pair(a: str | None, b: str | None) -> bool:
+    """is_stable_pair (atomic_arb.rs:425-435); a null token has no class."""
+    ca = _stable_class(a)
+    return ca is not None and ca == _stable_class(b)
+
+
+def classify_seq(seq: list[tuple]) -> tuple[str, bool]:
+    """(arb_kind, stable_jump) of a tx's swaps `seq`, (token_in, token_out)
+    pairs in trace order (≥2): is_possible_arb + identify_arb_sequence. A
+    null token matches nothing, so a null endpoint does not close the
+    sequence and a null link breaks the chain."""
+    first_in, last_out = seq[0][0], seq[-1][1]
+    closes = first_in is not None and first_in == last_out
+    # the first swap that does not take in what the swap before it gave
+    # out (0 = chained)
+    jump = next(
+        (k for k in range(1, len(seq)) if seq[k - 1][1] is None or seq[k - 1][1] != seq[k][0]),
+        0,
     )
+    # the jump legs for is_stable_arb (atomic_arb.rs:384-396)
+    stable_jump = jump > 0 and _is_stable_pair(seq[jump - 1][1], seq[jump][0])
+    if not closes:
+        kind = "stablecoin" if _is_stable_pair(first_in, last_out) else "long_tail"
+    elif not jump:
+        kind = "triangle"
+    elif len(seq) == 2 and stable_jump:
+        kind = "stablecoin"
+    else:
+        kind = "cross_pair"
+    return kind, kind == "cross_pair" and stable_jump
 
 
-def _is_stable_pair(a: Column, b: Column) -> Column:
-    ca, cb = _stable_class(a), _stable_class(b)
-    return ca.isNotNull() & (ca == cb)
+def _nulls_first(row: tuple) -> tuple:
+    return tuple((v is not None, v) for v in row)
 
 
-def _classify_seq() -> Column:
-    """arb_kind over the collected `seq` array (struct trace_idx, token_in,
-    token_out, pool) — column form of is_possible_arb +
-    identify_arb_sequence."""
-    n = F.size("seq")
-    first, last = F.element_at("seq", 1), F.element_at("seq", -1)
-    closes = first["token_in"] == last["token_out"]
-    # breaks[i] true ⇔ chain broken entering swap i+1 (0 = none)
-    breaks = F.zip_with(
-        F.slice("seq", 1, n - 1),
-        F.slice("seq", 2, n - 1),
-        lambda a, b: a["token_out"] != b["token_in"],
-    )
-    jump = F.array_position(breaks, F.lit(True))
-    chained = jump == 0
-    # the jump legs for is_stable_arb (atomic_arb.rs:384-396):
-    # swaps[jump-1].token_out / swaps[jump].token_in (0-based reference
-    # indexing; element_at is 1-based so jump / jump+1)
-    stable_jump = _is_stable_pair(
-        F.element_at("seq", jump.cast("int"))["token_out"],
-        F.element_at("seq", (jump + 1).cast("int"))["token_in"],
-    )
-    two = (
-        F.when(closes & chained, "triangle")
-        .when(closes & stable_jump, "stablecoin")
-        .when(closes, "cross_pair")
-        .when(_is_stable_pair(first["token_in"], last["token_out"]), "stablecoin")
-        .otherwise("long_tail")
-    )
-    many = (
-        F.when(
-            ~closes,
-            F.when(
-                _is_stable_pair(first["token_in"], last["token_out"]), "stablecoin"
-            ).otherwise("long_tail"),
-        )
-        .when(chained, "triangle")
-        .otherwise("cross_pair")
-    )
-    kind = F.when(n == 2, two).otherwise(many)
-    return F.struct(
-        kind.alias("arb_kind"),
-        F.when(kind == "cross_pair", stable_jump).otherwise(F.lit(False)).alias(
-            "stable_jump"
-        ),
-    )
+def block_arbs(txs: pd.DataFrame, legs: pd.DataFrame) -> pd.DataFrame:
+    """I6 over ONE block. `txs`: the block's tx_info rows (block_number,
+    tx_index, tx_hash, eoa, mev_contract); `legs`: its swap actions
+    (tx_hash, tx_index, trace_idx, pool, token_in, token_out, priced =
+    null) and its DEX price keys (tx_index, priced = the token). Returns
+    one ARB_SCHEMA row per tx in `txs` with ≥2 swaps. Row order of either
+    input does not matter."""
+    if txs.empty or legs.empty:
+        return pd.DataFrame(columns=_ARB_COLS)
+    bn = int(txs["block_number"].iloc[0])
+    who = {
+        h: (e, c)
+        for h, e, c in txs[["tx_hash", "eoa", "mev_contract"]].itertuples(index=False, name=None)
+    }
+    priced, swaps = set(), {}
+    for h, i, t, pool, tin, tout, p in legs[
+        ["tx_hash", "tx_index", "trace_idx", "pool", "token_in", "token_out", "priced"]
+    ].itertuples(index=False, name=None):
+        if p is not None:
+            priced.add((int(i), p))
+        elif h in who:
+            swaps.setdefault((h, int(i)), []).append((t, tin, tout, pool))
 
-
-def _tx_has_dex_price(swaps: DataFrame, dex_prices: DataFrame) -> DataFrame:
-    """Per-tx boolean: every swap leg token is priced at this block
-    (the column analog of shared_utils.rs:546-653 valid_pricing feeding
-    `has_dex_price` at atomic_arb.rs:135-149)."""
-    # priced AT THIS TX'S INDEX, not merely somewhere in the block:
-    # usd_deltas joins on (block, tx_index, token), so a token priced only
-    # at another index contributes NO delta — block-level matching would
-    # mark the tx priced while its revenue silently dropped those legs
-    legs = swaps.select(
-        "block_number", "tx_hash", "tx_index",
-        F.explode(F.array("token_in", "token_out")).alias("token"),
-    ).distinct()
-    priced = dex_prices.select(
-        "block_number", F.col("tx_idx").alias("tx_index"), "token"
-    ).distinct()
-    return (
-        legs.join(priced, ["block_number", "tx_index", "token"], "left_semi")
-        .groupBy("tx_hash")
-        .agg(F.count("*").alias("__n_priced"))
-        .join(
-            legs.groupBy("tx_hash").agg(F.count("*").alias("__n_legs")),
-            "tx_hash",
-        )
-        .select(
-            "tx_hash", (F.col("__n_priced") == F.col("__n_legs")).alias("has_dex_price")
-        )
-    )
+    out = []
+    for (h, i), seq in sorted(swaps.items()):
+        if len(seq) < 2:
+            continue
+        seq.sort(key=_nulls_first)  # sort_array order: trace_idx, then the rest
+        kind, stable_jump = classify_seq([(tin, tout) for _, tin, tout, _ in seq])
+        # priced AT THIS TX'S INDEX, not merely somewhere in the block: the
+        # ledger values deltas at (block, tx_index, token), so a token
+        # priced only at another index contributes NO delta
+        # (shared_utils.rs:546-653 valid_pricing → atomic_arb.rs:135-149)
+        tokens = {tok for _, tin, tout, _ in seq for tok in (tin, tout)}
+        has_price = all(tok is not None and (i, tok) in priced for tok in tokens)
+        out.append((bn, h, *who[h], kind, stable_jump, has_price))
+    return pd.DataFrame(out, columns=_ARB_COLS)
 
 
 def atomic_arb_bundles(
@@ -156,25 +170,17 @@ def atomic_arb_bundles(
     ledger: DataFrame | None = None,
 ) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
-        "block_number", "tx_hash", "tx_index", "trace_idx", F.col("swap.*")
+        "block_number", "tx_hash", "tx_index", "trace_idx",
+        "swap.pool", "swap.token_in", "swap.token_out",
     )
-    seqs = (
-        swaps.groupBy("block_number", "tx_hash", "tx_index")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("trace_idx", "token_in", "token_out", "pool"))
-            ).alias("seq")
-        )
-        .filter(F.size("seq") >= 2)
+    priced = dex_prices.select(
+        "block_number", F.col("tx_idx").alias("tx_index"), F.col("token").alias("priced")
     )
-    cls = _classify_seq()
-    classified = seqs.select(
-        "block_number",
-        "tx_hash",
-        "tx_index",
-        cls["arb_kind"].alias("arb_kind"),
-        cls["stable_jump"].alias("stable_jump"),
-        F.size("seq").alias("n_swaps"),
+    classified = (
+        tx_info.select("block_number", "tx_index", "tx_hash", "eoa", "mev_contract")
+        .groupBy("block_number")
+        .cogroup(swaps.unionByName(priced, allowMissingColumns=True).groupBy("block_number"))
+        .applyInPandas(block_arbs, ARB_SCHEMA)
     )
 
     # searcher-history dim, joined for both eoa and mev_contract
@@ -206,8 +212,7 @@ def atomic_arb_bundles(
 
     if ledger is None:
         ledger = build_ledger(actions, tx_info, dex_prices, block_info)
-    priced_tx = _tx_has_dex_price(swaps, dex_prices)
-    flags = tx_info.select("tx_hash", "eoa", "mev_contract", "is_private", "coinbase_transfer")
+    flags = tx_info.select("tx_hash", "is_private", "coinbase_transfer")
 
     # searcher revenue = net USD delta of the tx's own eoa/contract
     # addresses; a tx that books none to them has revenue 0
@@ -216,12 +221,10 @@ def atomic_arb_bundles(
             classified.join(flags, "tx_hash"), ledger, ["tx_hash"],
             F.array("tx_hash"), F.array_compact(F.array("eoa", "mev_contract")),
         )
-        .join(priced_tx, "tx_hash", "left")
         .join(h_eoa, "eoa", "left")
         .join(h_ctr, "mev_contract", "left")
         .withColumn("revenue_usd", F.coalesce("revenue_usd", F.lit(0).cast("decimal(38,18)")))
         .withColumn("__raw_profit", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
-        .withColumn("has_dex_price", F.coalesce("has_dex_price", F.lit(False)))
     )
 
     capped = (F.col("__raw_profit") >= MAX_PROFIT_USD) | (

@@ -162,46 +162,33 @@ def cex_dex_bundles(
         (F.col("block_timestamp") * F.lit(1_000_000)).cast("long").alias("anchor_ts"),
         F.col("amount_in").alias("required_vol"),
     )
-    trades = cex_trades.filter(F.col("quote_token") == quote_token)
-    global_ticks = trades.select(
-        F.col("base_token").alias("key"),
-        F.col("timestamp").alias("tick_ts"),
-        F.col("price"),
-        F.col("amount").alias("vol"),
-        F.col("timestamp").alias("tick_id"),
+    # every leg rides ONE run of the range-join kernel: each trade ticks
+    # the global leg and its own exchange's leg, keyed per (leg, token),
+    # and each anchor is keyed once per leg. The "ex:" prefix keeps an
+    # exchange's leg id apart from "global".
+    trades = cex_trades.filter(F.col("quote_token") == quote_token).withColumn(
+        "leg", F.explode(F.array(F.lit("global"), F.concat(F.lit("ex:"), "exchange")))
     )
-    global_vwap = expanding_vwap(
-        anchors, global_ticks, PRE_STEP_US, POST_STEP_US, MAX_STEPS
-    ).select(
-        F.split(F.col("anchor_id"), "\\|")[0].alias("tx_hash"),
-        F.split(F.col("anchor_id"), "\\|")[1].cast("long").alias("trace_idx"),
-        F.col("vwap").cast("decimal(38,18)").alias("cex_price"),
-        F.lit("global").alias("leg"),
-    )
-    # per-exchange legs ride the SAME one-shot range-join kernel by keying
-    # anchors × exchange (exchange list is a broadcast dim)
-    exchanges = trades.select("exchange").distinct()
-    ex_anchors = anchors.join(F.broadcast(exchanges)).select(
-        F.concat_ws("|", "anchor_id", "exchange").alias("anchor_id"),
-        F.concat_ws("|", "exchange", "key").alias("key"),
+    leg_anchors = anchors.join(F.broadcast(trades.select("leg").distinct())).select(
+        F.concat_ws("|", "anchor_id", "leg").alias("anchor_id"),
+        F.concat_ws("|", "leg", "key").alias("key"),
         "anchor_ts", "required_vol",
     )
-    ex_ticks = trades.select(
-        F.concat_ws("|", "exchange", "base_token").alias("key"),
+    leg_ticks = trades.select(
+        F.concat_ws("|", "leg", "base_token").alias("key"),
         F.col("timestamp").alias("tick_ts"),
         F.col("price"),
         F.col("amount").alias("vol"),
         F.col("timestamp").alias("tick_id"),
     )
-    ex_vwap = expanding_vwap(
-        ex_anchors, ex_ticks, PRE_STEP_US, POST_STEP_US, MAX_STEPS
+    vwap = expanding_vwap(
+        leg_anchors, leg_ticks, PRE_STEP_US, POST_STEP_US, MAX_STEPS
     ).select(
         F.split(F.col("anchor_id"), "\\|")[0].alias("tx_hash"),
         F.split(F.col("anchor_id"), "\\|")[1].cast("long").alias("trace_idx"),
         F.col("vwap").cast("decimal(38,18)").alias("cex_price"),
-        F.concat(F.lit("ex:"), F.split(F.col("anchor_id"), "\\|")[2]).alias("leg"),
+        F.split(F.col("anchor_id"), "\\|")[2].alias("leg"),
     )
-    vwap = global_vwap.unionByName(ex_vwap)
     if ledger is None:  # only its gas columns are read
         ledger = gas_usd(tx_info, block_info)
     qprices = dex_prices.filter(F.col("token") == quote_token).select(

@@ -498,16 +498,18 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         cex_dex_quotes_bundles(*args, cex_quotes=tables["cex_quotes"], ledger=ledger),
         atomic_arb_bundles(*args, searcher_info=tables["searcher_info"], ledger=ledger),
     ]
-    # localCheckpoint (eager) at each composer stage boundary: the compose /
+    # localCheckpoint (eager) at three stage boundaries: the compose /
     # dedup self-joins replicate the whole 5-inspector DAG several times, and
     # the resulting analyzed-plan tree grows combinatorially — with a default
     # 1g driver heap that OOMs at ANALYSIS time. Checkpointing truncates
-    # lineage to the (KB-sized) materialized bundles.
+    # lineage to the (KB-sized) materialized bundles. The last cut is the
+    # final bundles, which the three sinks and the header then read
+    # without recomputing dedup and I13.
     unioned = reduce(lambda a, b: a.unionByName(b), all_bundles).localCheckpoint()
     composed = compose_sandwich_jit(
         retag_jit_cex_dex(unioned, tables["searcher_info"])
     ).localCheckpoint()
-    deduped = dedup_by_precedence(composed).localCheckpoint()
+    deduped = dedup_by_precedence(composed)
     # metadata-only solver tags (PropellerLabsSolver-class protocols) extend
     # the known-searcher set when the protocol dim is provided
     tags = None
@@ -519,6 +521,6 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         deduped, tables["tx_info"], tables["searcher_info"], ledger,
         searcher_contracts=tags,
     )
-    final = deduped.unionByName(activity).orderBy("block_number", "mev_type")
+    final = deduped.unionByName(activity).orderBy("block_number", "mev_type").localCheckpoint()
     header = mev_block_header(final, ledger, tables["block_info"])
     return {"bundles": final, "mev_blocks": header}

@@ -30,6 +30,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # floor collapses them to 1-5 tasks. A 64 KB floor keeps them wide at
     # test scale and is a no-op at cluster scale (partitions are MB+ there).
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # let AQE re-plan a cached plan too, so a cache keeps as many
+    # partitions as its data needs rather than the raw shuffle count
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 
