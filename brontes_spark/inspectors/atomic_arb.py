@@ -184,16 +184,18 @@ def atomic_arb_bundles(
     )
 
     # searcher-history dim, joined for both eoa and mev_contract
-    # (TxInfo::is_searcher_of_type_with_count_threshold checks both sides)
+    # (TxInfo::is_searcher_of_type_with_count_threshold checks both sides).
+    # An address may repeat (`db insert` appends rows): it is labelled if
+    # any of its rows is, with its largest count. The dim is broadcast
+    # whole anyway, so it groups in one partition, without a shuffle.
     cnt = (
         F.coalesce(F.element_at(F.col("bundle_counts"), "atomic_arb"), F.lit(0))
         if "bundle_counts" in searcher_info.columns
         else F.lit(0)
     )
-    hist = searcher_info.select(
-        "address",
-        F.array_contains(F.coalesce("mev_types", F.array()), "atomic_arb").alias("__lbl"),
-        cnt.alias("__cnt"),
+    hist = searcher_info.coalesce(1).groupBy("address").agg(
+        F.max(F.array_contains(F.coalesce("mev_types", F.array()), "atomic_arb")).alias("__lbl"),
+        F.max(cnt).alias("__cnt"),
     )
     h_eoa = F.broadcast(
         hist.select(

@@ -29,6 +29,76 @@ POST_STEP_US = 1_000_000
 MAX_STEPS = 5
 
 
+def _quote_swaps(
+    actions: DataFrame, block_info: DataFrame, quote_token: str
+) -> tuple[DataFrame, DataFrame]:
+    """The swaps selling a token for `quote_token`, and the same swaps with
+    their block's timestamp (the CEX lookup reads only the second, so the
+    legs it prices re-join the first without a second block_info join)."""
+    swaps = actions.filter(
+        F.col("action_type").isin("swap", "swap_with_fee") & (F.col("swap.token_out") == quote_token)
+    ).select(
+        "block_number", "tx_hash", "tx_index", "trace_idx",
+        F.col("swap.token_in").alias("token_in"),
+        F.col("swap.amount_in").alias("amount_in"),
+        F.col("swap.amount_out").alias("amount_out"),
+    )
+    ts = F.broadcast(block_info.select("block_number", "block_timestamp"))
+    return swaps, swaps.join(ts, "block_number")
+
+
+def _tx_bundles(
+    legs: DataFrame,
+    dex_prices: DataFrame,
+    ledger: DataFrame,
+    quote_token: str,
+    mev_type: str,
+    pick=lambda priced: priced,
+) -> DataFrame:
+    """One `mev_type` bundle per tx with positive revenue, from `legs`:
+    the `_quote_swaps` swaps, each with a CEX price `cex_price`. `pick` selects
+    among the priced legs before they sum per tx."""
+    # whole-swap PnL accrues in quote-token units, then converts to USD once
+    # at the quote asset's per-tx-index price (the reference values the
+    # markout via the quote asset's USD price; converting only the DEX side
+    # would skew revenue by the quote/USD rate for non-pegged quotes)
+    qprices = dex_prices.filter(F.col("token") == quote_token).select(
+        F.col("block_number").alias("d_block"),
+        F.col("tx_idx").alias("d_idx"),
+        F.col("price_usd").alias("quote_price"),
+    )
+    priced = legs.join(
+        qprices,
+        (F.col("d_block") == F.col("block_number")) & (F.col("d_idx") == F.col("tx_index")),
+    ).withColumn(
+        "revenue_usd",
+        (
+            (F.col("amount_out") - F.col("amount_in") * F.col("cex_price"))
+            * F.col("quote_price")
+        ).cast("decimal(38,18)"),
+    )
+    # ONE bundle per tx: the reference aggregates all the tx's swap legs
+    # into a single bundle (it builds per-TxInfo), gas charged once
+    per_tx = pick(priced).groupBy("block_number", "tx_hash").agg(
+        F.sum("revenue_usd").cast("decimal(38,18)").alias("revenue_usd")
+    )
+    return (
+        per_tx.join(ledger.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
+        .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
+        .filter(F.col("revenue_usd") > 0)
+        .select(
+            "block_number",
+            F.array("tx_hash").alias("tx_hashes"),
+            "eoa",
+            "mev_contract",
+            F.lit(mev_type).alias("mev_type"),
+            "profit_usd",
+            "revenue_usd",
+            F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),
+        )
+    )
+
+
 def cex_dex_quotes_bundles(
     actions: DataFrame,
     tx_info: DataFrame,
@@ -45,20 +115,11 @@ def cex_dex_quotes_bundles(
     precedence table, mirroring the reference's preference."""
     from ..operators.cex_quotes import quote_at
 
-    swaps = actions.filter(
-        (F.col("action_type").isin("swap", "swap_with_fee")) & (F.col("swap.token_out") == quote_token)
-    ).select(
-        "block_number", "tx_hash", "tx_index", "trace_idx",
-        F.col("swap.token_in").alias("token_in"),
-        F.col("swap.amount_in").alias("amount_in"),
-        F.col("swap.amount_out").alias("amount_out"),
-    )
+    swaps, timed = _quote_swaps(actions, block_info, quote_token)
     # target identity = the SWAP (tx_hash|trace_idx), never the tx alone: a
     # tx with two swaps would otherwise cross-join each swap to the other
     # swap's quote when re-attaching by tx_hash
-    targets = swaps.join(
-        F.broadcast(block_info.select("block_number", "block_timestamp")), "block_number"
-    ).select(
+    targets = timed.select(
         F.concat_ws("|", "tx_hash", "trace_idx").alias("target_id"),
         F.col("token_in").alias("base_token"),
         F.lit(quote_token).alias("quote_token"),
@@ -71,51 +132,9 @@ def cex_dex_quotes_bundles(
     ).filter(F.col("cex_price").isNotNull())
     if ledger is None:  # only its gas columns are read
         ledger = gas_usd(tx_info, block_info)
-    # whole-swap PnL accrues in quote-token units, then converts to USD at
-    # the per-tx-index quote price (the reference values the markout via the
-    # quote asset's USD price — a non-USD-pegged quote would otherwise skew
-    # revenue by the quote/USD rate)
-    qprices = dex_prices.filter(F.col("token") == quote_token).select(
-        F.col("block_number").alias("d_block"),
-        F.col("tx_idx").alias("d_idx"),
-        F.col("price_usd").alias("quote_price"),
-    )
-    per_swap = (
-        swaps.join(quoted, ["tx_hash", "trace_idx"])
-        .join(
-            qprices,
-            (F.col("d_block") == F.col("block_number"))
-            & (F.col("d_idx") == F.col("tx_index")),
-        )
-        .withColumn(
-            "revenue_usd",
-            (
-                (F.col("amount_out") - F.col("amount_in") * F.col("cex_price"))
-                * F.col("quote_price")
-            ).cast("decimal(38,18)"),
-        )
-    )
-    # ONE bundle per tx: the reference aggregates all the tx's swap legs
-    # into a single bundle (cex_dex.rs builds per-TxInfo), gas charged once
-    priced = per_swap.groupBy("block_number", "tx_hash").agg(
-        F.sum("revenue_usd").cast("decimal(38,18)").alias("revenue_usd")
-    )
-    return (
-        priced.join(ledger.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
-        .withColumn(
-            "profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)")
-        )
-        .filter(F.col("revenue_usd") > 0)
-        .select(
-            "block_number",
-            F.array("tx_hash").alias("tx_hashes"),
-            "eoa",
-            "mev_contract",
-            F.lit("cex_dex_quotes").alias("mev_type"),
-            "profit_usd",
-            "revenue_usd",
-            F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),
-        )
+    return _tx_bundles(
+        swaps.join(quoted, ["tx_hash", "trace_idx"]), dex_prices, ledger, quote_token,
+        "cex_dex_quotes",
     )
 
 
@@ -142,21 +161,12 @@ def cex_dex_bundles(
     leg wins (the reference sorts per-exchange pnl and merges with global,
     :619-630). Fixtures with one exchange collapse both legs to the same
     number, keeping the golden values closed-form."""
-    swaps = actions.filter(
-        (F.col("action_type").isin("swap", "swap_with_fee")) & (F.col("swap.token_out") == quote_token)
-    ).select(
-        "block_number", "tx_hash", "tx_index", "trace_idx",
-        F.col("swap.token_in").alias("token_in"),
-        F.col("swap.amount_in").alias("amount_in"),
-        F.col("swap.amount_out").alias("amount_out"),
-    )
+    swaps, timed = _quote_swaps(actions, block_info, quote_token)
     # anchor identity = the SWAP (tx_hash|trace_idx), never the tx alone: a
     # tx with two swaps would merge both swaps' ticks into one cumulative
     # window (corrupting the volume cutoff) and then cross-join each swap to
     # the other's VWAP on re-attach
-    anchors = swaps.join(
-        F.broadcast(block_info.select("block_number", "block_timestamp")), "block_number"
-    ).select(
+    anchors = timed.select(
         F.concat_ws("|", "tx_hash", "trace_idx").alias("anchor_id"),
         F.col("token_in").alias("key"),
         (F.col("block_timestamp") * F.lit(1_000_000)).cast("long").alias("anchor_ts"),
@@ -191,64 +201,26 @@ def cex_dex_bundles(
     )
     if ledger is None:  # only its gas columns are read
         ledger = gas_usd(tx_info, block_info)
-    qprices = dex_prices.filter(F.col("token") == quote_token).select(
-        F.col("block_number").alias("d_block"),
-        F.col("tx_idx").alias("d_idx"),
-        F.col("price_usd").alias("quote_price"),
+    return _tx_bundles(
+        swaps.join(vwap, ["tx_hash", "trace_idx"]), dex_prices, ledger, quote_token,
+        "cex_dex", pick=_best_guarded_leg,
     )
-    legs = (
-        swaps.join(vwap, ["tx_hash", "trace_idx"])
-        .join(
-            qprices,
-            (F.col("d_block") == F.col("block_number"))
-            & (F.col("d_idx") == F.col("tx_index")),
-        )
-        # whole-swap PnL in QUOTE units, converted to USD once at the quote
-        # asset's per-tx-index price (the reference values the markout via
-        # the quote asset's USD price; converting only the DEX side would
-        # skew revenue by the quote/USD rate for non-pegged quotes)
-        .withColumn(
-            "revenue_usd",
-            (
-                (F.col("amount_out") - F.col("amount_in") * F.col("cex_price"))
-                * F.col("quote_price")
-            ).cast("decimal(38,18)"),
-        )
-        # max_arb_delta guard: CEX-implied cost vs DEX proceeds within 3×
-        # (both sides in quote units — same-unit comparison)
-        .withColumn("__cex_val", F.col("amount_in") * F.col("cex_price"))
-        .withColumn("__dex_val", F.col("amount_out").cast("decimal(38,18)"))
-        .filter(
-            F.least("__cex_val", "__dex_val") * MAX_ARB_DELTA
-            >= F.greatest("__cex_val", "__dex_val")
-        )
-    )
+
+
+def _best_guarded_leg(legs: DataFrame) -> DataFrame:
+    """The markout's best leg per swap, among the legs that pass the
+    max_arb_delta guard."""
+    # max_arb_delta guard: CEX-implied cost vs DEX proceeds within 3×
+    # (both sides in quote units — same-unit comparison)
+    cex_val = F.col("amount_in") * F.col("cex_price")
+    dex_val = F.col("amount_out").cast("decimal(38,18)")
+    guarded = legs.filter(F.least(cex_val, dex_val) * MAX_ARB_DELTA >= F.greatest(cex_val, dex_val))
     # best leg per SWAP; ties prefer the global leg then lexicographic
-    best = keep_largest(
-        legs.withColumn(
+    return keep_largest(
+        guarded.withColumn(
             "__leg_rank", F.when(F.col("leg") == "global", F.lit("0")).otherwise(F.col("leg"))
         ),
         ["tx_hash", "trace_idx"],
         F.col("revenue_usd"),
         "__leg_rank",
-    ).drop("__leg_rank", "__cex_val", "__dex_val")
-    # ONE bundle per tx: all the tx's swap legs aggregate into a single
-    # bundle (the reference builds per-TxInfo), gas charged once
-    priced = best.groupBy("block_number", "tx_hash").agg(
-        F.sum("revenue_usd").cast("decimal(38,18)").alias("revenue_usd")
-    )
-    return (
-        priced.join(ledger.select("tx_hash", "eoa", "mev_contract", "gas_usd"), "tx_hash")
-        .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
-        .filter(F.col("revenue_usd") > 0)
-        .select(
-            "block_number",
-            F.array("tx_hash").alias("tx_hashes"),
-            "eoa",
-            "mev_contract",
-            F.lit("cex_dex").alias("mev_type"),
-            "profit_usd",
-            "revenue_usd",
-            F.col("gas_usd").cast("decimal(38,18)").alias("gas_usd"),
-        )
     )

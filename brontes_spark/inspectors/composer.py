@@ -16,13 +16,20 @@
       known-searcher txs no bundle claims get profit-attributed bundles
   O4  per-block MevBlock header rollup (bundle counts/profits by type +
       builder gas take)
+
+O2 and O3 work per block, as the reference composes each block's bundles
+(composer/mod.rs:71-343): each is one `groupBy("block_number")
+.applyInPandas` over a plain walk (`block_compose`, `block_dedup`).
+`run_composer` cuts lineage twice, at the union of the inspector bundles
+and at the final bundles.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window as W
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
@@ -50,69 +57,70 @@ PRIORITY = {
     "searcher_tx": 90,
 }
 
-#: any mev_type not in PRIORITY must sort LAST, never first: a null priority
-#: would win the nulls-first ascending rank and invert precedence
+#: any mev_type not in PRIORITY must sort LAST, never first, or it would
+#: outrank every known type and invert precedence
 _PRIORITY_DEFAULT = 1000
 
-_BCOLS = [
-    "block_number", "tx_hashes", "eoa", "mev_contract", "mev_type",
-    "profit_usd", "revenue_usd", "gas_usd",
-]
+
+def _hashes(v) -> tuple:
+    """A bundle's tx hashes; Arrow hands an array over as a numpy array and
+    a null one as None."""
+    return () if v is None else tuple(v)
+
+
+def _nulls_first(v) -> tuple:
+    """Sort key of Spark's ascending order: a null sorts first."""
+    return (v is not None, v)
+
+
+def block_compose(bundles: pd.DataFrame) -> pd.DataFrame:
+    """O2 over ONE block's bundles (the bundle columns of `run_composer`). A
+    sandwich and a jit (or jit_cex_dex) bundle of the same eoa that share a
+    tx give one jit_sandwich row per pair: its tx_hashes are the sorted,
+    distinct union of both parents' txs, and it takes the sandwich's PnL
+    and contract. A null eoa never pairs. Every bundle whose tx list equals
+    a paired parent's is dropped. Row order of the input does not matter."""
+    rows = bundles.to_dict("records")
+    paired = [r for r in rows if r["eoa"] is not None and r["mev_type"] is not None]
+    sands = [r for r in paired if r["mev_type"].startswith("sandwich")]
+    jits = [r for r in paired if r["mev_type"] in ("jit", "jit_cex_dex")]
+    merged, consumed = [], set()
+    for s in sands:
+        s_txs = _hashes(s["tx_hashes"])
+        for j in jits:
+            j_txs = _hashes(j["tx_hashes"])
+            if j["eoa"] == s["eoa"] and set(s_txs) & set(j_txs):
+                consumed.update((s_txs, j_txs))
+                txs = sorted(set(s_txs) | set(j_txs), key=_nulls_first)
+                merged.append({**s, "tx_hashes": txs, "mev_type": "jit_sandwich"})
+    kept = [r for r in rows if _hashes(r["tx_hashes"]) not in consumed]
+    return pd.DataFrame(kept + merged, columns=bundles.columns)
 
 
 def compose_sandwich_jit(bundles: DataFrame) -> DataFrame:
     """O2: merge sandwich×jit pairs (same block + eoa, intersecting txs)
-    into jit_sandwich; drop the children."""
-    s = bundles.filter(F.col("mev_type").startswith("sandwich")).select(
-        *[F.col(c).alias(f"s_{c}") for c in _BCOLS]
-    )
-    j = bundles.filter(F.col("mev_type").isin("jit", "jit_cex_dex")).select(
-        *[F.col(c).alias(f"j_{c}") for c in _BCOLS]
-    )
-    pairs = s.join(
-        j,
-        (F.col("s_block_number") == F.col("j_block_number"))
-        & (F.col("s_eoa") == F.col("j_eoa"))
-        & (F.size(F.array_intersect("s_tx_hashes", "j_tx_hashes")) > 0),
-    )
-    merged = pairs.select(
-        F.col("s_block_number").alias("block_number"),
-        F.sort_array(F.array_distinct(F.concat("s_tx_hashes", "j_tx_hashes"))).alias(
-            "tx_hashes"
-        ),
-        F.col("s_eoa").alias("eoa"),
-        F.col("s_mev_contract").alias("mev_contract"),
-        F.lit("jit_sandwich").alias("mev_type"),
-        # sandwich PnL already spans the full searcher delta set (see module
-        # docstring) — take it as the merged bundle's accounting
-        F.col("s_profit_usd").alias("profit_usd"),
-        F.col("s_revenue_usd").alias("revenue_usd"),
-        F.col("s_gas_usd").alias("gas_usd"),
-    )
-    consumed = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s_block_number").alias("bn"), F.col("s_tx_hashes").alias("txs")),
-                F.struct(F.col("j_block_number").alias("bn"), F.col("j_tx_hashes").alias("txs")),
-            )
-        ).alias("c")
-    ).select(F.col("c.bn").alias("block_number"), F.col("c.txs").alias("tx_hashes")).distinct()
-    survivors = bundles.join(consumed, ["block_number", "tx_hashes"], "left_anti")
-    return survivors.unionByName(merged)
+    into jit_sandwich and drop the parents, in one `block_compose` pass per
+    block."""
+    return bundles.groupBy("block_number").applyInPandas(block_compose, bundles.schema)
 
 
 def retag_jit_cex_dex(bundles: DataFrame, searcher_info: DataFrame) -> DataFrame:
-    """I11: jit bundles by searchers labeled cex-dex become jit_cex_dex."""
-    labeled = searcher_info.filter(
-        F.array_contains(F.col("mev_types"), "cex_dex")
-    ).select(F.col("address").alias("eoa"), F.lit(True).alias("__cd"))
-    out = bundles.join(F.broadcast(labeled), "eoa", "left")
-    return out.withColumn(
-        "mev_type",
-        F.when((F.col("mev_type") == "jit") & F.col("__cd"), "jit_cex_dex").otherwise(
-            F.col("mev_type")
-        ),
-    ).drop("__cd")
+    """I11: jit bundles by searchers labeled cex-dex become jit_cex_dex.
+    An address may repeat in `searcher_info` (`db insert` appends rows), so
+    the lookup keeps one row per address. It is broadcast whole anyway, so
+    it dedups in one partition, without a shuffle."""
+    labeled = (
+        searcher_info.filter(F.array_contains(F.col("mev_types"), "cex_dex"))
+        .select(F.col("address").alias("eoa"), F.lit(True).alias("__cd"))
+        .coalesce(1)
+        .distinct()
+    )
+    mev_type = F.when((F.col("mev_type") == "jit") & F.col("__cd"), "jit_cex_dex").otherwise(
+        F.col("mev_type")
+    )
+    return bundles.join(F.broadcast(labeled), "eoa", "left").select(
+        *[mev_type.alias(c) if c == "mev_type" else c for c in bundles.columns]
+    )
 
 
 def searcher_activity_bundles(
@@ -161,50 +169,62 @@ def searcher_activity_bundles(
     )
 
 
+def _precedence(r: dict) -> tuple:
+    """O3's order of a bundle row: (priority, mev_type, min tx hash,
+    bundle_id), a null first as in Spark's ascending sort; a mev_type
+    missing from PRIORITY sorts last."""
+    txs = [h for h in _hashes(r["tx_hashes"]) if h is not None]
+    return (
+        PRIORITY.get(r["mev_type"], _PRIORITY_DEFAULT),
+        _nulls_first(r["mev_type"]),
+        _nulls_first(min(txs, default=None)),
+        r["bundle_id"],
+    )
+
+
+def block_dedup(bundles: pd.DataFrame) -> pd.DataFrame:
+    """O3 over ONE block's bundles (the bundle columns of `run_composer` and
+    `bundle_id`): a bundle is dropped when a bundle sharing one of its txs
+    comes strictly earlier in `_precedence`. Bundles with equal keys both
+    survive, and so does a bundle with no txs. Returns the kept rows
+    without `bundle_id`. Row order of the input does not matter."""
+    rows = bundles.to_dict("records")
+    keys = [_precedence(r) for r in rows]
+    best: dict = {}
+    for r, k in zip(rows, keys):
+        for h in _hashes(r["tx_hashes"]):
+            best[h] = min(best.get(h, k), k)
+    kept = [r for r, k in zip(rows, keys) if all(best[h] == k for h in _hashes(r["tx_hashes"]))]
+    return pd.DataFrame(kept, columns=bundles.columns).drop(columns="bundle_id")
+
+
 def dedup_by_precedence(bundles: DataFrame) -> DataFrame:
-    """O3: drop subordinate bundles sharing a tx with a dominant bundle.
+    """O3: drop subordinate bundles sharing a tx with a dominant bundle, in
+    one `block_dedup` pass per block. Per block is the same as over all
+    bundles at once because a tx hash belongs to one block.
 
     The tie-break among equal-priority bundles sharing a tx is content-derived
-    (mev_type, first tx hash, content hash) — never monotonically_increasing_id,
-    which is partition-dependent and run-to-run nondeterministic (and unsafe as
-    a self-join key because the plan is evaluated twice).
+    (mev_type, smallest tx hash, content hash) — never monotonically_increasing_id,
+    which is partition-dependent and run-to-run nondeterministic.
     """
-    prio = F.create_map(*[F.lit(x) for kv in PRIORITY.items() for x in kv])
     # md5-derived id, per the repo-wide hash policy (functions/hashing.py):
     # this id is the final dedup tie-break, so an engine twin replaying the
     # same bundles must derive the identical id — xxhash64 would not.
-    b = bundles.withColumn(
-        "priority", F.coalesce(prio[F.col("mev_type")], F.lit(_PRIORITY_DEFAULT))
-    ).withColumn(
-        "bundle_id",
-        md5_long(
-            F.concat_ws(
-                "|",
-                "mev_type",
-                F.concat_ws(",", "tx_hashes"),
-                F.col("profit_usd").cast("string"),
-                F.col("revenue_usd").cast("string"),
-                "eoa",
-            )
-        ),
+    bundle_id = md5_long(
+        F.concat_ws(
+            "|",
+            "mev_type",
+            F.concat_ws(",", "tx_hashes"),
+            F.col("profit_usd").cast("string"),
+            F.col("revenue_usd").cast("string"),
+            "eoa",
+        )
     )
-    exploded = b.select(
-        "bundle_id", "priority", "mev_type", "tx_hashes",
-        F.explode("tx_hashes").alias("tx_hash"),
+    return (
+        bundles.withColumn("bundle_id", bundle_id)
+        .groupBy("block_number")
+        .applyInPandas(block_dedup, bundles.schema)
     )
-    w = W.partitionBy("tx_hash").orderBy(
-        F.col("priority").asc(),
-        F.col("mev_type").asc(),
-        F.array_min("tx_hashes").asc(),
-        F.col("bundle_id").asc(),
-    )
-    dominated = (
-        exploded.withColumn("rnk", F.rank().over(w))
-        .filter(F.col("rnk") > 1)
-        .select("bundle_id")
-        .distinct()
-    )
-    return b.join(dominated, "bundle_id", "left_anti").drop("bundle_id", "priority")
 
 
 def mev_block_header(bundles: DataFrame, ledger: DataFrame, block_info: DataFrame) -> DataFrame:
@@ -498,17 +518,15 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         cex_dex_quotes_bundles(*args, cex_quotes=tables["cex_quotes"], ledger=ledger),
         atomic_arb_bundles(*args, searcher_info=tables["searcher_info"], ledger=ledger),
     ]
-    # localCheckpoint (eager) at three stage boundaries: the compose /
-    # dedup self-joins replicate the whole 5-inspector DAG several times, and
-    # the resulting analyzed-plan tree grows combinatorially — with a default
-    # 1g driver heap that OOMs at ANALYSIS time. Checkpointing truncates
-    # lineage to the (KB-sized) materialized bundles. The last cut is the
-    # final bundles, which the three sinks and the header then read
-    # without recomputing dedup and I13.
+    # Two eager lineage cuts, each held in executor memory (a single-node
+    # shortcut). The first is the union of the inspector bundles: O2, O3
+    # and I13 then plan over a scan of the KB-sized bundles rather than the
+    # six inspector DAGs, which without the cut adds about 10 s of plan
+    # building before the first job. The second is the final bundles,
+    # which the three sinks and the header read without recomputing O2,
+    # O3 and I13.
     unioned = reduce(lambda a, b: a.unionByName(b), all_bundles).localCheckpoint()
-    composed = compose_sandwich_jit(
-        retag_jit_cex_dex(unioned, tables["searcher_info"])
-    ).localCheckpoint()
+    composed = compose_sandwich_jit(retag_jit_cex_dex(unioned, tables["searcher_info"]))
     deduped = dedup_by_precedence(composed)
     # metadata-only solver tags (PropellerLabsSolver-class protocols) extend
     # the known-searcher set when the protocol dim is provided

@@ -25,34 +25,31 @@ def spark():
         "brontes-spark-tests", cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "4")
     )
     # sf0.001 fixtures execute in microseconds; per-action latency is
-    # Catalyst + Janino codegen compilation + AQE stage re-planning, all
-    # JVM-side and serial. Interpreted execution with static plans returns
-    # IDENTICAL results and halves fresh-plan latency (measured 11.4 s ->
-    # 5.3 s for 5 unique plans). Tests that pin codegen spans or AQE
-    # artifacts in plan TEXT re-enable per test via codegen_session().
+    # Catalyst + Janino codegen compilation, JVM-side and serial.
+    # Interpreted execution returns IDENTICAL results and cuts fresh-plan
+    # latency. AQE stays on, as RUNTIME_CONFS sets it: the testdata loaders
+    # apply those confs anyway, so turning it off here would make every
+    # plan pin depend on test order. Tests that pin codegen spans in plan
+    # TEXT re-enable it per test via codegen_session().
     if os.environ.get("SPARK_GRAFT_TEST_FULL_ENGINE", "0") != "1":
         s.conf.set("spark.sql.codegen.wholeStage", "false")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
     yield s
     s.stop()
 
 
 @contextmanager
 def codegen_session(s):
-    """Temporarily restore the production execution engine (whole-stage
-    codegen + AQE) for tests that assert on plan text containing codegen
-    spans ('*'/WholeStageCodegen) or adaptive nodes. Build the DataFrame
-    INSIDE the context: physical plans materialize lazily at first access
-    with whatever confs are then current."""
+    """Temporarily restore whole-stage codegen, the production engine, for
+    tests that assert on plan text containing codegen spans
+    ('*'/WholeStageCodegen). Build the DataFrame INSIDE the context:
+    physical plans materialize lazily at first access with whatever confs
+    are then current."""
     old_cg = s.conf.get("spark.sql.codegen.wholeStage")
-    old_aqe = s.conf.get("spark.sql.adaptive.enabled")
     s.conf.set("spark.sql.codegen.wholeStage", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "true")
     try:
         yield s
     finally:
         s.conf.set("spark.sql.codegen.wholeStage", old_cg)
-        s.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 @pytest.fixture(scope="session")

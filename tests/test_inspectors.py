@@ -166,6 +166,20 @@ def test_composer_end_to_end(tables):
     assert headers[100]["builder_gas_usd"] == Decimal("4")
 
 
+def test_repeated_searcher_address_adds_no_bundle(tables):
+    """`cli.py db insert` appends rows, so an address can repeat in
+    searcher_info. The I11 label lookup and atomic_arb's history lookup
+    keep one row per address, so no bundle fans out."""
+    info = tables["searcher_info"]
+    out = run_composer(dict(tables, searcher_info=info.unionByName(info)))
+    keys = [(r["block_number"], tuple(r["tx_hashes"]), r["mev_type"])
+            for r in out["bundles"].collect()]
+    assert len(keys) == len(set(keys)) == 10
+    # a fanned-out lookup repeats the sandwich, arb and cex_dex bundles
+    headers = {r["block_number"]: r["n_bundles"] for r in out["mev_blocks"].collect()}
+    assert headers[100] == headers[101] == headers[104] == 1
+
+
 def test_atomic_arb_history_heuristics(spark):
     """I7 validation matrix (atomic_arb.rs:169-232): searcher-history count
     thresholds scale 2x when DEX pricing is missing; stablecoin arbs pass on

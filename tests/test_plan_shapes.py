@@ -46,20 +46,16 @@ def test_snapshot_covers_every_gate():
     assert not any("ERROR" in v for v in SNAPSHOT.values())
 
 
-#: the per-inspector fixture gates build whole inspector plans over the
-#: planted tables, and their feature counts depend on the test session's
-#: state: whether AQE is on (the testdata loaders turn it back on, so this
-#: depends on test order), and which of their subplans the composer gates
-#: have already cached (`run_composer` caches the actions and the
-#: per-tx ledger) — i5's x_hash once read 9 with AQE off, 12 with it on,
-#: 16 after the composer gates ran. For these, exact counts are meaningless; the
-#: load-bearing invariants — no cartesian product, and the same feature
-#: KINDS present — are asserted instead. The gates' VALUES stay
-#: hash-pinned by their recomputing oracles.
-SESSION_DEPENDENT = {
-    "i5_sandwich_pnl", "i8_cex_dex_markout", "i9_cex_dex_quotes",
-    "i10_jit_bundles", "i12_liquidation_bundles",
-}
+#: these per-inspector fixture gates build whole inspector plans over the
+#: planted tables, and their feature counts depend on whether the composer
+#: gates have already run in the session: `run_composer` caches the per-tx
+#: ledger, and a later plan that reads the same subplan reads the cache
+#: instead (i5's x_hash reads 4 before the composer gates ran, 5 after;
+#: i12's 2 and 5). For these, exact counts are meaningless; the load-bearing
+#: invariants — no cartesian product, and the same feature KINDS present —
+#: are asserted instead. The gates' VALUES stay hash-pinned by their
+#: recomputing oracles.
+SESSION_DEPENDENT = {"i5_sandwich_pnl", "i10_jit_bundles", "i12_liquidation_bundles"}
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))

@@ -108,8 +108,8 @@ def test_expanding_vwap_skewed_pair_uses_aqe_skew_join(spark):
     for k, v in tuned.items():
         spark.conf.set(k, v)
     try:
-        # the test session runs with AQE off (conftest); skew-join splitting
-        # is an AQE rewrite, so build and execute under the production engine
+        # skew-join splitting is an AQE rewrite (on in the test session);
+        # build and execute under the production engine
         with codegen_session(spark):
             hot = spark.range(100_000).select(
                 F.lit("HOT").alias("key"),
