@@ -16,8 +16,9 @@ delta array chosen by `action_type`, and one `explode` yields the rows.
 A3 is one equi-join against `dex_prices` (every tx index is priced in our
 model, so no as-of needed — operators/asof.py provides it where price grids
 are sparse). `tx_ledger` folds the USD deltas and the gas rows into one row
-per tx; the composer caches it once and every inspector reads it through
-`bundle_pnl` (one join, one aggregate).
+per tx in one join and one aggregate; the composer caches it once. Its
+`searcher_usd` prices a one-tx bundle (liquidations, atomic_arb, I13) off
+its row; `bundle_pnl` is for bundles that span txs (sandwich, jit).
 
 Decimal typing: every delta amount is decimal(38,18), the amount type, so
 no step rounds it (functions/decimals.py). Two products of this typing
@@ -125,7 +126,8 @@ def usd_deltas(deltas: DataFrame, dex_prices: DataFrame) -> DataFrame:
 
 
 def gas_usd(tx_info: DataFrame, block_info: DataFrame) -> DataFrame:
-    """A6: per-tx gas cost in USD (gas_paid = used*price + coinbase bribe)."""
+    """A6: per-tx gas cost in USD (gas_paid = used*price + coinbase bribe),
+    with the tx's searcher pair and flags."""
     eth_paid = (
         (F.col("gas_used") * F.col("effective_gas_price")).cast("decimal(38,0)")
         / F.lit(WEI).cast("decimal(19,0)")
@@ -141,18 +143,45 @@ def gas_usd(tx_info: DataFrame, block_info: DataFrame) -> DataFrame:
         (eth_paid * F.col("eth_price")).cast(AMOUNT).alias("gas_usd"),
         "priority_fee",
         "is_private",
+        "coinbase_transfer",
     )
 
 
 def tx_ledger(deltas: DataFrame, gas: DataFrame) -> DataFrame:
     """One row per tx: its `gas` row plus `deltas`, the tx's (address, usd)
-    entries from `usd_deltas` (empty when it booked none)."""
-    entries = deltas.groupBy("tx_hash").agg(
-        F.collect_list(F.struct("address", "usd")).alias("deltas")
+    entries from `usd_deltas` (empty when it booked none), and
+    `searcher_usd`, the `SUM` of those booked to its own eoa or mev_contract
+    (null when none is), exact at the amount scale: an `aggregate` lambda's
+    `+` would round to scale 17."""
+    own = (F.col("address") == F.col("eoa")) | (F.col("address") == F.col("mev_contract"))
+    # sort-merge, as adaptive execution re-plans it anyway: the deltas come
+    # partitioned on tx_hash by the coverage window, so only the gas rows
+    # shuffle and the aggregate needs no exchange of its own
+    entries = deltas.select("tx_hash", "address", "usd").hint("merge")
+    return (
+        gas.join(entries, "tx_hash", "left")
+        .groupBy(*gas.columns)
+        .agg(
+            # a tx with no deltas joins one all-null row, which collects nothing
+            F.collect_list(F.when(F.col("address").isNotNull(), F.struct("address", "usd")))
+            .alias("deltas"),
+            F.sum(F.when(own, F.col("usd"))).alias("searcher_usd"),
+        )
     )
-    none = F.array().cast(f"array<struct<address:string,usd:{AMOUNT}>>")
-    return gas.join(entries, "tx_hash", "left").withColumn(
-        "deltas", F.coalesce("deltas", none)
+
+
+def ledger_bundles(rows: DataFrame, mev_type: str) -> DataFrame:
+    """One `mev_type` bundle per ledger row of `rows` that books to its own
+    searcher pair: revenue is its `searcher_usd`, profit revenue − gas."""
+    return rows.filter(F.col("searcher_usd").isNotNull()).select(
+        "block_number",
+        F.array("tx_hash").alias("tx_hashes"),
+        "eoa",
+        "mev_contract",
+        F.lit(mev_type).alias("mev_type"),
+        (F.col("searcher_usd") - F.col("gas_usd")).cast(AMOUNT).alias("profit_usd"),
+        F.col("searcher_usd").alias("revenue_usd"),
+        "gas_usd",
     )
 
 

@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import build_ledger, bundle_pnl
+from .accounting import AMOUNT, build_ledger
 
 MAX_PROFIT_USD = 15_000_000   # mev_inspectors/mod.rs:12
 MIN_PROFIT_USD = -15_000_000  # mev_inspectors/mod.rs:13
@@ -214,19 +214,21 @@ def atomic_arb_bundles(
 
     if ledger is None:
         ledger = build_ledger(actions, tx_info, dex_prices, block_info)
-    flags = tx_info.select("tx_hash", "is_private", "coinbase_transfer")
 
     # searcher revenue = net USD delta of the tx's own eoa/contract
-    # addresses; a tx that books none to them has revenue 0
+    # addresses, off its ledger row; a tx that books none to them has
+    # revenue 0
     out = (
-        bundle_pnl(
-            classified.join(flags, "tx_hash"), ledger, ["tx_hash"],
-            F.array("tx_hash"), F.array_compact(F.array("eoa", "mev_contract")),
+        classified.join(
+            ledger.select(
+                "tx_hash", "gas_usd", "searcher_usd", "is_private", "coinbase_transfer"
+            ),
+            "tx_hash",
         )
         .join(h_eoa, "eoa", "left")
         .join(h_ctr, "mev_contract", "left")
-        .withColumn("revenue_usd", F.coalesce("revenue_usd", F.lit(0).cast("decimal(38,18)")))
-        .withColumn("__raw_profit", (F.col("revenue_usd") - F.col("gas_usd")).cast("decimal(38,18)"))
+        .withColumn("revenue_usd", F.coalesce("searcher_usd", F.lit(0).cast(AMOUNT)))
+        .withColumn("__raw_profit", (F.col("revenue_usd") - F.col("gas_usd")).cast(AMOUNT))
     )
 
     capped = (F.col("__raw_profit") >= MAX_PROFIT_USD) | (
@@ -238,7 +240,7 @@ def atomic_arb_bundles(
             "profit_usd",
             F.when(F.col("has_dex_price"), F.col("__raw_profit"))
             .otherwise(F.lit(0))
-            .cast("decimal(38,18)"),
+            .cast(AMOUNT),
         )
     )
 

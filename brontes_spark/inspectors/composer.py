@@ -3,6 +3,8 @@
 
   O1  run every inspector, union bundles (independent DAG branches — Spark
       schedules them; they share one cached per-tx accounting ledger)
+  I13 searcher activity (mev_inspectors/searcher_activity.rs:40-200), an
+      O1 inspector (lib.rs:106-115): a bundle per profitable searcher tx
   O2  compose: sandwich + JIT bundles sharing txs by the same searcher merge
       into jit_sandwich (composer/composer_filters.rs:21-49,
       mev/jit_sandwich.rs compose_sandwich_jit). Our delta accounting
@@ -12,16 +14,15 @@
       (jit/jit_cex_dex.rs) re-tag
   O3  precedence dedup (composer/mev_filters.rs:32-110): bundles of a
       subordinate MEV type sharing any tx with a dominant bundle are dropped
-  I13 searcher activity (mev_inspectors/searcher_activity.rs:40-200):
-      known-searcher txs no bundle claims get profit-attributed bundles
+      (searcher_tx is the weakest)
   O4  per-block MevBlock header rollup (bundle counts/profits by type +
       builder gas take)
 
 O2 and O3 work per block, as the reference composes each block's bundles
 (composer/mod.rs:71-343): each is one `groupBy("block_number")
 .applyInPandas` over a plain walk (`block_compose`, `block_dedup`).
-`run_composer` cuts lineage twice, at the union of the inspector bundles
-and at the final bundles.
+`run_composer` runs O1 → I11 → O2 → O3 → O4 and cuts lineage twice, at the
+union of the inspector bundles and at the final bundles.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
-from .accounting import action_deltas, bundle_pnl, gas_usd, tx_ledger, usd_deltas
+from .accounting import action_deltas, gas_usd, ledger_bundles, tx_ledger, usd_deltas
 from .atomic_arb import atomic_arb_bundles
 from .cex_dex import cex_dex_bundles, cex_dex_quotes_bundles
 from .jit import jit_bundles
@@ -54,7 +55,7 @@ PRIORITY = {
     "atomic_arb:cross_pair": 70,
     "atomic_arb:stablecoin": 75,  # weakest closed-arb signal (validation matrix)
     "atomic_arb:long_tail": 80,
-    "searcher_tx": 90,
+    "searcher_tx": 90,  # weakest: any other bundle on its tx drops it
 }
 
 #: any mev_type not in PRIORITY must sort LAST, never first, or it would
@@ -124,48 +125,29 @@ def retag_jit_cex_dex(bundles: DataFrame, searcher_info: DataFrame) -> DataFrame
 
 
 def searcher_activity_bundles(
-    claimed: DataFrame,
-    tx_info: DataFrame,
-    searcher_info: DataFrame,
     ledger: DataFrame,
+    searcher_info: DataFrame,
     searcher_contracts: DataFrame | None = None,
 ) -> DataFrame:
-    """I13: profitable known-searcher txs not claimed by any bundle.
+    """I13: one searcher_tx bundle per profitable tx of a known searcher,
+    read off its `ledger` row; O3 drops the ones whose tx another bundle
+    holds.
 
     ``searcher_contracts`` (optional, `(address, ...)`) extends the known set
     with CONTRACT addresses — e.g. metadata-tagged solver protocols
     (classify.protocol_searcher_tags); those match on mev_contract, while
-    searcher_info rows match on eoa (searcher_activity.rs checks both)."""
-    known = searcher_info.select(F.col("address").alias("eoa")).distinct()
-    claimed_txs = claimed.select(F.explode("tx_hashes").alias("tx_hash")).distinct()
-    by_eoa = tx_info.join(F.broadcast(known), "eoa", "left_semi")
+    searcher_info rows match on eoa (searcher_activity.rs checks both). The
+    semi-joins keep each tx once, however often its address repeats."""
+    known = F.broadcast(searcher_info.select(F.col("address").alias("eoa")))
+    txs = ledger.join(known, "eoa", "left_semi")
     if searcher_contracts is not None:
-        kc = searcher_contracts.select(F.col("address").alias("mev_contract")).distinct()
-        by_contract = tx_info.join(F.broadcast(kc), "mev_contract", "left_semi")
-        matched = by_eoa.unionByName(by_contract).dropDuplicates(["tx_hash"])
-    else:
-        matched = by_eoa
-    candidates = (
-        matched
-        .join(claimed_txs, "tx_hash", "left_anti")
-        .select("block_number", "tx_hash", "eoa", "mev_contract")
-    )
-    return (
-        bundle_pnl(
-            candidates, ledger, ["tx_hash"],
-            F.array("tx_hash"), F.array_compact(F.array("eoa", "mev_contract")),
+        kc = F.broadcast(searcher_contracts.select(F.col("address").alias("mev_contract")))
+        # a tagged contract's txs whose eoa is not known already
+        txs = txs.unionByName(
+            ledger.join(kc, "mev_contract", "left_semi").join(known, "eoa", "left_anti")
         )
-        .filter((F.col("revenue_usd") > 0) & (F.col("profit_usd") > 0))
-        .select(
-            "block_number",
-            F.array("tx_hash").alias("tx_hashes"),
-            "eoa",
-            "mev_contract",
-            F.lit("searcher_tx").alias("mev_type"),
-            "profit_usd",
-            "revenue_usd",
-            "gas_usd",
-        )
+    return ledger_bundles(txs, "searcher_tx").filter(
+        (F.col("revenue_usd") > 0) & (F.col("profit_usd") > 0)
     )
 
 
@@ -273,7 +255,9 @@ def block_analysis_wide(
     mev_contract / fund ×{profit, revenue} lists with parallel amounts —
     the *_all_* families), and most-transacted pool/pair/dex by attributed
     profit AND by revenue (1976-2110) — the full metric surface of the
-    reference's 369 literal columns, family-pivoted.
+    reference's 369 literal columns, family-pivoted. An address may repeat
+    in `searcher_info` (`db insert` appends rows); its greatest non-null
+    `fund` is its fund.
 
     Plan shape: bundles explode to (block, family) grain — each bundle
     feeds its own family plus `all` when eligible — every metric is computed
@@ -284,6 +268,8 @@ def block_analysis_wide(
     from ..operators.windows import keep_largest
 
     DEC = "decimal(38,18)"
+    # one row per address, broadcast whole, so it groups without a shuffle
+    funds = searcher_info.coalesce(1).groupBy(F.col("address").alias("eoa"))
     b = (
         # family = mev_type sans subkind; the quotes variant counts under
         # cex_dex (the reference's cex_dex_* fields count MevType::CexDexQuotes,
@@ -296,11 +282,7 @@ def block_analysis_wide(
             ).otherwise(F.split("mev_type", ":")[0]),
         )
         .withColumn("head_tx", F.col("tx_hashes")[0])
-        .join(
-            F.broadcast(searcher_info.select(F.col("address").alias("eoa"), "fund")),
-            "eoa",
-            "left",
-        )
+        .join(F.broadcast(funds.agg(F.max("fund").alias("fund"))), "eoa", "left")
     )
     # (block, fam) grain: own family + "all" (searcher_tx excluded from all)
     b2 = b.withColumn(
@@ -499,35 +481,17 @@ def block_analysis_wide(
 
 
 def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """O1 → I11 → O2 → O3 → I13 → O4 over the fixture-shaped tables."""
+    """O1 → I11 → O2 → O3 → O4 over the fixture-shaped tables."""
     args = (tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"])
-    # one shared accounting pass, cached for every inspector and I13 (the
-    # reference likewise shares the classified tree + metadata across
-    # inspectors, composer/mod.rs:71-120). usd_deltas and gas_usd are called
-    # from this module, not through build_ledger: a traced perfbench run
-    # wraps them by name in its `inspectors.accounting` span.
+    # one shared accounting pass, cached for every inspector (the reference
+    # likewise shares the classified tree + metadata across inspectors,
+    # composer/mod.rs:71-120). usd_deltas and gas_usd are called from this
+    # module, not through build_ledger: a traced perfbench run wraps them by
+    # name in its `inspectors.accounting` span.
     ledger = tx_ledger(
         usd_deltas(action_deltas(tables["actions"]), tables["dex_prices"]),
         gas_usd(tables["tx_info"], tables["block_info"]),
     ).cache()
-    all_bundles = [
-        sandwich_bundles(*args, ledger=ledger),
-        jit_bundles(*args, ledger=ledger),
-        liquidation_bundles(*args, ledger=ledger),
-        cex_dex_bundles(*args, cex_trades=tables["cex_trades"], ledger=ledger),
-        cex_dex_quotes_bundles(*args, cex_quotes=tables["cex_quotes"], ledger=ledger),
-        atomic_arb_bundles(*args, searcher_info=tables["searcher_info"], ledger=ledger),
-    ]
-    # Two eager lineage cuts, each held in executor memory (a single-node
-    # shortcut). The first is the union of the inspector bundles: O2, O3
-    # and I13 then plan over a scan of the KB-sized bundles rather than the
-    # six inspector DAGs, which without the cut adds about 10 s of plan
-    # building before the first job. The second is the final bundles,
-    # which the three sinks and the header read without recomputing O2,
-    # O3 and I13.
-    unioned = reduce(lambda a, b: a.unionByName(b), all_bundles).localCheckpoint()
-    composed = compose_sandwich_jit(retag_jit_cex_dex(unioned, tables["searcher_info"]))
-    deduped = dedup_by_precedence(composed)
     # metadata-only solver tags (PropellerLabsSolver-class protocols) extend
     # the known-searcher set when the protocol dim is provided
     tags = None
@@ -535,10 +499,24 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         from ..classify import protocol_searcher_tags
 
         tags = protocol_searcher_tags(tables["address_to_protocol"])
-    activity = searcher_activity_bundles(
-        deduped, tables["tx_info"], tables["searcher_info"], ledger,
-        searcher_contracts=tags,
-    )
-    final = deduped.unionByName(activity).orderBy("block_number", "mev_type").localCheckpoint()
+    all_bundles = [
+        sandwich_bundles(*args, ledger=ledger),
+        jit_bundles(*args, ledger=ledger),
+        liquidation_bundles(*args, ledger=ledger),
+        cex_dex_bundles(*args, cex_trades=tables["cex_trades"], ledger=ledger),
+        cex_dex_quotes_bundles(*args, cex_quotes=tables["cex_quotes"], ledger=ledger),
+        atomic_arb_bundles(*args, searcher_info=tables["searcher_info"], ledger=ledger),
+        searcher_activity_bundles(ledger, tables["searcher_info"], searcher_contracts=tags),
+    ]
+    # Two eager lineage cuts, each held in executor memory (a single-node
+    # shortcut). The first is the union of the O1 bundles, I13's included:
+    # O2 and O3 then plan over a scan of the KB-sized bundles rather than
+    # the seven inspector DAGs, which without the cut adds about 10 s of
+    # plan building before the first job. The second is the final bundles,
+    # which the three sinks and the header read without recomputing O2 and
+    # O3.
+    unioned = reduce(lambda a, b: a.unionByName(b), all_bundles).localCheckpoint()
+    composed = compose_sandwich_jit(retag_jit_cex_dex(unioned, tables["searcher_info"]))
+    final = dedup_by_precedence(composed).orderBy("block_number", "mev_type").localCheckpoint()
     header = mev_block_header(final, ledger, tables["block_info"])
     return {"bundles": final, "mev_blocks": header}

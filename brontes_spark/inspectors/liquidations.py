@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import build_ledger, bundle_pnl
+from .accounting import build_ledger, ledger_bundles
 
 
 def liquidation_bundles(
@@ -22,28 +22,9 @@ def liquidation_bundles(
     # liquidations.rs:56-76): a tx with liquidation actions by several
     # liquidator addresses must not fan out into per-liquidator bundles
     # each charged the tx's full gas. Revenue accrues to the tx's searcher
-    # address set (eoa + mev_contract — collect_address_set_for_accounting).
+    # address set (eoa + mev_contract — collect_address_set_for_accounting):
+    # the ledger row's `searcher_usd`.
     if ledger is None:
         ledger = build_ledger(actions, tx_info, dex_prices, block_info)
-    liq_txs = ledger.select("block_number", "tx_hash", "eoa", "mev_contract").join(
-        actions.filter(F.col("action_type") == "liquidation").select("tx_hash"),
-        "tx_hash",
-        "left_semi",
-    )
-    return (
-        bundle_pnl(
-            liq_txs, ledger, ["tx_hash"],
-            F.array("tx_hash"), F.array_compact(F.array("eoa", "mev_contract")),
-        )
-        .filter(F.col("revenue_usd").isNotNull())
-        .select(
-            "block_number",
-            F.array("tx_hash").alias("tx_hashes"),
-            "eoa",
-            "mev_contract",
-            F.lit("liquidation").alias("mev_type"),
-            "profit_usd",
-            "revenue_usd",
-            "gas_usd",
-        )
-    )
+    liq_txs = actions.filter(F.col("action_type") == "liquidation").select("tx_hash")
+    return ledger_bundles(ledger.join(liq_txs, "tx_hash", "left_semi"), "liquidation")

@@ -1,6 +1,6 @@
 """Shared inspector accounting (inspectors/accounting.py) on hand-built
-rows: A1/A2 delta typing and swap coverage, the per-tx ledger, and the
-A5 `bundle_pnl` every inspector books its PnL through."""
+rows: A1/A2 delta typing and swap coverage, the per-tx ledger and its
+`searcher_usd`, and the A5 `bundle_pnl` of bundles that span txs."""
 
 from __future__ import annotations
 
@@ -110,16 +110,45 @@ def test_transfer_with_a_null_field_is_never_covered(spark):
 
 def _ledger(spark, deltas, gas):
     """tx_ledger over the narrow (tx_hash, address, usd) and
-    (tx_hash, gas_usd) frames, the least it reads."""
+    (block_number, tx_hash, gas_usd, eoa, mev_contract) frames, the least
+    it reads; `gas` rows are (tx_hash, gas_usd, eoa, mev_contract)."""
     return tx_ledger(
         spark.createDataFrame(
             [(h, a, Decimal(u)) for h, a, u in deltas],
             "tx_hash string, address string, usd decimal(38,18)",
         ),
         spark.createDataFrame(
-            [(h, Decimal(g)) for h, g in gas], "tx_hash string, gas_usd decimal(38,18)"
+            [(1, h, Decimal(g), e, c) for h, g, e, c in gas],
+            "block_number long, tx_hash string, gas_usd decimal(38,18), "
+            "eoa string, mev_contract string",
         ),
     )
+
+
+def test_ledger_searcher_usd(spark):
+    """`searcher_usd` sums the USD a tx books to its own eoa or
+    mev_contract: null when it books none there, each delta once when the
+    eoa is the contract, and exact at all 18 decimals."""
+    ledger = _ledger(
+        spark,
+        [("0xnone", "0xo", "100"),
+         ("0xboth", "0xe", "3"), ("0xboth", "0xc", "5"), ("0xboth", "0xo", "100"),
+         ("0xsame", "0xs", "7"),
+         ("0xexact", "0xe", str(AMT)), ("0xexact", "0xc", str(AMT2))],
+        [("0xnone", "1", "0xe", "0xc"), ("0xboth", "1", "0xe", "0xc"),
+         ("0xsame", "1", "0xs", "0xs"), ("0xexact", "1", "0xe", "0xc"),
+         ("0xquiet", "1", "0xe", None)],
+    )
+    assert ledger.schema["searcher_usd"].dataType == DecimalType(38, 18)
+    rows = {r["tx_hash"]: (r["searcher_usd"], len(r["deltas"])) for r in ledger.collect()}
+    assert rows == {
+        "0xnone": (None, 1),
+        "0xboth": (Decimal(8), 3),
+        "0xsame": (Decimal(7), 1),
+        "0xexact": (AMT + AMT2, 2),
+        "0xquiet": (None, 0),
+    }
+    assert AMT + AMT2 == Decimal("3.123456789012345679")
 
 
 def test_bundle_pnl(spark):
@@ -127,7 +156,7 @@ def test_bundle_pnl(spark):
         spark,
         [("0xt1", "0xs", "10"), ("0xt1", "0xo", "100"), ("0xt2", "0xo", "5"),
          ("0xt3", "0xc", "4")],
-        [("0xt1", "1"), ("0xt2", "2"), ("0xt3", "1")],
+        [("0xt1", "1", None, None), ("0xt2", "2", None, None), ("0xt3", "1", None, None)],
     )
     bundles = spark.createDataFrame(
         [
@@ -222,8 +251,5 @@ def test_unbooked_bundles_dropped_except_atomic_arb(spark):
     assert [(r["tx_hashes"], r["revenue_usd"], r["profit_usd"]) for r in arb] == [
         (["0xarb"], Decimal(0), Decimal(-1))
     ]
-    claimed = spark.createDataFrame([], "tx_hashes array<string>")
-    ledger = _ledger(spark, [("0xl", lp, "40")], [("0xl", "1")])
-    assert searcher_activity_bundles(
-        claimed, tx_info.filter(F.col("tx_hash") == "0xl"), searchers, ledger
-    ).count() == 0
+    ledger = _ledger(spark, [("0xl", lp, "40")], [("0xl", "1", "0xs", None)])
+    assert searcher_activity_bundles(ledger, searchers).count() == 0

@@ -99,6 +99,19 @@ def test_dedup_follows_the_precedence_table():
     assert _kept(rows) == [("sandwich", ["0xf", "0xv", "0xb"]), ("searcher_tx", ["0xy"])]
 
 
+def test_searcher_tx_yields_to_any_bundle_on_its_tx():
+    """I13 joins O1, so O3 decides which searcher_tx rows stay. One on a tx
+    a kept bundle holds goes, one on a tx no other bundle holds stays, and
+    one on a tx held only by a bundle O3 drops goes too: O3 compares each
+    pair that shares a tx, whether or not the stronger one survives."""
+    rows = [(["0xf", "0xv", "0xb"], "0xe1", "sandwich", 10, 1),
+            (["0xm", "0xv", "0xk"], "0xe2", "jit", 4, 2),  # loses 0xv to the sandwich
+            (["0xf"], "0xe1", "searcher_tx", 1, 3),
+            (["0xu"], "0xe3", "searcher_tx", 1, 4),
+            (["0xm"], "0xe2", "searcher_tx", 1, 5)]
+    assert _kept(rows) == [("sandwich", ["0xf", "0xv", "0xb"]), ("searcher_tx", ["0xu"])]
+
+
 def test_dedup_ties_break_on_type_then_min_hash_then_id():
     same_prio = [(["0xa", "0xz"], "0xe", "sandwich:big_mac", 1, 1),
                  (["0xb", "0xz"], "0xe", "sandwich", 1, 2)]

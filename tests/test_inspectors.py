@@ -9,6 +9,7 @@ from __future__ import annotations
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from brontes_spark.inspectors import (
     atomic_arb_bundles,
@@ -178,6 +179,24 @@ def test_repeated_searcher_address_adds_no_bundle(tables):
     # a fanned-out lookup repeats the sandwich, arb and cex_dex bundles
     headers = {r["block_number"]: r["n_bundles"] for r in out["mev_blocks"].collect()}
     assert headers[100] == headers[101] == headers[104] == 1
+
+
+def test_repeated_searcher_address_keeps_one_fund(spark):
+    """block_analysis_wide's fund lookup keeps one row per `searcher_info`
+    address, its greatest non-null fund, so a repeated address fans no
+    bundle out."""
+    from brontes_spark.inspectors.composer import block_analysis_wide
+    from brontes_spark.plans.mev_fixture import _composed
+
+    tables, out = _composed(spark)
+    info = tables["searcher_info"]
+    no_fund = info.withColumn("fund", F.lit(None).cast("string"))
+    repeated = info.unionByName(info).unionByName(no_fund)
+    wide = block_analysis_wide(out["bundles"], tables["actions"], repeated)
+    b100 = wide.filter(F.col("block_number") == 100).first()
+    assert b100["all_bundle_count"] == 1
+    assert b100["all_total_profit"] == Decimal("88")
+    assert b100["all_top_fund_profit"] == "fund_1"
 
 
 def test_atomic_arb_history_heuristics(spark):
@@ -465,28 +484,26 @@ def test_propeller_solver_contract_tag(spark):
     tags = protocol_searcher_tags(a2p)
     assert [r["address"] for r in tags.collect()] == [SOLVER]
 
-    tx_info = spark.createDataFrame(
-        [(1, "0xs1", "0xeoa1", SOLVER), (1, "0xn1", "0xeoa2", None)],
-        "block_number long, tx_hash string, eoa string, mev_contract string",
-    )
-    claimed = spark.createDataFrame([], "tx_hashes array<string>")
     searcher_info = spark.createDataFrame([], "address string")
     deltas = spark.createDataFrame(
         [("0xs1", SOLVER, Decimal(30)), ("0xn1", "0xeoa2", Decimal(30))],
         "tx_hash string, address string, usd decimal(38,18)",
     )
     gas = spark.createDataFrame(
-        [("0xs1", Decimal(1)), ("0xn1", Decimal(1))],
-        "tx_hash string, gas_usd decimal(38,18)",
+        [(1, "0xs1", "0xeoa1", SOLVER, Decimal(1)), (1, "0xn1", "0xeoa2", None, Decimal(1))],
+        "block_number long, tx_hash string, eoa string, mev_contract string, "
+        "gas_usd decimal(38,18)",
     )
-    out = searcher_activity_bundles(
-        claimed, tx_info, searcher_info, tx_ledger(deltas, gas), searcher_contracts=tags
-    ).collect()
+    ledger = tx_ledger(deltas, gas)
+    out = searcher_activity_bundles(ledger, searcher_info, searcher_contracts=tags).collect()
     # only the solver-contract tx qualifies; the untagged profitable tx does not
     assert len(out) == 1
     row = out[0].asDict()
     assert row["tx_hashes"] == ["0xs1"] and row["mev_type"] == "searcher_tx"
     assert row["profit_usd"] == Decimal(29)
+    # a tx matched by both its known eoa and its tagged contract is one bundle
+    known = spark.createDataFrame([("0xeoa1",)], "address string")
+    assert searcher_activity_bundles(ledger, known, searcher_contracts=tags).count() == 1
 
 
 def _mini_env(spark, tx_hashes, block=1, ts=1_700_000_000):
