@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import AMOUNT, build_ledger
+from .accounting import AMOUNT
 
 MAX_PROFIT_USD = 15_000_000   # mev_inspectors/mod.rs:12
 MIN_PROFIT_USD = -15_000_000  # mev_inspectors/mod.rs:13
@@ -165,9 +165,8 @@ def atomic_arb_bundles(
     actions: DataFrame,
     tx_info: DataFrame,
     dex_prices: DataFrame,
-    block_info: DataFrame,
     searcher_info: DataFrame,
-    ledger: DataFrame | None = None,
+    ledger: DataFrame,
 ) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
         "block_number", "tx_hash", "tx_index", "trace_idx",
@@ -211,9 +210,6 @@ def atomic_arb_bundles(
             F.col("__cnt").alias("__cnt_c"),
         )
     )
-
-    if ledger is None:
-        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
 
     # searcher revenue = net USD delta of the tx's own eoa/contract
     # addresses, off its ledger row; a tx that books none to them has

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from ..operators.vwap import expanding_vwap
 from ..operators.windows import keep_largest
-from .accounting import gas_usd
 
 PRE_STEP_US = 1_000_000
 POST_STEP_US = 1_000_000
@@ -57,7 +56,8 @@ def _tx_bundles(
 ) -> DataFrame:
     """One `mev_type` bundle per tx with positive revenue, from `legs`:
     the `_quote_swaps` swaps, each with a CEX price `cex_price`. `pick` selects
-    among the priced legs before they sum per tx."""
+    among the priced legs before they sum per tx. Only the gas columns of
+    `ledger` are read, so `gas_usd` rows serve as well as the ledger."""
     # whole-swap PnL accrues in quote-token units, then converts to USD once
     # at the quote asset's per-tx-index price (the reference values the
     # markout via the quote asset's USD price; converting only the DEX side
@@ -101,12 +101,11 @@ def _tx_bundles(
 
 def cex_dex_quotes_bundles(
     actions: DataFrame,
-    tx_info: DataFrame,
     dex_prices: DataFrame,
     block_info: DataFrame,
     cex_quotes: DataFrame,
+    ledger: DataFrame,
     quote_token: str = "0xusd",
-    ledger: DataFrame | None = None,
     exchange: str = "binance",
 ) -> DataFrame:
     """I9 (mev_inspectors/cex_dex/quotes/cex_dex.rs): the quotes variant —
@@ -130,8 +129,6 @@ def cex_dex_quotes_bundles(
         F.split(F.col("target_id"), "\\|")[1].cast("long").alias("trace_idx"),
         F.col("mid_price").cast("decimal(38,18)").alias("cex_price"),
     ).filter(F.col("cex_price").isNotNull())
-    if ledger is None:  # only its gas columns are read
-        ledger = gas_usd(tx_info, block_info)
     return _tx_bundles(
         swaps.join(quoted, ["tx_hash", "trace_idx"]), dex_prices, ledger, quote_token,
         "cex_dex_quotes",
@@ -148,12 +145,11 @@ MAX_ARB_DELTA = 3
 
 def cex_dex_bundles(
     actions: DataFrame,
-    tx_info: DataFrame,
     dex_prices: DataFrame,
     block_info: DataFrame,
     cex_trades: DataFrame,
+    ledger: DataFrame,
     quote_token: str = "0xusd",
-    ledger: DataFrame | None = None,
 ) -> DataFrame:
     """I8: per swap, the GLOBAL (all-exchange) expanding-window VWAP and one
     leg per exchange (process_global_vwam / process_per_exchange,
@@ -199,8 +195,6 @@ def cex_dex_bundles(
         F.col("vwap").cast("decimal(38,18)").alias("cex_price"),
         F.split(F.col("anchor_id"), "\\|")[2].alias("leg"),
     )
-    if ledger is None:  # only its gas columns are read
-        ledger = gas_usd(tx_info, block_info)
     return _tx_bundles(
         swaps.join(vwap, ["tx_hash", "trace_idx"]), dex_prices, ledger, quote_token,
         "cex_dex", pick=_best_guarded_leg,

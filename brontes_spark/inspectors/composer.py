@@ -209,10 +209,9 @@ def dedup_by_precedence(bundles: DataFrame) -> DataFrame:
     )
 
 
-def mev_block_header(bundles: DataFrame, ledger: DataFrame, block_info: DataFrame) -> DataFrame:
+def mev_block_header(bundles: DataFrame, gas: DataFrame, block_info: DataFrame) -> DataFrame:
     """O4: per-block rollup (composer/utils.rs build_mev_header). The
-    builder's gas take and tx count come from the per-tx `ledger` (one row
-    per `gas_usd` row)."""
+    builder's gas take and tx count come from the `gas_usd` rows `gas`."""
     per_block = bundles.groupBy("block_number").agg(
         F.count(F.lit(1)).alias("n_bundles"),
         F.sum("profit_usd").cast("decimal(38,18)").alias("total_profit_usd"),
@@ -220,7 +219,7 @@ def mev_block_header(bundles: DataFrame, ledger: DataFrame, block_info: DataFram
         F.sum("gas_usd").cast("decimal(38,18)").alias("total_bribe_usd"),
         F.sort_array(F.collect_list("mev_type")).alias("mev_types"),
     )
-    builder_take = ledger.groupBy("block_number").agg(
+    builder_take = gas.groupBy("block_number").agg(
         F.sum("gas_usd").cast("decimal(38,18)").alias("builder_gas_usd"),
         F.count(F.lit(1)).alias("n_txs"),
     )
@@ -482,16 +481,16 @@ def block_analysis_wide(
 
 def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """O1 → I11 → O2 → O3 → O4 over the fixture-shaped tables."""
-    args = (tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"])
+    actions, tx_info, dex_prices, block_info = (
+        tables[k] for k in ("actions", "tx_info", "dex_prices", "block_info")
+    )
     # one shared accounting pass, cached for every inspector (the reference
     # likewise shares the classified tree + metadata across inspectors,
     # composer/mod.rs:71-120). usd_deltas and gas_usd are called from this
     # module, not through build_ledger: a traced perfbench run wraps them by
     # name in its `inspectors.accounting` span.
-    ledger = tx_ledger(
-        usd_deltas(action_deltas(tables["actions"]), tables["dex_prices"]),
-        gas_usd(tables["tx_info"], tables["block_info"]),
-    ).cache()
+    gas = gas_usd(tx_info, block_info)
+    ledger = tx_ledger(usd_deltas(action_deltas(actions), dex_prices), gas).cache()
     # metadata-only solver tags (PropellerLabsSolver-class protocols) extend
     # the known-searcher set when the protocol dim is provided
     tags = None
@@ -500,12 +499,12 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
         tags = protocol_searcher_tags(tables["address_to_protocol"])
     all_bundles = [
-        sandwich_bundles(*args, ledger=ledger),
-        jit_bundles(*args, ledger=ledger),
-        liquidation_bundles(*args, ledger=ledger),
-        cex_dex_bundles(*args, cex_trades=tables["cex_trades"], ledger=ledger),
-        cex_dex_quotes_bundles(*args, cex_quotes=tables["cex_quotes"], ledger=ledger),
-        atomic_arb_bundles(*args, searcher_info=tables["searcher_info"], ledger=ledger),
+        sandwich_bundles(actions, tx_info, ledger),
+        jit_bundles(actions, tx_info, ledger),
+        liquidation_bundles(actions, ledger),
+        cex_dex_bundles(actions, dex_prices, block_info, tables["cex_trades"], ledger),
+        cex_dex_quotes_bundles(actions, dex_prices, block_info, tables["cex_quotes"], ledger),
+        atomic_arb_bundles(actions, tx_info, dex_prices, tables["searcher_info"], ledger),
         searcher_activity_bundles(ledger, tables["searcher_info"], searcher_contracts=tags),
     ]
     # Two eager lineage cuts, each held in executor memory (a single-node
@@ -514,9 +513,11 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     # the seven inspector DAGs, which without the cut adds about 10 s of
     # plan building before the first job. The second is the final bundles,
     # which the three sinks and the header read without recomputing O2 and
-    # O3.
+    # O3. Only the inspectors read the ledger (the header reads the gas
+    # rows), so it is released once the cuts hold their output: the call
+    # leaves nothing cached in the session.
     unioned = reduce(lambda a, b: a.unionByName(b), all_bundles).localCheckpoint()
     composed = compose_sandwich_jit(retag_jit_cex_dex(unioned, tables["searcher_info"]))
     final = dedup_by_precedence(composed).orderBy("block_number", "mev_type").localCheckpoint()
-    header = mev_block_header(final, ledger, tables["block_info"])
-    return {"bundles": final, "mev_blocks": header}
+    ledger.unpersist()
+    return {"bundles": final, "mev_blocks": mev_block_header(final, gas, block_info)}

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import build_ledger, bundle_pnl
+from .accounting import bundle_pnl
 
 MAX_VICTIMS = 20
 
@@ -91,13 +91,7 @@ def block_jits(txs: pd.DataFrame, acts: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=_PAIR_COLS)
 
 
-def jit_bundles(
-    actions: DataFrame,
-    tx_info: DataFrame,
-    dex_prices: DataFrame,
-    block_info: DataFrame,
-    ledger: DataFrame | None = None,
-) -> DataFrame:
+def jit_bundles(actions: DataFrame, tx_info: DataFrame, ledger: DataFrame) -> DataFrame:
     is_swap = F.col("action_type").isin("swap", "swap_with_fee")
     acts = actions.filter(is_swap | F.col("action_type").isin("mint", "burn")).select(
         "block_number", "tx_hash", "tx_index", "action_type",
@@ -110,8 +104,6 @@ def jit_bundles(
         .applyInPandas(block_jits, PAIR_SCHEMA)
     )
 
-    if ledger is None:
-        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
     return (
         bundle_pnl(
             pairs, ledger, ["block_number", "actor", "front_hash", "back_hash"],

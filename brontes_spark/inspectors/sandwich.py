@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import build_ledger, bundle_pnl
+from .accounting import bundle_pnl
 
 MAX_SHRINK = 6
 
@@ -176,13 +176,7 @@ def block_sandwiches(txs: pd.DataFrame, swaps: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=_BEST_COLS)
 
 
-def sandwich_bundles(
-    actions: DataFrame,
-    tx_info: DataFrame,
-    dex_prices: DataFrame,
-    block_info: DataFrame,
-    ledger: DataFrame | None = None,
-) -> DataFrame:
+def sandwich_bundles(actions: DataFrame, tx_info: DataFrame, ledger: DataFrame) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
         "block_number", "tx_hash", "swap.pool", "swap.token_in", "swap.token_out"
     )
@@ -196,8 +190,6 @@ def sandwich_bundles(
     # I5: PnL over the searcher set across the segment's searcher txs; the
     # set spans EVERY chain tx's identity (a multi-EOA contract chain books
     # all its EOAs' deltas, like collect_address_set_for_accounting per tx)
-    if ledger is None:
-        ledger = build_ledger(actions, tx_info, dex_prices, block_info)
     return (
         bundle_pnl(
             best, ledger, ["block_number", "actor", "segment"],

@@ -117,18 +117,15 @@ def asof_join(
             F.first(rt, ignorenulls=True).over(w),
         )
 
-    if direction == "backward":
-        pay, rt = back_cols(unioned)
-        matched = unioned.withColumn("__match", pay)
-        if tolerance is not None:  # the matched-time column exists only
-            matched = matched.withColumn("__rt", rt)  # when something reads it
-        dist = F.col("__t") - F.col("__rt")
-    elif direction == "forward":
-        pay, rt = fwd_cols(unioned)
-        matched = unioned.withColumn("__match", pay)
-        if tolerance is not None:
-            matched = matched.withColumn("__rt", rt)
-        dist = F.col("__rt") - F.col("__t")
+    if direction in ("backward", "forward"):
+        back = direction == "backward"
+        pay, rt = (back_cols if back else fwd_cols)(unioned)
+        # the matched-time column exists only when something reads it, and
+        # rides the same projection, so both share one Window operator
+        rts = [rt.alias("__rt")] if tolerance is not None else []
+        matched = unioned.select("*", pay.alias("__match"), *rts)
+        t, r = F.col("__t"), F.col("__rt")
+        dist = t - r if back else r - t
     else:  # nearest
         bpay, brt = back_cols(unioned)
         fpay, frt = fwd_cols(unioned)

@@ -43,16 +43,13 @@ def quote_at(
         on=["base_token", "quote_token"],
         left_time="ts", right_time="q_ts",
         tiebreak="q_ts", payload_prefix="",
-        how="left",
-    )
-    fresh = F.col("q_ts").isNotNull() & (
-        (F.col("ts") - F.col("q_ts")) <= max_time_diff_us
+        how="left", tolerance=max_time_diff_us,
     )
     return j.select(
         *targets.columns,
-        F.when(fresh, F.col("ask_price")).alias("ask_price"),
-        F.when(fresh, F.col("bid_price")).alias("bid_price"),
-        F.when(fresh, (F.col("ask_price") + F.col("bid_price")) / 2).alias("mid_price"),
+        "ask_price",
+        "bid_price",
+        ((F.col("ask_price") + F.col("bid_price")) / 2).alias("mid_price"),
     )
 
 

@@ -24,7 +24,8 @@ _memo: dict[int, tuple[dict, dict]] = {}
 def _composed(spark: SparkSession):
     """Run the composer once per session; fixture data is KB-sized, so also
     drop shuffle parallelism (hundreds of 32-task stages dominate wall time
-    otherwise — pure scheduler overhead, not compute)."""
+    otherwise — pure scheduler overhead, not compute). `run_composer`
+    materializes its final bundles itself, under this conf."""
     key = id(spark)
     if key not in _memo:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -32,8 +33,6 @@ def _composed(spark: SparkSession):
         try:
             tables = load_fixtures(spark)
             out = run_composer(tables)
-            out["bundles"] = out["bundles"].cache()
-            out["bundles"].count()  # materialize under the low-parallelism conf
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         _memo[key] = (tables, out)

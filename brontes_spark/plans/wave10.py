@@ -1848,12 +1848,27 @@ def ml_fold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-composition $17), liquidations.rs:170-208 ($19), jit tests ($4).
 
 
-def _fixture_inspector(spark: SparkSession, fn) -> DataFrame:
-    """Run one inspector over the planted tables."""
+def _fixture_ledger(spark: SparkSession) -> tuple[dict[str, DataFrame], DataFrame]:
+    """The planted tables and the per-tx ledger `run_composer` builds from
+    them."""
+    from ..inspectors.accounting import build_ledger
     from ..sources.fixtures import load_fixtures
 
     t = load_fixtures(spark)
-    return fn(t["actions"], t["tx_info"], t["dex_prices"], t["block_info"])
+    return t, build_ledger(t["actions"], t["tx_info"], t["dex_prices"], t["block_info"])
+
+
+def _fixture_cex_dex(spark: SparkSession, fn, feed: str) -> DataFrame:
+    """Run one CEX-DEX variant over the planted tables and their `feed`,
+    with the gas rows as its ledger (it reads only their gas columns)."""
+    from ..inspectors.accounting import gas_usd
+    from ..sources.fixtures import load_fixtures
+
+    t = load_fixtures(spark)
+    return fn(
+        t["actions"], t["dex_prices"], t["block_info"], t[feed],
+        gas_usd(t["tx_info"], t["block_info"]),
+    )
 
 
 def _bundle_shape(df: DataFrame) -> DataFrame:
@@ -1941,7 +1956,8 @@ _GAS_USD_SQL = (
 def i5_sandwich_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.sandwich import sandwich_bundles
 
-    return _bundle_shape(_fixture_inspector(spark, sandwich_bundles))
+    t, ledger = _fixture_ledger(spark)
+    return _bundle_shape(sandwich_bundles(t["actions"], t["tx_info"], ledger))
 
 
 @register(
@@ -1977,7 +1993,8 @@ def i5_sandwich_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def i12_liquidation_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.liquidations import liquidation_bundles
 
-    return _bundle_shape(_fixture_inspector(spark, liquidation_bundles))
+    t, ledger = _fixture_ledger(spark)
+    return _bundle_shape(liquidation_bundles(t["actions"], ledger))
 
 
 @register(
@@ -2024,7 +2041,8 @@ def i12_liquidation_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def i10_jit_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.jit import jit_bundles
 
-    return _bundle_shape(_fixture_inspector(spark, jit_bundles))
+    t, ledger = _fixture_ledger(spark)
+    return _bundle_shape(jit_bundles(t["actions"], t["tx_info"], ledger))
 
 
 @register(
@@ -2082,15 +2100,8 @@ def i10_jit_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def i8_cex_dex_markout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.cex_dex import cex_dex_bundles
-    from ..sources.fixtures import load_fixtures
 
-    def run(actions, tx_info, dex_prices, block_info):
-        t = load_fixtures(spark)
-        return cex_dex_bundles(
-            actions, tx_info, dex_prices, block_info, t["cex_trades"]
-        )
-
-    return _bundle_shape(_fixture_inspector(spark, run))
+    return _bundle_shape(_fixture_cex_dex(spark, cex_dex_bundles, "cex_trades"))
 
 
 @register(
@@ -2130,15 +2141,8 @@ def i8_cex_dex_markout(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def i9_cex_dex_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.cex_dex import cex_dex_quotes_bundles
-    from ..sources.fixtures import load_fixtures
 
-    def run(actions, tx_info, dex_prices, block_info):
-        t = load_fixtures(spark)
-        return cex_dex_quotes_bundles(
-            actions, tx_info, dex_prices, block_info, t["cex_quotes"]
-        )
-
-    return _bundle_shape(_fixture_inspector(spark, run))
+    return _bundle_shape(_fixture_cex_dex(spark, cex_dex_quotes_bundles, "cex_quotes"))
 
 
 @register(

@@ -63,25 +63,18 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(
-    app_name: str = "brontes-spark",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "brontes-spark", cpus: int | str | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        # stage-progress bars interleave with stdout and can push the bench's
-        # primary JSON line past the driver's 2000-char tail capture
-        # (VERDICT r6 "what's wrong" #1) — suppress them everywhere
+        # stage-progress bars interleave with stdout and can push a
+        # caller's one-line JSON result out of a tail capture
         .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in RUNTIME_CONFS.items():

@@ -17,7 +17,7 @@ from brontes_spark.inspectors import (
     liquidation_bundles,
     sandwich_bundles,
 )
-from brontes_spark.inspectors.accounting import action_deltas, bundle_pnl, tx_ledger
+from brontes_spark.inspectors.accounting import action_deltas, build_ledger, bundle_pnl, tx_ledger
 from brontes_spark.inspectors.composer import searcher_activity_bundles
 from brontes_spark.sources.fixtures import _swap
 
@@ -238,16 +238,18 @@ def test_unbooked_bundles_dropped_except_atomic_arb(spark):
         (3, "0xjf", "0xs", None), (4, "0xjv", "0xv2", None), (5, "0xjb", "0xs", None),
         (6, "0xl", "0xs", None), (7, "0xarb", "0xs", None),
     ])
-    args = (actions, tx_info, dex_prices, block_info)
-    assert sandwich_bundles(*args).count() == 0
-    assert jit_bundles(*args).count() == 0
-    assert liquidation_bundles(*args).count() == 0
+    booked = build_ledger(actions, tx_info, dex_prices, block_info)
+    assert sandwich_bundles(actions, tx_info, booked).count() == 0
+    assert jit_bundles(actions, tx_info, booked).count() == 0
+    assert liquidation_bundles(actions, booked).count() == 0
     searchers = spark.createDataFrame(
         [dict(address="0xs", kind="eoa", fund=None, mev_types=["atomic_arb"],
               sibling_searchers=[], bundle_counts={})],
         S.SEARCHER_INFO_SCHEMA,
     )
-    arb = [r.asDict() for r in atomic_arb_bundles(*args, searchers).collect()]
+    arb = [r.asDict() for r in atomic_arb_bundles(
+        actions, tx_info, dex_prices, searchers, booked
+    ).collect()]
     assert [(r["tx_hashes"], r["revenue_usd"], r["profit_usd"]) for r in arb] == [
         (["0xarb"], Decimal(0), Decimal(-1))
     ]

@@ -168,6 +168,7 @@ def test_traces_to_inspector_end_to_end(spark, classified):
     """The classified frame feeds the inspector stack directly: the arb tx
     nets +60 A ⇒ revenue $60, profit $59 at $1 gas."""
     from brontes_spark.inspectors import atomic_arb_bundles
+    from brontes_spark.inspectors.accounting import build_ledger
 
     tx_info = spark.createDataFrame(
         [(200, 0, "0xarb2", "0xs2", None, 100_000, 10_000_000_000_000, 0, None, False, False)],
@@ -193,7 +194,8 @@ def test_traces_to_inspector_end_to_end(spark, classified):
         "address string, kind string, fund string, mev_types array<string>, "
         "sibling_searchers array<string>",
     )
-    bundles = atomic_arb_bundles(classified, tx_info, dex_prices, binfo, searchers).collect()
+    ledger = build_ledger(classified, tx_info, dex_prices, binfo)
+    bundles = atomic_arb_bundles(classified, tx_info, dex_prices, searchers, ledger).collect()
     assert len(bundles) == 1
     b = bundles[0].asDict()
     assert b["mev_type"] == "atomic_arb:triangle"

@@ -19,6 +19,7 @@ from brontes_spark.inspectors import (
     run_composer,
     sandwich_bundles,
 )
+from brontes_spark.inspectors.accounting import build_ledger, gas_usd
 from brontes_spark.sources.fixtures import load_fixtures
 
 
@@ -29,6 +30,14 @@ def tables(spark):
     return t
 
 
+@pytest.fixture(scope="module")
+def ledger(tables):
+    """The per-tx ledger `run_composer` builds over the fixture tables."""
+    return build_ledger(
+        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
+    )
+
+
 def _one(df, **filters):
     rows = [r.asDict() for r in df.collect()]
     for k, v in filters.items():
@@ -37,10 +46,8 @@ def _one(df, **filters):
     return rows[0]
 
 
-def test_sandwich(tables):
-    b = sandwich_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
-    )
+def test_sandwich(tables, ledger):
+    b = sandwich_bundles(tables["actions"], tables["tx_info"], ledger)
     row = _one(b, block_number=100)
     assert row["mev_type"] == "sandwich"
     assert row["tx_hashes"][0] == "0xf0" and row["tx_hashes"][-1] == "0xb0"
@@ -51,10 +58,10 @@ def test_sandwich(tables):
     assert row["profit_usd"] == Decimal("88")
 
 
-def test_atomic_arb(tables):
+def test_atomic_arb(tables, ledger):
     b = atomic_arb_bundles(
         tables["actions"], tables["tx_info"], tables["dex_prices"],
-        tables["block_info"], tables["searcher_info"],
+        tables["searcher_info"], ledger,
     )
     rows = [r.asDict() for r in b.collect()]
     arb = _one(b, block_number=101)
@@ -66,10 +73,8 @@ def test_atomic_arb(tables):
 
 
 @pytest.mark.slow
-def test_jit(tables):
-    b = jit_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
-    )
+def test_jit(tables, ledger):
+    b = jit_bundles(tables["actions"], tables["tx_info"], ledger)
     row = _one(b, block_number=102)
     assert row["tx_hashes"] == ["0xjf", "0xjv", "0xjb"]
     # +300 A − 2.8 B = 300 − 294 = $6; gas $2
@@ -77,10 +82,8 @@ def test_jit(tables):
     assert row["profit_usd"] == Decimal("4")
 
 
-def test_liquidation(tables):
-    b = liquidation_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
-    )
+def test_liquidation(tables, ledger):
+    b = liquidation_bundles(tables["actions"], ledger)
     row = _one(b, block_number=103)
     # 60 A @ $2 − 100 DAI @ $1 = $20; gas $1
     assert row["revenue_usd"] == Decimal("20")
@@ -90,8 +93,8 @@ def test_liquidation(tables):
 @pytest.mark.slow
 def test_cex_dex_markout(tables):
     b = cex_dex_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"],
-        tables["block_info"], tables["cex_trades"],
+        tables["actions"], tables["dex_prices"], tables["block_info"],
+        tables["cex_trades"], gas_usd(tables["tx_info"], tables["block_info"]),
     )
     row = _one(b, block_number=104)
     # expanding window widens to step 3: vwap = (40·1.05+40·1.06+20·1.08)/100
@@ -102,10 +105,8 @@ def test_cex_dex_markout(tables):
     assert row["profit_usd"] == Decimal("4")
 
 
-def test_sandwich_big_mac(tables):
-    b = sandwich_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
-    )
+def test_sandwich_big_mac(tables, ledger):
+    b = sandwich_bundles(tables["actions"], tables["tx_info"], ledger)
     row = _one(b, block_number=107)
     assert row["mev_type"] == "sandwich:big_mac"
     # tx_hashes in BLOCK order: the interleaved Big Mac keeps each victim
@@ -114,10 +115,8 @@ def test_sandwich_big_mac(tables):
     assert row["profit_usd"] == Decimal("97")
 
 
-def test_sandwich_gap_partition(tables):
-    b = sandwich_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
-    )
+def test_sandwich_gap_partition(tables, ledger):
+    b = sandwich_bundles(tables["actions"], tables["tx_info"], ledger)
     rows = sorted(
         (r.asDict() for r in b.filter("block_number = 108").collect()),
         key=lambda r: r["tx_hashes"][0],
@@ -132,8 +131,8 @@ def test_cex_dex_quotes_variant(tables):
     from brontes_spark.inspectors.cex_dex import cex_dex_quotes_bundles
 
     b = cex_dex_quotes_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"],
-        tables["block_info"], tables["cex_quotes"],
+        tables["actions"], tables["dex_prices"], tables["block_info"],
+        tables["cex_quotes"], gas_usd(tables["tx_info"], tables["block_info"]),
     )
     row = _one(b, block_number=104)
     # X1 as-of picks the -0.5s quote (the -3.5s print is stale):
@@ -179,6 +178,16 @@ def test_repeated_searcher_address_adds_no_bundle(tables):
     # a fanned-out lookup repeats the sandwich, arb and cex_dex bundles
     headers = {r["block_number"]: r["n_bundles"] for r in out["mev_blocks"].collect()}
     assert headers[100] == headers[101] == headers[104] == 1
+
+
+def test_run_composer_leaves_nothing_cached(spark):
+    """`run_composer` releases the ledger it caches for its inspectors, so
+    no later plan in the session reads a cache the call left behind."""
+    spark.catalog.clearCache()
+    out = run_composer(load_fixtures(spark))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # the header reads the gas rows, not the released ledger
+    assert out["mev_blocks"].filter("block_number = 100").first()["n_txs"] == 4
 
 
 def test_repeated_searcher_address_keeps_one_fund(spark):
@@ -264,7 +273,8 @@ def test_atomic_arb_history_heuristics(spark):
     )
 
     rows = {r["tx_hashes"][0]: r.asDict() for r in atomic_arb_bundles(
-        actions, tx_info, dex_prices, block_info, searchers
+        actions, tx_info, dex_prices, searchers,
+        build_ledger(actions, tx_info, dex_prices, block_info),
     ).collect()}
     assert set(rows) == {"0xh1", "0xh4"}
     assert rows["0xh1"]["mev_type"] == "atomic_arb:triangle"
@@ -409,7 +419,7 @@ def test_cex_dex_per_exchange_legs_and_guard(spark):
         [(1, 0, USD, Decimal(1), None, None), (1, 0, A, Decimal(1), None, None)],
         S.DEX_PRICES_SCHEMA,
     )
-    b = cex_dex_bundles(actions, tx_info, dex_prices, block_info, trades)
+    b = cex_dex_bundles(actions, dex_prices, block_info, trades, gas_usd(tx_info, block_info))
     rows = {r["tx_hashes"][0]: r.asDict() for r in b.collect()}
     # best leg = cheapex at 1.00: rev = 111 - 100*1.00 = 11 (global blend
     # would give 111 - 105 = 6)
@@ -461,7 +471,9 @@ def test_sandwich_nonswap_victims_listed_and_gap_joined(spark):
         [(bn, i, t, Decimal(1), None, None) for i in range(4) for t in (A, B, USD)],
         S.DEX_PRICES_SCHEMA,
     )
-    out = sandwich_bundles(actions, tx_info, dex_prices, block_info)
+    out = sandwich_bundles(
+        actions, tx_info, build_ledger(actions, tx_info, dex_prices, block_info)
+    )
     rows = [r.asDict() for r in out.collect()]
     assert len(rows) == 1
     # both the swap victim AND the transfer-only tx are listed, in tx order
@@ -565,7 +577,8 @@ def test_cex_dex_multi_swap_tx_single_bundle(spark):
     )
     tx_info, block_info, dex_prices = _mini_env(spark, ["0xmulti"])
     rows = [r.asDict() for r in
-            cex_dex_bundles(actions, tx_info, dex_prices, block_info, trades).collect()]
+            cex_dex_bundles(actions, dex_prices, block_info, trades,
+                            gas_usd(tx_info, block_info)).collect()]
     assert len(rows) == 1
     # per-swap markouts: (111-100) + (60-50) = 21; gas $1 charged once
     assert rows[0]["revenue_usd"] == Decimal("21")
@@ -614,7 +627,8 @@ def test_jit_multi_pool_pair_single_bundle(spark):
     )
     tx_info, block_info, dex_prices = _mini_env(spark, ["0xf", "0xv1", "0xb"])
     rows = [r.asDict() for r in
-            jit_bundles(actions, tx_info, dex_prices, block_info).collect()]
+            jit_bundles(actions, tx_info,
+                        build_ledger(actions, tx_info, dex_prices, block_info)).collect()]
     assert len(rows) == 1
     # searcher deltas: -10-10 (mints) +12+12 (burns) = +4 A @ $1; gas 2x$1
     assert rows[0]["revenue_usd"] == Decimal("4")
@@ -646,7 +660,8 @@ def test_liquidation_multi_liquidator_tx_single_bundle(spark):
     )
     tx_info, block_info, dex_prices = _mini_env(spark, ["0xliq2"])
     rows = [r.asDict() for r in
-            liquidation_bundles(actions, tx_info, dex_prices, block_info).collect()]
+            liquidation_bundles(
+                actions, build_ledger(actions, tx_info, dex_prices, block_info)).collect()]
     assert len(rows) == 1
     # only the tx searcher set (eoa=0xs): +100 collateral - 60 debt = 40;
     # 0xother's deltas are not the searcher's; gas $1 once
@@ -735,7 +750,8 @@ def test_sandwich_dual_scan_catches_eoa_front_contract_back(spark):
                               (2, "0xb", "0xeoa", "0xctr")])
     binfo, prices = _binfo_prices(spark, [A, B])
     rows = [r.asDict() for r in
-            sandwich_bundles(actions, tx_info, prices, binfo).collect()]
+            sandwich_bundles(actions, tx_info,
+                             build_ledger(actions, tx_info, prices, binfo)).collect()]
     assert len(rows) == 1
     assert rows[0]["tx_hashes"] == ["0xf", "0xv", "0xb"]
     # A: -100 +105 = +5 at $1; B: +99 -99 = 0 → revenue $5, gas $2, profit $3
@@ -762,7 +778,8 @@ def test_sandwich_multi_eoa_contract_chain_not_fragmented(spark):
                               (2, "0xb", "0xeoaB", "0xctr")])
     binfo, prices = _binfo_prices(spark, [A, B])
     rows = [r.asDict() for r in
-            sandwich_bundles(actions, tx_info, prices, binfo).collect()]
+            sandwich_bundles(actions, tx_info,
+                             build_ledger(actions, tx_info, prices, binfo)).collect()]
     assert len(rows) == 1
     assert rows[0]["tx_hashes"] == ["0xf", "0xv", "0xb"]
     # attribution = first searcher tx's identity
@@ -792,4 +809,5 @@ def test_sandwich_requires_full_overlap_with_back(spark):
     tx_info = _txinfo(spark, [(0, "0xf", "0xeoa", None), (1, "0xv", "0xvic", None),
                               (2, "0xb", "0xeoa", None)])
     binfo, prices = _binfo_prices(spark, [A, B])
-    assert sandwich_bundles(actions, tx_info, prices, binfo).count() == 0
+    ledger = build_ledger(actions, tx_info, prices, binfo)
+    assert sandwich_bundles(actions, tx_info, ledger).count() == 0

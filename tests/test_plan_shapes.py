@@ -46,29 +46,12 @@ def test_snapshot_covers_every_gate():
     assert not any("ERROR" in v for v in SNAPSHOT.values())
 
 
-#: these per-inspector fixture gates build whole inspector plans over the
-#: planted tables, and their feature counts depend on whether the composer
-#: gates have already run in the session: `run_composer` caches the per-tx
-#: ledger, and a later plan that reads the same subplan reads the cache
-#: instead (i5's x_hash reads 4 before the composer gates ran, 5 after;
-#: i12's 2 and 5). For these, exact counts are meaningless; the load-bearing
-#: invariants — no cartesian product, and the same feature KINDS present —
-#: are asserted instead. The gates' VALUES stay hash-pinned by their
-#: recomputing oracles.
-SESSION_DEPENDENT = {"i5_sandwich_pnl", "i10_jit_bundles", "i12_liquidation_bundles"}
-
-
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_plan_shape_unchanged(spark, name):
     got = _shape(spark, name)
     want = SNAPSHOT[name]
-    if name in SESSION_DEPENDENT:
-        assert set(got) == set(want), (
-            f"{name}: plan FEATURE SET drifted {sorted(want)} -> {sorted(got)}"
-        )
-    else:
-        assert got == want, (
-            f"{name}: plan shape drifted {want} -> {got}; if intentional, "
-            "re-run scripts/plan_snapshot.py and commit the diff"
-        )
+    assert got == want, (
+        f"{name}: plan shape drifted {want} -> {got}; if intentional, "
+        "re-run scripts/plan_snapshot.py and commit the diff"
+    )
     assert got.get("cartesian", 0) == 0, name
