@@ -158,8 +158,11 @@ def tx_ledger(deltas: DataFrame, gas: DataFrame) -> DataFrame:
     # partitioned on tx_hash by the coverage window, so only the gas rows
     # shuffle and the aggregate needs no exchange of its own
     entries = deltas.select("tx_hash", "address", "usd").hint("merge")
+    # one gas row per tx: a repeated tx_info row would join each delta once
+    # per copy; the dedupe shares the join's tx_hash exchange
     return (
-        gas.join(entries, "tx_hash", "left")
+        gas.dropDuplicates(["tx_hash"])
+        .join(entries, "tx_hash", "left")
         .groupBy(*gas.columns)
         .agg(
             # a tx with no deltas joins one all-null row, which collects nothing

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import heapq
 from collections import defaultdict
+from collections.abc import Iterable
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,6 +70,30 @@ def verify_pairs(
             ok = lax_comp.get(p[0]) is not None and lax_comp.get(p[0]) == lax_comp.get(p[1])
             out[p] = "rundown" if ok else "abandon"
     return out
+
+
+def union_find(edges: Iterable[tuple[Any, Any]]) -> dict[Any, Any]:
+    """node → component label, the smallest node of its component, over an
+    undirected edge list. A None end is not a node; the other end of such an
+    edge still is one. Union by min label keeps the labels deterministic."""
+    parent: dict[Any, Any] = {}
+
+    def find(x: Any) -> Any:
+        while (p := parent.setdefault(x, x)) != x:
+            g = parent[p]
+            parent[x] = g  # path halving: x skips to its grandparent
+            x = g
+        return x
+
+    for a, b in edges:
+        a = b if a is None else a
+        b = a if b is None else b
+        if a is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 class TokenGraph:
@@ -126,24 +152,7 @@ class TokenGraph:
 
     def components(self) -> dict[str, str]:
         """token → component label (min token in component), union-find."""
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            r = x
-            while parent.setdefault(r, r) != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for t0, nbrs in self.adj.items():
-            for t1, _, _ in nbrs:
-                ra, rb = find(t0), find(t1)
-                if ra != rb:
-                    # union by min label keeps the output deterministic
-                    lo, hi = min(ra, rb), max(ra, rb)
-                    parent[hi] = lo
-        return {t: find(t) for t in self.adj}
+        return union_find((t0, t1) for t0, nbrs in self.adj.items() for t1, _, _ in nbrs)
 
     def connected(self, src: str, dst: str) -> bool:
         comp = self.components()

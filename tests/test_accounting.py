@@ -15,11 +15,12 @@ from brontes_spark.inspectors import (
     atomic_arb_bundles,
     jit_bundles,
     liquidation_bundles,
+    run_composer,
     sandwich_bundles,
 )
 from brontes_spark.inspectors.accounting import action_deltas, build_ledger, bundle_pnl, tx_ledger
 from brontes_spark.inspectors.composer import searcher_activity_bundles
-from brontes_spark.sources.fixtures import _swap
+from brontes_spark.sources.fixtures import _swap, load_fixtures
 
 #: 18 fractional digits: the decimal(38,18) amount type's full scale
 AMT = Decimal("1.123456789012345678")
@@ -255,3 +256,20 @@ def test_unbooked_bundles_dropped_except_atomic_arb(spark):
     ]
     ledger = _ledger(spark, [("0xl", lp, "40")], [("0xl", "1", "0xs", None)])
     assert searcher_activity_bundles(ledger, searchers).count() == 0
+
+
+def test_repeated_tx_info_row_books_each_delta_once(spark):
+    """A verbatim copy of a `tx_info` row (`db insert` can append one) joins
+    the tx's deltas once: the ledger keeps one gas row per tx_hash, so the
+    block-100 sandwich keeps its profit."""
+    tables = load_fixtures(spark)
+    tx_info = tables["tx_info"]
+    tables["tx_info"] = tx_info.unionByName(tx_info.filter(F.col("tx_hash") == "0xf0"))
+    ledger = build_ledger(
+        tables["actions"], tables["tx_info"], tables["dex_prices"], tables["block_info"]
+    )
+    f0 = ledger.filter(F.col("tx_hash") == "0xf0").collect()
+    assert [(len(r["deltas"]), r["searcher_usd"]) for r in f0] == [(2, Decimal(50))]
+    bundles = run_composer(tables)["bundles"]
+    sandwich = bundles.filter("block_number = 100 AND mev_type = 'sandwich'").collect()
+    assert [r["profit_usd"] for r in sandwich] == [Decimal(88)]
