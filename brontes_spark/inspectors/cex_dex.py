@@ -168,7 +168,8 @@ def cex_dex_bundles(
         (F.col("block_timestamp") * F.lit(1_000_000)).cast("long").alias("anchor_ts"),
         F.col("amount_in").alias("required_vol"),
     )
-    # every leg rides ONE run of the range-join kernel: each trade ticks
+    # every leg rides one `expanding_vwap` call, whose plan runs the range
+    # join once (the trade scans and the leg cross join too): each trade ticks
     # the global leg and its own exchange's leg, keyed per (leg, token),
     # and each anchor is keyed once per leg. The "ex:" prefix keeps an
     # exchange's leg id apart from "global".

@@ -190,8 +190,9 @@ def dedup_by_precedence(bundles: DataFrame) -> DataFrame:
     which is partition-dependent and run-to-run nondeterministic.
     """
     # md5-derived id, per the repo-wide hash policy (functions/hashing.py):
-    # this id is the final dedup tie-break, so an engine twin replaying the
-    # same bundles must derive the identical id — xxhash64 would not.
+    # this id is the final dedup tie-break, so it is derived from the
+    # bundle's content alone and does not depend on how the bundles are
+    # partitioned.
     bundle_id = md5_long(
         F.concat_ws(
             "|",
@@ -481,9 +482,11 @@ def block_analysis_wide(
 
 def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """O1 → I11 → O2 → O3 → O4 over the fixture-shaped tables."""
-    actions, tx_info, dex_prices, block_info = (
-        tables[k] for k in ("actions", "tx_info", "dex_prices", "block_info")
-    )
+    actions, tx_info, dex_prices = (tables[k] for k in ("actions", "tx_info", "dex_prices"))
+    # `db insert` appends rows, so a block can repeat in block_info; keep one
+    # row per block. It is a small dimension the inspectors broadcast, so it
+    # dedups in one partition, without a shuffle (as I11's label lookup does).
+    block_info = tables["block_info"].coalesce(1).dropDuplicates(["block_number"])
     # one shared accounting pass, cached for every inspector (the reference
     # likewise shares the classified tree + metadata across inspectors,
     # composer/mod.rs:71-120). usd_deltas and gas_usd are called from this

@@ -8,10 +8,12 @@ required volume, then VWAP the trades inside the final window.
 
 Spark-first reformulation (no iteration — SURVEY.md §4 item 2): a bounded
 range join pulls all candidate ticks inside the *maximum* window once; each
-tick gets its "step" = the smallest window expansion that would include it;
-a per-anchor running sum over steps finds the cutoff step (first step whose
-cumulative volume covers the requirement); the VWAP aggregates ticks with
-step <= cutoff. One range join + one window + one aggregation — wall-clock
+tick gets its "step" = the smallest window expansion that would include it
+and is summed per (anchor, step), so at most 2·max_steps rows per anchor
+reach the window; running sums over an anchor's steps then give the cutoff
+step (first step whose cumulative volume covers the requirement) and the
+window's sums in the same row. The plan runs the range join, the per-step
+aggregate, one window and one per-anchor aggregate once each — wall-clock
 bounded by the max window, independent of how many expansion steps occur.
 
 All volumes/prices are exact decimals → deterministic across engines.
@@ -97,32 +99,29 @@ def expanding_vwap(
         aggs += [F.sum("wvol").alias("swvol"), F.sum("wpv").alias("swpv")]
 
     per_step = j.groupBy("anchor_id", "required_vol", "step").agg(*aggs)
+    sums = ["svol", "spv"] + (["swvol", "swpv"] if weighted else [])
     w = W.partitionBy("anchor_id").orderBy("step")
-    per_step = per_step.withColumn("cum_vol", F.sum("svol").over(w))
+    # the smallest covering step carries the cutoff window's running sums;
+    # the frame is RANGE, so rows of a repeated anchor id sharing a step
+    # carry the same sums
     cutoff = (
-        per_step.withColumn(
-            "hit_step",
-            F.when(F.col("cum_vol") >= F.col("required_vol"), F.col("step")),
+        per_step.select(
+            "anchor_id", "required_vol", "step", *[F.sum(c).over(w).alias(c) for c in sums]
         )
+        .filter(F.col("svol") >= F.col("required_vol"))
         .groupBy("anchor_id")
-        .agg(F.min("hit_step").alias("cutoff_step"))
-        .filter(F.col("cutoff_step").isNotNull())
+        .agg(F.min(F.struct("step", *sums)).alias("c"))
     )
     # scale-6 normalization before double (see functions/decimals.to_dbl):
     # price*vol carries <= 6dp of true content, so this is exact and keeps
     # the unscaled value below 2^53 → engine-identical doubles.
-    spv6 = to_dbl(F.sum("spv"))
-    svol6 = to_dbl(F.sum("svol"))
     if weighted:
-        vwap = to_dbl(F.sum("swpv"), weight_scale) / to_dbl(F.sum("swvol"), weight_scale)
+        vwap = to_dbl("c.swpv", weight_scale) / to_dbl("c.swvol", weight_scale)
     else:
-        vwap = spv6 / svol6
-    return (
-        per_step.join(cutoff, "anchor_id")
-        .filter(F.col("step") <= F.col("cutoff_step"))
-        .groupBy("anchor_id", "cutoff_step")
-        .agg(
-            vwap.alias("vwap"),
-            svol6.alias("covered_vol"),
-        )
+        vwap = to_dbl("c.spv") / to_dbl("c.svol")
+    return cutoff.select(
+        "anchor_id",
+        F.col("c.step").alias("cutoff_step"),
+        vwap.alias("vwap"),
+        to_dbl("c.svol").alias("covered_vol"),
     )

@@ -180,6 +180,24 @@ def test_repeated_searcher_address_adds_no_bundle(tables):
     assert headers[100] == headers[101] == headers[104] == 1
 
 
+def test_repeated_block_info_row_counts_each_block_once(tables):
+    """`cli.py db insert` appends rows, so a block can repeat in block_info.
+    `run_composer` keeps one row per block: a repeated block doubles
+    neither the cex_dex anchors (and so the VWAP volume) nor the header."""
+    info = tables["block_info"]
+    repeated = info.unionByName(info.filter(F.col("block_number").isin(100, 104)))
+    out = run_composer(dict(tables, block_info=repeated))
+    cd = _one(out["bundles"], mev_type="cex_dex")
+    assert cd["block_number"] == 104
+    assert cd["profit_usd"] == Decimal("4") and cd["revenue_usd"] == Decimal("5")
+    headers = [r.asDict() for r in out["mev_blocks"].collect()]
+    blocks = [r["block_number"] for r in headers]
+    assert len(blocks) == len(set(blocks))
+    by_block = {r["block_number"]: r for r in headers}
+    assert by_block[100]["n_txs"] == 4
+    assert by_block[100]["builder_gas_usd"] == Decimal("4")
+
+
 def test_run_composer_leaves_nothing_cached(spark):
     """`run_composer` releases the ledger it caches for its inspectors, so
     no later plan in the session reads a cache the call left behind."""

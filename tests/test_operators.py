@@ -93,6 +93,100 @@ def test_expanding_vwap_decay_weights(spark):
     assert rw["cutoff_step"] == 2 and rw["covered_vol"] == 120.0
 
 
+def _reference_vwap(anchors, ticks, pre, post, max_steps, pre_decay=None, post_decay=None):
+    """Plain-Python X4: every anchor row pools its ticks' (step, sums) into
+    its anchor id; the cutoff is the first step whose cumulative pooled
+    volume covers the required volume of an anchor row holding ticks at
+    that step (a null requirement covers nothing)."""
+    import math
+    from decimal import ROUND_HALF_UP
+
+    q6, q8 = Decimal("0.000001"), Decimal("0.00000001")
+    sums, rvs = {}, {}
+    for aid, key, ats, rv in anchors:
+        for k, tts, price, vol, _tid in ticks:
+            if k != key or not ats - pre * max_steps <= tts <= ats + post * max_steps:
+                continue
+            d = abs(tts - ats)
+            step = max(1, -(-d // (pre if tts <= ats else post)))
+            w = Decimal(1)
+            if pre_decay is not None:
+                x = math.exp((pre_decay if tts <= ats else post_decay) * d)
+                w = Decimal(repr(x)).quantize(q6, ROUND_HALF_UP)
+            acc = sums.setdefault(aid, {}).setdefault(step, [Decimal(0)] * 4)
+            for i, v in enumerate((vol, price * vol, vol * w, price * vol * w)):
+                acc[i] += v
+            rvs.setdefault(aid, {}).setdefault(step, set()).add(rv)
+    out = {}
+    for aid, by_step in sums.items():
+        run = [Decimal(0)] * 4
+        for step in sorted(by_step):
+            run = [a + b for a, b in zip(run, by_step[step])]
+            if any(rv is not None and run[0] >= rv for rv in rvs[aid][step]):
+                svol, spv, swvol, swpv = run
+                if pre_decay is None:
+                    vwap = float(spv.quantize(q6)) / float(svol.quantize(q6))
+                else:
+                    vwap = float(swpv.quantize(q8)) / float(swvol.quantize(q8))
+                out[aid] = (step, vwap, float(svol))
+                break
+    return out
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_expanding_vwap_matches_python_reference(spark, seed):
+    """Randomized parity of X4 against `_reference_vwap`: repeated anchor
+    ids (with differing required volumes), anchors the max window never
+    covers, ticks exactly on step boundaries, null requirements, and the
+    decay-weighted vwap."""
+    import random
+
+    rnd = random.Random(seed)
+    pre, post, max_steps = 10, 15, 4
+    keys = ["k0", "k1", "k2"]
+    # timestamps on a 5-grid put many ticks exactly on a step boundary
+    # (anchor − 10·n or anchor + 15·n)
+    ticks = [
+        (rnd.choice(keys), 5 * rnd.randrange(0, 80),
+         Decimal(rnd.randrange(100, 300)) / 100, Decimal(rnd.randrange(1, 500)) / 100, i)
+        for i in range(300)
+    ]
+    anchors = []
+    for i in range(60):
+        rv = rnd.choice(
+            [None, Decimal(rnd.randrange(1, 3000)) / 100, Decimal(10) ** 6]
+            + [Decimal(rnd.randrange(1, 800)) / 100] * 3
+        )
+        anchors.append((f"a{i % 45}", rnd.choice(keys), 30 * rnd.randrange(0, 14), rv))
+    ids = [a[0] for a in anchors]
+    rv_sets = {}
+    for a in anchors:
+        rv_sets.setdefault(a[0], set()).add(a[3])
+    assert any(len(v) > 1 for v in rv_sets.values())  # repeated id, two requirements
+    assert any(a[3] is None for a in anchors)
+    assert any(
+        t[0] == a[1] and (a[2] - t[1]) in (pre * n for n in range(1, max_steps + 1))
+        for a in anchors for t in ticks
+    )
+
+    adf = spark.createDataFrame(
+        anchors, "anchor_id string, key string, anchor_ts long, required_vol decimal(18,6)"
+    )
+    tdf = spark.createDataFrame(
+        ticks, "key string, tick_ts long, price decimal(18,6), vol decimal(18,6), tick_id long"
+    )
+    for decay in ((None, None), (-0.02, -0.01)):
+        want = _reference_vwap(anchors, ticks, pre, post, max_steps, *decay)
+        assert 0 < len(want) < len(set(ids)), decay  # some anchors stay uncovered
+        got = {
+            r["anchor_id"]: (r["cutoff_step"], r["vwap"], r["covered_vol"])
+            for r in expanding_vwap(
+                adf, tdf, pre, post, max_steps, pre_decay=decay[0], post_decay=decay[1]
+            ).collect()
+        }
+        assert got == want, decay
+
+
 def test_keep_largest_and_dedup(spark):
     df = spark.createDataFrame(
         [("g", 1, 5.0), ("g", 2, 9.0), ("g", 3, 9.0), ("h", 4, 1.0)],

@@ -135,6 +135,22 @@ def test_decay_vwap_rides_the_unweighted_shuffles(spark):
         assert "Python" not in pw, weighted
 
 
+def test_expanding_vwap_runs_the_range_join_once(spark):
+    """X4: running sums over the per-step rows give the cutoff step and its
+    window's sums in one row, so each input is scanned once and no join
+    goes back on anchor_id. A cutoff aggregate joined back to the steps
+    reads the per-step subtree twice, and Spark plans the range join, both
+    scans and the step aggregate twice."""
+    import re
+
+    for name in ("x4_expanding_vwap", "x4_decay_vwap"):
+        plan = _plan(spark, name)
+        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2, name
+        keys = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", plan)
+        assert keys, name
+        assert not any("anchor_id" in k for k in keys), (name, keys)
+
+
 def test_funnel_single_shuffle(spark):
     """x9_funnel_stages: the sorted-fold formulation pays exactly ONE
     exchange (the user_id groupBy) — the 3-join textbook shape would pay
