@@ -16,9 +16,10 @@ delta array chosen by `action_type`, and one `explode` yields the rows.
 A3 is one equi-join against `dex_prices` (every tx index is priced in our
 model, so no as-of needed — operators/asof.py provides it where price grids
 are sparse). `tx_ledger` folds the USD deltas and the gas rows into one row
-per tx in one join and one aggregate; the composer caches it once. Its
-`searcher_usd` prices a one-tx bundle (liquidations, atomic_arb, I13) off
-its row; `bundle_pnl` is for bundles that span txs (sandwich, jit).
+per tx in one join and one aggregate. Its `searcher_usd` prices a one-tx
+bundle (liquidations, atomic_arb, I13) off its row. Bundles that span txs
+(sandwich, jit) are booked in their block walk: `book_bundles` sums the
+block's ledger rows in plain Python.
 
 Decimal typing: every delta amount is decimal(38,18), the amount type, so
 no step rounds it (functions/decimals.py). Two products of this typing
@@ -29,11 +30,21 @@ leg keeps 17 fractional digits, and A3's `amount * price_usd` at scale 6.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal, localcontext
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..schemas import BUNDLES_SCHEMA
 
 WEI = 10**18
 AMOUNT = "decimal(38,18)"
+#: a bundle row as a block walk books it: BUNDLES_SCHEMA's fields, nullable
+BUNDLE_SCHEMA = StructType([StructField(f.name, f.dataType) for f in BUNDLES_SCHEMA])
+#: the scale Spark types a difference of two decimal(38,18) values at
+PROFIT_QUANTUM = Decimal("1e-17")
 
 
 def _delta(address: Column, token: Column, amount: Column) -> Column:
@@ -113,14 +124,15 @@ def action_deltas(actions: DataFrame) -> DataFrame:
 
 
 def usd_deltas(deltas: DataFrame, dex_prices: DataFrame) -> DataFrame:
-    """A3: value deltas at the planted per-tx-index price."""
+    """A3: value deltas at the planted per-tx-index price. `db insert`
+    appends, so a price can repeat: each key keeps one row, the greatest
+    price where copies differ, and every run books the same value."""
+    key = ["block_number", "tx_index", "token"]
+    prices = dex_prices.groupBy("block_number", F.col("tx_idx").alias("tx_index"), "token").agg(
+        F.max("price_usd").alias("price_usd")
+    )
     return (
-        deltas.join(
-            dex_prices.select(
-                "block_number", F.col("tx_idx").alias("tx_index"), "token", "price_usd"
-            ),
-            ["block_number", "tx_index", "token"],
-        )
+        deltas.join(prices, key)
         .withColumn("usd", (F.col("amount") * F.col("price_usd")).cast(AMOUNT))
     )
 
@@ -159,10 +171,11 @@ def tx_ledger(deltas: DataFrame, gas: DataFrame) -> DataFrame:
     # shuffle and the aggregate needs no exchange of its own
     entries = deltas.select("tx_hash", "address", "usd").hint("merge")
     # one gas row per tx: a repeated tx_info row would join each delta once
-    # per copy; the dedupe shares the join's tx_hash exchange
+    # per copy; the dedupe shares the join's tx_hash exchange. Under
+    # `dropDuplicates` the three block walks would not reuse one shuffle
+    one = gas.groupBy("tx_hash").agg(*[F.first(c).alias(c) for c in gas.columns if c != "tx_hash"])
     return (
-        gas.dropDuplicates(["tx_hash"])
-        .join(entries, "tx_hash", "left")
+        one.join(entries, "tx_hash", "left")
         .groupBy(*gas.columns)
         .agg(
             # a tx with no deltas joins one all-null row, which collects nothing
@@ -195,41 +208,33 @@ def build_ledger(
     return tx_ledger(usd_deltas(action_deltas(actions), dex_prices), gas_usd(tx_info, block_info))
 
 
-def bundle_pnl(
-    bundles: DataFrame, ledger: DataFrame, key: list[str], txs: Column, searchers: Column
-) -> DataFrame:
-    """A5: each bundle of `bundles` (one row per `key`) with the gas of its
-    `txs` and, as revenue, the USD deltas those txs book to any address of
-    `searchers`. Both columns are evaluated on the bundle row.
+def _sum(values) -> Decimal | None:
+    """Spark's `sum`: nulls skipped, null when every value is."""
+    present = [v for v in values if v is not None]
+    return sum(present) if present else None
 
-    Adds `revenue_usd`, `gas_usd` and `profit_usd` = revenue − gas. A bundle
-    none of whose txs is in the ledger is dropped; one whose txs book no
-    delta to the searcher set keeps a null revenue and profit, which the
-    caller drops or zeroes."""
-    rest = [c for c in bundles.columns if c not in key]
-    # the tx's gas rides as one more entry, so a single explode carries both
-    entries = F.concat(
-        F.array(F.struct(F.col("__gas").alias("gas"), F.lit(None).cast(AMOUNT).alias("usd"))),
-        F.transform(
-            F.filter("__deltas", lambda d: F.array_contains(F.col("__set"), d["address"])),
-            lambda d: F.struct(F.lit(None).cast(AMOUNT).alias("gas"), d["usd"].alias("usd")),
-        ),
-    )
-    per_tx = bundles.select("*", searchers.alias("__set"), F.explode(txs).alias("__tx")).join(
-        ledger.select(
-            F.col("tx_hash").alias("__tx"),
-            F.col("gas_usd").alias("__gas"),
-            F.col("deltas").alias("__deltas"),
-        ),
-        "__tx",
-    )
-    return (
-        per_tx.select(*key, *rest, F.explode(entries).alias("e"))
-        .groupBy(*key)
-        .agg(
-            *[F.first(c).alias(c) for c in rest],
-            F.sum("e.usd").alias("revenue_usd"),
-            F.sum("e.gas").alias("gas_usd"),
-        )
-        .withColumn("profit_usd", (F.col("revenue_usd") - F.col("gas_usd")).cast(AMOUNT))
-    )
+
+def book_bundles(
+    ledger: pd.DataFrame, bundles: list[dict], txs: str, searchers: str
+) -> list[dict]:
+    """A5 over ONE block's `ledger` rows: each of `bundles` plus the gas of
+    the txs in its `txs` field, as revenue the USD they book to an address
+    of its `searchers` field, and profit. A bundle none of whose txs is in
+    the ledger is dropped; with no delta to the set, revenue and profit are
+    null. Spark's decimal(38,18) arithmetic: exact sums, and revenue − gas
+    typed decimal(38,17), so profit rounds HALF_UP at the 17th place."""
+    rows = dict(zip(ledger["tx_hash"], zip(ledger["gas_usd"], ledger["deltas"])))
+    out = []
+    with localcontext() as ctx:
+        ctx.prec = 76  # twice Spark's 38 digits: no sum of amounts rounds
+        for b in bundles:
+            booked = [rows[h] for h in b[txs] if h in rows]
+            if not booked:
+                continue
+            own = {a for a in b[searchers] if a is not None}
+            gas = _sum(g for g, _ in booked)
+            revenue = _sum(d["usd"] for _, ds in booked for d in ds if d["address"] in own)
+            profit = None if revenue is None or gas is None else (
+                (revenue - gas).quantize(PROFIT_QUANTUM, ROUND_HALF_UP))
+            out.append({**b, "revenue_usd": revenue, "gas_usd": gas, "profit_usd": profit})
+    return out

@@ -35,17 +35,18 @@ mev_contract); "labelled" is an explicit atomic_arb label on the searcher
 dim (`is_labelled_searcher_of_type`).
 
 I6 runs as ONE pass per block, like the reference's walk over a block's tx
-list (run per block by composer/mod.rs:71-120): `tx_info`, and the swap
-actions together with the DEX price keys, cogroup on `block_number`, and
-`block_arbs` walks each block in plain Python. It sorts each tx's swaps by
-trace_idx, classifies the sequence (`classify_seq`) and decides
+list (run per block by composer/mod.rs:71-120): the per-tx ledger, and the
+swap actions together with the DEX price keys, cogroup on `block_number`,
+and `block_arbs` walks each block in plain Python. It sorts each tx's swaps
+by trace_idx, classifies the sequence (`classify_seq`) and decides
 `has_dex_price`. A null token matches nothing, as in the accounting's
 coverage rule: a null endpoint does not close the sequence, and a null
-link breaks the chain. I7 stays in Spark columns, after the PnL.
+link breaks the chain. Each arb row leaves the walk with its tx's gas,
+`searcher_usd` and flags from the ledger, and I7 stays in Spark columns.
 
-Scale: one shuffle of `tx_info` and of the swaps plus price keys on
-`block_number`. The walk sorts each tx's swaps once, so its cost per
-block is bounded by block size at any range length.
+Scale: one shuffle of the swaps plus price keys on `block_number`, and the
+ledger's, shared with the sandwich and jit walks. The walk sorts each tx's
+swaps once, so its cost per block is bounded by block size at any range.
 """
 
 from __future__ import annotations
@@ -80,6 +81,11 @@ ARB_SCHEMA = (
     "arb_kind string, stable_jump boolean, has_dex_price boolean"
 )
 _ARB_COLS = [f.split()[0] for f in ARB_SCHEMA.split(", ")]
+
+#: the ledger fields I7 reads, carried on each ARB_SCHEMA row
+_LEDGER_FIELDS = ["gas_usd", "searcher_usd", "is_private", "coinbase_transfer"]
+_PRICED_ARB_SCHEMA = f"{ARB_SCHEMA}, gas_usd {AMOUNT}, searcher_usd {AMOUNT}, " \
+    f"is_private boolean, coinbase_transfer {AMOUNT}"
 
 
 def _stable_class(tok: str | None) -> str | None:
@@ -123,7 +129,7 @@ def _nulls_first(row: tuple) -> tuple:
 
 
 def block_arbs(txs: pd.DataFrame, legs: pd.DataFrame) -> pd.DataFrame:
-    """I6 over ONE block. `txs`: the block's tx_info rows (block_number,
+    """I6 over ONE block. `txs`: the block's tx rows (block_number,
     tx_index, tx_hash, eoa, mev_contract); `legs`: its swap actions
     (tx_hash, tx_index, trace_idx, pool, token_in, token_out, priced =
     null) and its DEX price keys (tx_index, priced = the token). Returns
@@ -161,9 +167,13 @@ def block_arbs(txs: pd.DataFrame, legs: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=_ARB_COLS)
 
 
+def _block_priced_arbs(ledger: pd.DataFrame, legs: pd.DataFrame) -> pd.DataFrame:
+    """I6 over ONE block: `block_arbs` rows with their tx's `_LEDGER_FIELDS`."""
+    return block_arbs(ledger, legs).merge(ledger[["tx_hash", *_LEDGER_FIELDS]], on="tx_hash")
+
+
 def atomic_arb_bundles(
     actions: DataFrame,
-    tx_info: DataFrame,
     dex_prices: DataFrame,
     searcher_info: DataFrame,
     ledger: DataFrame,
@@ -176,10 +186,9 @@ def atomic_arb_bundles(
         "block_number", F.col("tx_idx").alias("tx_index"), F.col("token").alias("priced")
     )
     classified = (
-        tx_info.select("block_number", "tx_index", "tx_hash", "eoa", "mev_contract")
-        .groupBy("block_number")
+        ledger.groupBy("block_number")
         .cogroup(swaps.unionByName(priced, allowMissingColumns=True).groupBy("block_number"))
-        .applyInPandas(block_arbs, ARB_SCHEMA)
+        .applyInPandas(_block_priced_arbs, _PRICED_ARB_SCHEMA)
     )
 
     # searcher-history dim, joined for both eoa and mev_contract
@@ -215,13 +224,7 @@ def atomic_arb_bundles(
     # addresses, off its ledger row; a tx that books none to them has
     # revenue 0
     out = (
-        classified.join(
-            ledger.select(
-                "tx_hash", "gas_usd", "searcher_usd", "is_private", "coinbase_transfer"
-            ),
-            "tx_hash",
-        )
-        .join(h_eoa, "eoa", "left")
+        classified.join(h_eoa, "eoa", "left")
         .join(h_ctr, "mev_contract", "left")
         .withColumn("revenue_usd", F.coalesce("searcher_usd", F.lit(0).cast(AMOUNT)))
         .withColumn("__raw_profit", (F.col("revenue_usd") - F.col("gas_usd")).cast(AMOUNT))

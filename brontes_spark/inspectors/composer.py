@@ -2,7 +2,8 @@
 `brontes-inspect/src/composer/mod.rs:71-343`, `composer/utils.rs:15-242`.
 
   O1  run every inspector, union bundles (independent DAG branches — Spark
-      schedules them; they share one cached per-tx accounting ledger)
+      schedules them; the sandwich, jit and atomic_arb walks share one
+      shuffle of the per-tx accounting ledger)
   I13 searcher activity (mev_inspectors/searcher_activity.rs:40-200), an
       O1 inspector (lib.rs:106-115): a bundle per profitable searcher tx
   O2  compose: sandwich + JIT bundles sharing txs by the same searcher merge
@@ -487,13 +488,13 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     # row per block. It is a small dimension the inspectors broadcast, so it
     # dedups in one partition, without a shuffle (as I11's label lookup does).
     block_info = tables["block_info"].coalesce(1).dropDuplicates(["block_number"])
-    # one shared accounting pass, cached for every inspector (the reference
+    # one shared accounting pass for every inspector (the reference
     # likewise shares the classified tree + metadata across inspectors,
     # composer/mod.rs:71-120). usd_deltas and gas_usd are called from this
     # module, not through build_ledger: a traced perfbench run wraps them by
     # name in its `inspectors.accounting` span.
     gas = gas_usd(tx_info, block_info)
-    ledger = tx_ledger(usd_deltas(action_deltas(actions), dex_prices), gas).cache()
+    ledger = tx_ledger(usd_deltas(action_deltas(actions), dex_prices), gas)
     # metadata-only solver tags (PropellerLabsSolver-class protocols) extend
     # the known-searcher set when the protocol dim is provided
     tags = None
@@ -502,12 +503,12 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
         tags = protocol_searcher_tags(tables["address_to_protocol"])
     all_bundles = [
-        sandwich_bundles(actions, tx_info, ledger),
-        jit_bundles(actions, tx_info, ledger),
+        sandwich_bundles(actions, ledger),
+        jit_bundles(actions, ledger),
         liquidation_bundles(actions, ledger),
         cex_dex_bundles(actions, dex_prices, block_info, tables["cex_trades"], ledger),
         cex_dex_quotes_bundles(actions, dex_prices, block_info, tables["cex_quotes"], ledger),
-        atomic_arb_bundles(actions, tx_info, dex_prices, tables["searcher_info"], ledger),
+        atomic_arb_bundles(actions, dex_prices, tables["searcher_info"], ledger),
         searcher_activity_bundles(ledger, tables["searcher_info"], searcher_contracts=tags),
     ]
     # Two eager lineage cuts, each held in executor memory (a single-node
@@ -516,11 +517,8 @@ def run_composer(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     # the seven inspector DAGs, which without the cut adds about 10 s of
     # plan building before the first job. The second is the final bundles,
     # which the three sinks and the header read without recomputing O2 and
-    # O3. Only the inspectors read the ledger (the header reads the gas
-    # rows), so it is released once the cuts hold their output: the call
-    # leaves nothing cached in the session.
+    # O3.
     unioned = reduce(lambda a, b: a.unionByName(b), all_bundles).localCheckpoint()
     composed = compose_sandwich_jit(retag_jit_cex_dex(unioned, tables["searcher_info"]))
     final = dedup_by_precedence(composed).orderBy("block_number", "mev_type").localCheckpoint()
-    ledger.unpersist()
     return {"bundles": final, "mev_blocks": mev_block_header(final, gas, block_info)}

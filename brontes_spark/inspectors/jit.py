@@ -6,12 +6,13 @@ swaps on that pool strictly between (possible_jit_set, jit_liquidity.rs:464).
 PnL: mint/burn/collect deltas of the searcher set minus gas of both txs.
 
 Candidates come from ONE pass per block, like the reference's walk over a
-block's tx list (run per block by composer/mod.rs:71-120): `tx_info` and
-the block's mint, burn and swap actions cogroup on `block_number`, and
-`block_jits` walks each block in plain Python:
+block's tx list (run per block by composer/mod.rs:71-120): the per-tx
+ledger and the block's mint, burn and swap actions cogroup on
+`block_number`, `block_jits` walks each block in plain Python, and
+`book_bundles` prices each pair from the same ledger rows:
 
   * the actor of a tx is its mev_contract, else its eoa; a mint or burn
-    whose tx is not in `tx_info`, or whose pool or actor is null, never
+    whose tx is not in the ledger, or whose pool or actor is null, never
     pairs
   * each mint pairs with the same actor's EARLIEST later burn on the same
     pool (the bounded analog of the reference's shrink loop: one pair per
@@ -24,9 +25,10 @@ the block's mint, burn and swap actions cogroup on `block_number`, and
     victim-SET cap at :568 is per multi-frontrun chain; a one-pair
     candidate has exactly one set, so the 20-victim cap binds)
 
-Scale: one shuffle of `tx_info` and the actions on `block_number`. The walk
-scans the actor's burns and the pool's swaps once per mint, so its cost per
-block is bounded by the square of the block's size at any range length.
+Scale: one shuffle of the actions on `block_number`, and the ledger's,
+shared with the sandwich and atomic_arb walks. The walk scans the actor's
+burns and the pool's swaps once per mint, so its cost per block is bounded
+by the square of the block's size at any range length.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import bundle_pnl
+from .accounting import BUNDLE_SCHEMA, book_bundles
 
 MAX_VICTIMS = 20
 
@@ -48,7 +50,7 @@ _PAIR_COLS = [f.split()[0] for f in PAIR_SCHEMA.split(", ")]
 
 
 def block_jits(txs: pd.DataFrame, acts: pd.DataFrame) -> pd.DataFrame:
-    """I10 candidates over ONE block. `txs`: the block's tx_info rows
+    """I10 candidates over ONE block. `txs`: the block's tx rows
     (block_number, tx_index, tx_hash, eoa, mev_contract); `acts`: its mint,
     burn and swap actions (tx_hash, tx_index, action_type, pool). Returns
     one PAIR_SCHEMA row per (mint tx, burn tx) pair. Row order of either
@@ -91,36 +93,28 @@ def block_jits(txs: pd.DataFrame, acts: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=_PAIR_COLS)
 
 
-def jit_bundles(actions: DataFrame, tx_info: DataFrame, ledger: DataFrame) -> DataFrame:
+def _block_bundles(ledger: pd.DataFrame, acts: pd.DataFrame) -> pd.DataFrame:
+    """I10 over ONE block: each `block_jits` pair booked over its mint and
+    burn txs and the searcher set {eoa, mev_contract}, which holds the
+    actor; kept when those txs book the set any revenue."""
+    pairs = [
+        {**p, "txs": [p["front_hash"], p["back_hash"]], "searchers": [p["eoa"], p["mev_contract"]]}
+        for p in block_jits(ledger, acts).to_dict("records")
+    ]
+    booked = [b for b in book_bundles(ledger, pairs, "txs", "searchers") if b["revenue_usd"] is not None]
+    for b in booked:
+        b.update(tx_hashes=[b["front_hash"], *b["victim_hashes"], b["back_hash"]], mev_type="jit")
+    return pd.DataFrame(booked, columns=BUNDLE_SCHEMA.names)
+
+
+def jit_bundles(actions: DataFrame, ledger: DataFrame) -> DataFrame:
     is_swap = F.col("action_type").isin("swap", "swap_with_fee")
     acts = actions.filter(is_swap | F.col("action_type").isin("mint", "burn")).select(
         "block_number", "tx_hash", "tx_index", "action_type",
         F.when(is_swap, F.col("swap.pool")).otherwise(F.col("mint_burn_collect.pool")).alias("pool"),
     )
-    pairs = (
-        tx_info.select("block_number", "tx_index", "tx_hash", "eoa", "mev_contract")
-        .groupBy("block_number")
-        .cogroup(acts.groupBy("block_number"))
-        .applyInPandas(block_jits, PAIR_SCHEMA)
-    )
-
     return (
-        bundle_pnl(
-            pairs, ledger, ["block_number", "actor", "front_hash", "back_hash"],
-            F.array("front_hash", "back_hash"),
-            F.array_compact(F.array("eoa", "mev_contract", "actor")),
-        )
-        .filter(F.col("revenue_usd").isNotNull())
-        .select(
-            "block_number",
-            F.concat(
-                F.array("front_hash"), F.col("victim_hashes"), F.array("back_hash")
-            ).alias("tx_hashes"),
-            "eoa",
-            "mev_contract",
-            F.lit("jit").alias("mev_type"),
-            "profit_usd",
-            "revenue_usd",
-            "gas_usd",
-        )
+        ledger.groupBy("block_number")
+        .cogroup(acts.groupBy("block_number"))
+        .applyInPandas(_block_bundles, BUNDLE_SCHEMA)
     )

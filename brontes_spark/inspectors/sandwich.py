@@ -1,10 +1,11 @@
 """Sandwich inspector — reference I1-I5 (SURVEY.md §2.7):
 `mev_inspectors/sandwich/mod.rs`.
 
-I1-I4 run as ONE pass per block, like the reference's walk over a block's
-tx list (run per block by composer/mod.rs:71-120): `tx_info` and the swap
-actions cogroup on `block_number`, and `block_sandwiches` walks each
-block's txs in plain Python. Blocks hold ~10² txs, so every group is small.
+I1-I5 run as ONE pass per block, like the reference's walk over a block's
+tx list (run per block by composer/mod.rs:71-120): the per-tx ledger and
+the swap actions cogroup on `block_number`, `block_sandwiches` walks each
+block's txs in plain Python, and `book_bundles` prices its candidates from
+the same ledger rows. Blocks hold ~10² txs, so every group is small.
 
 Candidate generation (I1, mod.rs:1014-1135): within a block, the ordered tx
 chain of each repeated actor forms possible sandwiches — TWO scans, one
@@ -31,18 +32,21 @@ frontrun pool in the frontrun direction; and ≥1 victim must FULLY overlap —
 same pool + front direction AND opposite to the backrun
 (verify_sandwich_victims' low_priority/high_priority split).
 
-PnL (I5, mod.rs:168-446), in Spark columns: searcher address-set USD deltas
-across the segment's searcher txs minus their gas. The set spans every
-chain tx's eoa + mev_contract. Documented divergence: the
+PnL (I5, mod.rs:168-446): searcher address-set USD deltas across the
+segment's searcher txs minus their gas. The set spans every chain tx's
+eoa + mev_contract (a multi-EOA contract chain books all its EOAs'
+deltas, like collect_address_set_for_accounting per tx). A segment that
+turns no profit is no bundle. Documented divergence: the
 reference additionally folds in sibling-searcher addresses from its
 searcher db and zeroes profit behind a MAX_PRICE_DIFF(0.995) price-
 reliability guard — our tx_info/dex_prices model carries neither signal,
 so both are out of scope (the A4 valid_pricing filter is the engine's
 price-sanity mechanism).
 
-Scale: one shuffle of `tx_info` and the swaps on `block_number`. The walk
-validates ≤28 trims per segment, each in time linear in the block's txs,
-so its cost per block is bounded by block size at any range length.
+Scale: one shuffle of the swaps on `block_number`, and the ledger's, shared
+with the jit and atomic_arb walks. The walk validates ≤28 trims per segment,
+each in time linear in the block's txs, so its cost per block is bounded by
+block size at any range length.
 """
 
 from __future__ import annotations
@@ -54,7 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .accounting import bundle_pnl
+from .accounting import BUNDLE_SCHEMA, book_bundles
 
 MAX_SHRINK = 6
 
@@ -126,7 +130,7 @@ def _best_trim(seg, legs, block, order):
 
 
 def block_sandwiches(txs: pd.DataFrame, swaps: pd.DataFrame) -> pd.DataFrame:
-    """I1-I4 over ONE block. `txs`: the block's tx_info rows (block_number,
+    """I1-I4 over ONE block. `txs`: the block's tx rows (block_number,
     tx_index, tx_hash, eoa, mev_contract); `swaps`: its swap actions
     (tx_hash, pool, token_in, token_out). Returns one BEST_SCHEMA row per
     candidate segment whose best trim validates. Row order of either input
@@ -176,28 +180,23 @@ def block_sandwiches(txs: pd.DataFrame, swaps: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=_BEST_COLS)
 
 
-def sandwich_bundles(actions: DataFrame, tx_info: DataFrame, ledger: DataFrame) -> DataFrame:
+def _block_bundles(ledger: pd.DataFrame, swaps: pd.DataFrame) -> pd.DataFrame:
+    """I1-I5 over ONE block: the `block_sandwiches` candidates, booked
+    from the block's `ledger` rows, that turn a profit."""
+    candidates = block_sandwiches(ledger, swaps).to_dict("records")
+    booked = book_bundles(ledger, candidates, "searcher_txs", "searcher_set")
+    return pd.DataFrame(
+        [b for b in booked if b["profit_usd"] is not None and b["profit_usd"] > 0],
+        columns=BUNDLE_SCHEMA.names,
+    )
+
+
+def sandwich_bundles(actions: DataFrame, ledger: DataFrame) -> DataFrame:
     swaps = actions.filter(F.col("action_type").isin("swap", "swap_with_fee")).select(
         "block_number", "tx_hash", "swap.pool", "swap.token_in", "swap.token_out"
     )
-    best = (
-        tx_info.select("block_number", "tx_index", "tx_hash", "eoa", "mev_contract")
-        .groupBy("block_number")
-        .cogroup(swaps.groupBy("block_number"))
-        .applyInPandas(block_sandwiches, BEST_SCHEMA)
-    )
-
-    # I5: PnL over the searcher set across the segment's searcher txs; the
-    # set spans EVERY chain tx's identity (a multi-EOA contract chain books
-    # all its EOAs' deltas, like collect_address_set_for_accounting per tx)
     return (
-        bundle_pnl(
-            best, ledger, ["block_number", "actor", "segment"],
-            F.col("searcher_txs"), F.col("searcher_set"),
-        )
-        .filter(F.col("profit_usd") > 0)
-        .select(
-            "block_number", "tx_hashes", "eoa", "mev_contract", "mev_type",
-            "profit_usd", "revenue_usd", "gas_usd",
-        )
+        ledger.groupBy("block_number")
+        .cogroup(swaps.groupBy("block_number"))
+        .applyInPandas(_block_bundles, BUNDLE_SCHEMA)
     )

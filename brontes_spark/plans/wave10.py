@@ -1957,7 +1957,7 @@ def i5_sandwich_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.sandwich import sandwich_bundles
 
     t, ledger = _fixture_ledger(spark)
-    return _bundle_shape(sandwich_bundles(t["actions"], t["tx_info"], ledger))
+    return _bundle_shape(sandwich_bundles(t["actions"], ledger))
 
 
 @register(
@@ -2042,7 +2042,7 @@ def i10_jit_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..inspectors.jit import jit_bundles
 
     t, ledger = _fixture_ledger(spark)
-    return _bundle_shape(jit_bundles(t["actions"], t["tx_info"], ledger))
+    return _bundle_shape(jit_bundles(t["actions"], ledger))
 
 
 @register(

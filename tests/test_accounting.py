@@ -1,12 +1,13 @@
 """Shared inspector accounting (inspectors/accounting.py) on hand-built
 rows: A1/A2 delta typing and swap coverage, the per-tx ledger and its
-`searcher_usd`, and the A5 `bundle_pnl` of bundles that span txs."""
+`searcher_usd`, and the A5 `book_bundles` of bundles that span txs."""
 
 from __future__ import annotations
 
 from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
+import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
@@ -18,7 +19,12 @@ from brontes_spark.inspectors import (
     run_composer,
     sandwich_bundles,
 )
-from brontes_spark.inspectors.accounting import action_deltas, build_ledger, bundle_pnl, tx_ledger
+from brontes_spark.inspectors.accounting import (
+    action_deltas,
+    book_bundles,
+    build_ledger,
+    tx_ledger,
+)
 from brontes_spark.inspectors.composer import searcher_activity_bundles
 from brontes_spark.sources.fixtures import _swap, load_fixtures
 
@@ -152,35 +158,68 @@ def test_ledger_searcher_usd(spark):
     assert AMT + AMT2 == Decimal("3.123456789012345679")
 
 
-def test_bundle_pnl(spark):
-    ledger = _ledger(
-        spark,
-        [("0xt1", "0xs", "10"), ("0xt1", "0xo", "100"), ("0xt2", "0xo", "5"),
-         ("0xt3", "0xc", "4")],
-        [("0xt1", "1", None, None), ("0xt2", "2", None, None), ("0xt3", "1", None, None)],
+def _book(ledger, bundles):
+    """book_bundles over `ledger` rows (tx_hash, gas_usd, {address: usd})
+    and `bundles` (k, txs, searchers): {k: (revenue, gas, profit)}."""
+    ledger = pd.DataFrame(
+        [(h, g, [{"address": a, "usd": u} for a, u in ds.items()]) for h, g, ds in ledger],
+        columns=["tx_hash", "gas_usd", "deltas"],
     )
-    bundles = spark.createDataFrame(
-        [
-            (1, ["0xt1", "0xt2"], "0xs", None),  # books 0xs's $10, gas of both
-            (2, ["0xt2"], "0xs", None),          # no delta of the searcher
-            (3, ["0xgone"], "0xs", None),        # no tx in the ledger
-            # jit's [eoa, mev_contract, actor]: actor repeats mev_contract
-            (4, ["0xt1", "0xt3"], "0xs", "0xc"),
-        ],
-        "k long, txs array<string>, eoa string, mev_contract string",
-    )
-    rows = {
+    bundles = [dict(k=k, txs=txs, searchers=s) for k, txs, s in bundles]
+    return {
         r["k"]: (r["revenue_usd"], r["gas_usd"], r["profit_usd"])
-        for r in bundle_pnl(
-            bundles, ledger, ["k"], F.col("txs"),
-            F.array_compact(F.array("eoa", "mev_contract", F.coalesce("mev_contract", "eoa"))),
-        ).collect()
+        for r in book_bundles(ledger, bundles, "txs", "searchers")
     }
-    assert rows == {
-        1: (Decimal(10), Decimal(3), Decimal(7)),
-        2: (None, Decimal(2), None),
-        4: (Decimal(14), Decimal(2), Decimal(12)),
+
+
+def test_book_bundles():
+    """A5 over one block's ledger rows: the searcher set's USD across the
+    bundle's txs, their gas, and profit = revenue − gas."""
+    d = Decimal
+    ledger = [
+        ("0xt1", d(1), {"0xs": d(10), "0xo": d(100)}),
+        ("0xt2", d(2), {"0xo": d(5)}),
+        ("0xt3", d(1), {"0xc": d(4)}),
+    ]
+    assert _book(ledger, [
+        (1, ["0xt1", "0xt2"], ["0xs"]),         # books 0xs's $10, gas of both
+        (2, ["0xt2"], ["0xs"]),                 # no delta of the searcher
+        (3, ["0xgone"], ["0xs"]),               # no tx in the ledger
+        (4, ["0xt1", "0xt3"], ["0xs", "0xc", "0xc"]),  # a set address listed twice
+        (5, ["0xt1", "0xgone"], ["0xs", None]),  # a tx missing from the ledger
+    ]) == {
+        1: (d(10), d(3), d(7)),
+        2: (None, d(2), None),
+        4: (d(14), d(2), d(12)),
+        5: (d(10), d(1), d(9)),
     }
+
+
+def test_book_bundles_decimal_arithmetic():
+    """The sums are exact beyond Python's default 28 digits, profit rounds
+    HALF_UP at the 17th place as Spark's decimal(38,17) difference does,
+    and a null gas is skipped by the sum (null when every tx's is)."""
+    d = Decimal
+    wide = d("10000000000.000000000000000001")  # 29 significant digits
+    ledger = [
+        ("0xw1", d(0), {"0xs": wide}),
+        ("0xw2", d(0), {"0xs": d("1e-18")}),
+        ("0xr", d("0.00000000000000001"), {"0xs": d("1.000000000000000015")}),
+        ("0xn", None, {"0xs": d(3)}),
+    ]
+    got = _book(ledger, [
+        (1, ["0xw1", "0xw2"], ["0xs"]),
+        (2, ["0xr"], ["0xs"]),
+        (3, ["0xn"], ["0xs"]),
+        (4, ["0xn", "0xr"], ["0xs"]),
+    ])
+    assert got[1] == (d("10000000000.000000000000000002"), d(0),
+                      d("10000000000.00000000000000000"))
+    # 1.000000000000000005 exactly: HALF_UP, not the half-even 1.0
+    assert got[2][2] == d("1.00000000000000001")
+    assert got[3] == (d(3), None, None)
+    assert got[4] == (d("4.000000000000000015"), d("0.00000000000000001"),
+                      d("4.00000000000000001"))
 
 
 def _env(spark, txs, tokens=("0xa", "0xb", "0xusd")):
@@ -240,8 +279,8 @@ def test_unbooked_bundles_dropped_except_atomic_arb(spark):
         (6, "0xl", "0xs", None), (7, "0xarb", "0xs", None),
     ])
     booked = build_ledger(actions, tx_info, dex_prices, block_info)
-    assert sandwich_bundles(actions, tx_info, booked).count() == 0
-    assert jit_bundles(actions, tx_info, booked).count() == 0
+    assert sandwich_bundles(actions, booked).count() == 0
+    assert jit_bundles(actions, booked).count() == 0
     assert liquidation_bundles(actions, booked).count() == 0
     searchers = spark.createDataFrame(
         [dict(address="0xs", kind="eoa", fund=None, mev_types=["atomic_arb"],
@@ -249,7 +288,7 @@ def test_unbooked_bundles_dropped_except_atomic_arb(spark):
         S.SEARCHER_INFO_SCHEMA,
     )
     arb = [r.asDict() for r in atomic_arb_bundles(
-        actions, tx_info, dex_prices, searchers, booked
+        actions, dex_prices, searchers, booked
     ).collect()]
     assert [(r["tx_hashes"], r["revenue_usd"], r["profit_usd"]) for r in arb] == [
         (["0xarb"], Decimal(0), Decimal(-1))

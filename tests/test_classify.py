@@ -195,7 +195,7 @@ def test_traces_to_inspector_end_to_end(spark, classified):
         "sibling_searchers array<string>",
     )
     ledger = build_ledger(classified, tx_info, dex_prices, binfo)
-    bundles = atomic_arb_bundles(classified, tx_info, dex_prices, searchers, ledger).collect()
+    bundles = atomic_arb_bundles(classified, dex_prices, searchers, ledger).collect()
     assert len(bundles) == 1
     b = bundles[0].asDict()
     assert b["mev_type"] == "atomic_arb:triangle"

@@ -47,7 +47,7 @@ def _one(df, **filters):
 
 
 def test_sandwich(tables, ledger):
-    b = sandwich_bundles(tables["actions"], tables["tx_info"], ledger)
+    b = sandwich_bundles(tables["actions"], ledger)
     row = _one(b, block_number=100)
     assert row["mev_type"] == "sandwich"
     assert row["tx_hashes"][0] == "0xf0" and row["tx_hashes"][-1] == "0xb0"
@@ -60,7 +60,7 @@ def test_sandwich(tables, ledger):
 
 def test_atomic_arb(tables, ledger):
     b = atomic_arb_bundles(
-        tables["actions"], tables["tx_info"], tables["dex_prices"],
+        tables["actions"], tables["dex_prices"],
         tables["searcher_info"], ledger,
     )
     rows = [r.asDict() for r in b.collect()]
@@ -74,7 +74,7 @@ def test_atomic_arb(tables, ledger):
 
 @pytest.mark.slow
 def test_jit(tables, ledger):
-    b = jit_bundles(tables["actions"], tables["tx_info"], ledger)
+    b = jit_bundles(tables["actions"], ledger)
     row = _one(b, block_number=102)
     assert row["tx_hashes"] == ["0xjf", "0xjv", "0xjb"]
     # +300 A − 2.8 B = 300 − 294 = $6; gas $2
@@ -106,7 +106,7 @@ def test_cex_dex_markout(tables):
 
 
 def test_sandwich_big_mac(tables, ledger):
-    b = sandwich_bundles(tables["actions"], tables["tx_info"], ledger)
+    b = sandwich_bundles(tables["actions"], ledger)
     row = _one(b, block_number=107)
     assert row["mev_type"] == "sandwich:big_mac"
     # tx_hashes in BLOCK order: the interleaved Big Mac keeps each victim
@@ -116,7 +116,7 @@ def test_sandwich_big_mac(tables, ledger):
 
 
 def test_sandwich_gap_partition(tables, ledger):
-    b = sandwich_bundles(tables["actions"], tables["tx_info"], ledger)
+    b = sandwich_bundles(tables["actions"], ledger)
     rows = sorted(
         (r.asDict() for r in b.filter("block_number = 108").collect()),
         key=lambda r: r["tx_hashes"][0],
@@ -198,13 +198,43 @@ def test_repeated_block_info_row_counts_each_block_once(tables):
     assert by_block[100]["builder_gas_usd"] == Decimal("4")
 
 
+def test_repeated_dex_prices_row_prices_each_delta_once(tables):
+    """`cli.py db insert` appends rows, so a price can repeat in
+    dex_prices. The ledger joins one price per (block, tx index, token), so
+    the block-100 sandwich books each delta once."""
+    prices = tables["dex_prices"]
+    repeated = prices.unionByName(prices.filter(F.col("block_number") == 100))
+    out = run_composer(dict(tables, dex_prices=repeated))
+    sandwich = _one(out["bundles"], block_number=100)
+    assert sandwich["mev_type"] == "sandwich"
+    assert sandwich["revenue_usd"] == Decimal("90")
+    assert sandwich["profit_usd"] == Decimal("88")
+
+
+@pytest.mark.parametrize("factor, revenue, profit", [("0.5", "90", "88"), ("2", "180", "178")])
+def test_differing_dex_prices_copies_keep_the_greatest_price(tables, factor, revenue, profit):
+    """A re-inserted price with another value keeps the greater of the two,
+    whichever copy the scan reads first: the block-100 sandwich books its
+    deltas at the fixture price when the copy is lower, at twice it when
+    the copy is higher."""
+    prices = tables["dex_prices"]
+    copies = prices.filter(F.col("block_number") == 100).withColumn(
+        "price_usd", (F.col("price_usd") * F.lit(Decimal(factor))).cast(prices.schema["price_usd"].dataType)
+    )
+    out = run_composer(dict(tables, dex_prices=copies.unionByName(prices)))
+    sandwich = _one(out["bundles"], block_number=100)
+    assert sandwich["mev_type"] == "sandwich"
+    assert sandwich["revenue_usd"] == Decimal(revenue)
+    assert sandwich["profit_usd"] == Decimal(profit)
+
+
 def test_run_composer_leaves_nothing_cached(spark):
-    """`run_composer` releases the ledger it caches for its inspectors, so
-    no later plan in the session reads a cache the call left behind."""
+    """`run_composer` caches nothing, so no later plan in the session reads
+    a cache the call left behind."""
     spark.catalog.clearCache()
     out = run_composer(load_fixtures(spark))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    # the header reads the gas rows, not the released ledger
+    # the header reads the gas rows
     assert out["mev_blocks"].filter("block_number = 100").first()["n_txs"] == 4
 
 
@@ -291,7 +321,7 @@ def test_atomic_arb_history_heuristics(spark):
     )
 
     rows = {r["tx_hashes"][0]: r.asDict() for r in atomic_arb_bundles(
-        actions, tx_info, dex_prices, searchers,
+        actions, dex_prices, searchers,
         build_ledger(actions, tx_info, dex_prices, block_info),
     ).collect()}
     assert set(rows) == {"0xh1", "0xh4"}
@@ -490,7 +520,7 @@ def test_sandwich_nonswap_victims_listed_and_gap_joined(spark):
         S.DEX_PRICES_SCHEMA,
     )
     out = sandwich_bundles(
-        actions, tx_info, build_ledger(actions, tx_info, dex_prices, block_info)
+        actions, build_ledger(actions, tx_info, dex_prices, block_info)
     )
     rows = [r.asDict() for r in out.collect()]
     assert len(rows) == 1
@@ -645,8 +675,7 @@ def test_jit_multi_pool_pair_single_bundle(spark):
     )
     tx_info, block_info, dex_prices = _mini_env(spark, ["0xf", "0xv1", "0xb"])
     rows = [r.asDict() for r in
-            jit_bundles(actions, tx_info,
-                        build_ledger(actions, tx_info, dex_prices, block_info)).collect()]
+            jit_bundles(actions, build_ledger(actions, tx_info, dex_prices, block_info)).collect()]
     assert len(rows) == 1
     # searcher deltas: -10-10 (mints) +12+12 (burns) = +4 A @ $1; gas 2x$1
     assert rows[0]["revenue_usd"] == Decimal("4")
@@ -768,8 +797,7 @@ def test_sandwich_dual_scan_catches_eoa_front_contract_back(spark):
                               (2, "0xb", "0xeoa", "0xctr")])
     binfo, prices = _binfo_prices(spark, [A, B])
     rows = [r.asDict() for r in
-            sandwich_bundles(actions, tx_info,
-                             build_ledger(actions, tx_info, prices, binfo)).collect()]
+            sandwich_bundles(actions, build_ledger(actions, tx_info, prices, binfo)).collect()]
     assert len(rows) == 1
     assert rows[0]["tx_hashes"] == ["0xf", "0xv", "0xb"]
     # A: -100 +105 = +5 at $1; B: +99 -99 = 0 → revenue $5, gas $2, profit $3
@@ -796,8 +824,7 @@ def test_sandwich_multi_eoa_contract_chain_not_fragmented(spark):
                               (2, "0xb", "0xeoaB", "0xctr")])
     binfo, prices = _binfo_prices(spark, [A, B])
     rows = [r.asDict() for r in
-            sandwich_bundles(actions, tx_info,
-                             build_ledger(actions, tx_info, prices, binfo)).collect()]
+            sandwich_bundles(actions, build_ledger(actions, tx_info, prices, binfo)).collect()]
     assert len(rows) == 1
     assert rows[0]["tx_hashes"] == ["0xf", "0xv", "0xb"]
     # attribution = first searcher tx's identity
@@ -828,4 +855,4 @@ def test_sandwich_requires_full_overlap_with_back(spark):
                               (2, "0xb", "0xeoa", None)])
     binfo, prices = _binfo_prices(spark, [A, B])
     ledger = build_ledger(actions, tx_info, prices, binfo)
-    assert sandwich_bundles(actions, tx_info, ledger).count() == 0
+    assert sandwich_bundles(actions, ledger).count() == 0

@@ -189,3 +189,49 @@ def test_semantic_dedup_broadcasts_centroids(spark):
     plan = _plan(spark, "dedup_semantic")
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
+
+
+def _exec_nodes(node):
+    """Every node of an executed plan, through AQE's query stages (a reused
+    exchange is a leaf: the exchange it points at is counted once)."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _exec_nodes(node.executedPlan())
+    elif name.endswith("QueryStageExec"):
+        yield from _exec_nodes(node.plan())
+    if name != "ReusedExchangeExec":
+        children = node.children()
+        for i in range(children.size()):
+            yield from _exec_nodes(children.apply(i))
+
+
+def test_block_walks_share_one_ledger_shuffle(spark):
+    """The sandwich, jit and atomic_arb walks cogroup the whole ledger on
+    block_number, so the union of the three runs ONE ledger shuffle and
+    reuses it twice. A per-walk projection of the ledger, or its gas dedupe
+    spelled `dropDuplicates`, plans three shuffles that are not reused."""
+    from functools import reduce
+
+    from brontes_spark.inspectors import atomic_arb_bundles, jit_bundles, sandwich_bundles
+    from brontes_spark.inspectors.accounting import build_ledger
+    from brontes_spark.sources.fixtures import load_fixtures
+
+    t = load_fixtures(spark)
+    ledger = build_ledger(t["actions"], t["tx_info"], t["dex_prices"], t["block_info"])
+    walks = [
+        sandwich_bundles(t["actions"], ledger),
+        jit_bundles(t["actions"], ledger),
+        atomic_arb_bundles(t["actions"], t["dex_prices"], t["searcher_info"], ledger),
+    ]
+    union = reduce(lambda a, b: a.unionByName(b), walks)
+    union.collect()
+    ledger_exchanges = {"ShuffleExchangeExec": 0, "ReusedExchangeExec": 0}
+    for node in _exec_nodes(union._jdf.queryExecution().executedPlan()):
+        name = node.getClass().getSimpleName()
+        output = node.output()
+        cols = {output.apply(i).name() for i in range(output.size())}
+        if name in ledger_exchanges and "deltas" in cols:
+            assert "block_number" in node.outputPartitioning().toString()
+            ledger_exchanges[name] += 1
+    assert ledger_exchanges == {"ShuffleExchangeExec": 1, "ReusedExchangeExec": 2}
